@@ -314,7 +314,11 @@ def _band_fold(band_sum, gap_seconds: int, band_us: int, fold_cache_key=None):
             .limit(BANDS_DRIVER_CAP + 1)
             .collect()
         )
-        if len(head) <= BANDS_DRIVER_CAP:
+        # a NULL-ts event yields a NULL band and NULL starts; the integer
+        # fold below cannot order them, the distributed fold can
+        if len(head) <= BANDS_DRIVER_CAP and not any(
+            None in (r["__band"], r["__f_start"], r["__l_start"]) for r in head
+        ):
             rows = [tuple(r) for r in head]
             if fold_cache_key:
                 _BAND_ROWS_CACHE[fold_cache_key] = rows

@@ -252,56 +252,60 @@ class Pipeline:
         # ``spark.read.parquet`` listing+footer reads and N catalog writes
         # (driver-side, ~50-150 ms each); within one run a materialized
         # node is written exactly once, before any consumer builds, so
-        # one registration per dataset is sound.
-        self._run_view_memo: set[str] = set()
-        os.makedirs(self.event_log_path, exist_ok=True)
-        run_id = int(time.time() * 1000)
-        events_file = f"{self.event_log_path}/run-{run_id}.jsonl"
-        results: dict[str, dict] = {}
-        with open(events_file, "w") as ev:
-            for spec in self._toposort():
-                self._emit(ev, "flow_definition", spec.name, {
-                    "kind": spec.kind,
-                    "comment": spec.comment,
-                    "upstreams": spec.upstreams(),
-                })
-                if spec.kind == "view":
-                    df = self._build_batch(spark, spec)
-                    df.createOrReplaceTempView(self._view_name(spec.name))
-                    results[spec.name] = {"kind": "view"}
-                    continue
-                if spec.kind in ("table", "temp_table"):
-                    df = self._build_batch(spark, spec)
-                    kept, finish = self._prepare_node_write(df, spec)
-                    try:
-                        if spec.kind == "table":
-                            vt = open_table(spark, self._table_dir(spec.name))
-                            vt.write(kept, mode="overwrite")
-                        else:
-                            # temp tables skip the commit log entirely:
-                            # plain parquet overwrite, no version history
-                            # (DLT TEMPORARY LIVE TABLE semantics — the
-                            # bulk of a deep DAG's nodes, so per-node
-                            # commit overhead stays off the hot path)
-                            self._write_temp(kept, spec.name)
-                    except Exception as ex:  # noqa: BLE001
-                        _translate_fail_guard(spec.name, ex)
-                    # quarantine side table AFTER the guarded main write:
-                    # if a fail-mode expectation aborts the node, the
-                    # previous run's quarantine stays intact instead of
-                    # being overwritten with the aborted run's rows
-                    self._write_quarantine(df, spec)
-                    n, metrics = finish()
-                    results[spec.name] = {"rows": n, "expectations": metrics}
+        # one registration per dataset is sound.  Cleared when the run
+        # ends, so a later direct _substitute call registers afresh.
+        self._run_view_memo: set[str] | None = set()
+        try:
+            os.makedirs(self.event_log_path, exist_ok=True)
+            run_id = int(time.time() * 1000)
+            events_file = f"{self.event_log_path}/run-{run_id}.jsonl"
+            results: dict[str, dict] = {}
+            with open(events_file, "w") as ev:
+                for spec in self._toposort():
+                    self._emit(ev, "flow_definition", spec.name, {
+                        "kind": spec.kind,
+                        "comment": spec.comment,
+                        "upstreams": spec.upstreams(),
+                    })
+                    if spec.kind == "view":
+                        df = self._build_batch(spark, spec)
+                        df.createOrReplaceTempView(self._view_name(spec.name))
+                        results[spec.name] = {"kind": "view"}
+                        continue
+                    if spec.kind in ("table", "temp_table"):
+                        df = self._build_batch(spark, spec)
+                        kept, finish = self._prepare_node_write(df, spec)
+                        try:
+                            if spec.kind == "table":
+                                vt = open_table(spark, self._table_dir(spec.name))
+                                vt.write(kept, mode="overwrite")
+                            else:
+                                # temp tables skip the commit log entirely:
+                                # plain parquet overwrite, no version history
+                                # (DLT TEMPORARY LIVE TABLE semantics — the
+                                # bulk of a deep DAG's nodes, so per-node
+                                # commit overhead stays off the hot path)
+                                self._write_temp(kept, spec.name)
+                        except Exception as ex:  # noqa: BLE001
+                            _translate_fail_guard(spec.name, ex)
+                        # quarantine side table AFTER the guarded main write:
+                        # if a fail-mode expectation aborts the node, the
+                        # previous run's quarantine stays intact instead of
+                        # being overwritten with the aborted run's rows
+                        self._write_quarantine(df, spec)
+                        n, metrics = finish()
+                        results[spec.name] = {"rows": n, "expectations": metrics}
+                        self._emit(ev, "flow_progress", spec.name,
+                                   _flow_progress_details(n, metrics))
+                        continue
+                    # incremental_table
+                    n, metrics = self._run_incremental(spark, spec)
+                    results[spec.name] = {"rows_appended": n, "expectations": metrics}
                     self._emit(ev, "flow_progress", spec.name,
                                _flow_progress_details(n, metrics))
-                    continue
-                # incremental_table
-                n, metrics = self._run_incremental(spark, spec)
-                results[spec.name] = {"rows_appended": n, "expectations": metrics}
-                self._emit(ev, "flow_progress", spec.name,
-                           _flow_progress_details(n, metrics))
-        return results
+            return results
+        finally:
+            self._run_view_memo = None
 
     # --------------------------------------------------------- builders
 

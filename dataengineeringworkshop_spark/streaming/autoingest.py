@@ -20,7 +20,9 @@ OSS mapping implemented here:
 - **Schema inference + hints** (§1.2): infer once from existing files
   (batch sample), override hinted fields, persist the resolved schema JSON
   next to the checkpoint (``_dew_schema.json``) so later runs reuse it
-  without re-inference — Auto Loader's schemaLocation behavior.
+  without re-inference — Auto Loader's schemaLocation behavior.  The
+  sink's own schema is persisted too (``_dew_sink_schema.json``), and
+  batch reads of the target scan with it.
 - **Rescued data** (ST3): every ingested file line is ALSO parsed as loose
   strings; fields that fail the typed parse but exist in the raw record
   land in a ``_rescued_data`` JSON-string column (field-level rescue via
@@ -44,7 +46,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 from dataengineeringworkshop_spark.session import ensure_session_defaults
@@ -78,7 +80,17 @@ def merge_schema_hints(inferred: StructType, hints_ddl: str | None) -> StructTyp
 
 class AutoIngest:
     """Incremental JSON/CSV directory → table, with schema tracking and
-    rescued data."""
+    rescued data.
+
+    Two schemas live next to the checkpoint: ``_dew_schema.json`` (the
+    resolved SOURCE schema, inferred once + hints) and
+    ``_dew_sink_schema.json`` (the exact schema the sink writes:
+    the typed fields plus ``_rescued_data`` / ``file_path`` /
+    ``inserted_at`` as this ingest's flags produce them), recorded when
+    a run starts.  :meth:`read_target` scans the sink with the latter,
+    so a batch read of bronze never re-infers over a directory that
+    grows every cycle; checkpoints without the record fall back to
+    inference."""
 
     def __init__(
         self,
@@ -119,6 +131,31 @@ class AutoIngest:
         with open(self._schema_file, "w") as f:
             json.dump(resolved.jsonValue(), f)
         return resolved
+
+    @property
+    def _sink_schema_file(self) -> str:
+        return os.path.join(self.checkpoint_dir, "_dew_sink_schema.json")
+
+    def _sink_schema(self) -> StructType | None:
+        if not os.path.exists(self._sink_schema_file):
+            return None
+        with open(self._sink_schema_file) as f:
+            return StructType.fromJson(json.load(f))
+
+    def _persist_sink_schema(self, schema: StructType) -> None:
+        """Record the schema the sink writes.  A later run whose sink
+        gains columns (different flags on the same checkpoint) widens
+        the record; none is ever dropped, since earlier files hold it."""
+        known = self._sink_schema()
+        if known is not None:
+            names = {f.name for f in known.fields}
+            added = [f for f in schema.fields if f.name not in names]
+            if not added:
+                return
+            schema = StructType(known.fields + added)
+        os.makedirs(self.checkpoint_dir, exist_ok=True)
+        with open(self._sink_schema_file, "w") as f:
+            json.dump(schema.jsonValue(), f)
 
     # ------------------------------------------------------------ plan
 
@@ -211,29 +248,31 @@ class AutoIngest:
 
     # ------------------------------------------------------------- run
 
+    def _writer(self, spark: SparkSession) -> DataStreamWriter:
+        """The parquet sink writer, after recording the schema it writes."""
+        stream = self._stream(spark)
+        self._persist_sink_schema(stream.schema)
+        return (
+            stream.writeStream.format("parquet")
+            .option("path", self.target_dir)
+            .option("checkpointLocation", self.checkpoint_dir)
+        )
+
     def run_once(self, spark: SparkSession) -> None:
         """Process all currently-unseen files, then stop (ST6 triggered
         mode; deterministic for tests/CI)."""
-        q = (
-            self._stream(spark)
-            .writeStream.format("parquet")
-            .option("path", self.target_dir)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._writer(spark).trigger(availableNow=True).start().awaitTermination()
 
     def run_continuous(self, spark: SparkSession) -> StreamingQuery:
         """Long-lived micro-batch loop (ST4: caller polls .isActive /
         .stop(), N2:479-482, 609)."""
-        return (
-            self._stream(spark)
-            .writeStream.format("parquet")
-            .option("path", self.target_dir)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
-        )
+        return self._writer(spark).start()
 
     def read_target(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("mergeSchema", "true").parquet(self.target_dir)
+        """Batch read of the sink, scanned with the persisted sink
+        schema (no inference job); inference only for a checkpoint that
+        predates the record."""
+        schema = self._sink_schema()
+        if schema is None:
+            return spark.read.option("mergeSchema", "true").parquet(self.target_dir)
+        return spark.read.schema(schema).parquet(self.target_dir)

@@ -10,8 +10,10 @@ re-implemented here as a minimal copy-on-write table format:
 
 Each commit records the COMPLETE list of active data directories (snapshot
 isolation: readers of version N never see later writes) plus operation
-metadata (DESCRIBE HISTORY parity) and the schema DDL (ADD COLUMN reads
-old files through the evolved schema with nulls).
+metadata (DESCRIBE HISTORY parity) and the schema DDL.  Reads use the
+committed schema as the scan schema, never re-inferring it from the
+files: planning a read starts no Spark job, and files written before an
+ADD COLUMN read NULL for the new column.
 
 Scale posture: all data movement is Spark jobs — reads are parquet scans
 of the active units (partition pruning/pushdown intact), UPDATE / MERGE /
@@ -342,9 +344,10 @@ class VersionedTable:
         return F.regexp_replace(F.col("_metadata.file_path"), "^file:", "")
 
     def _evolved(self, paths: list[str], c: Commit, lineage: bool = False) -> DataFrame:
-        """Scan ``paths`` (dirs and/or files) evolved to the commit's
-        schema: missing columns (pre-ADD COLUMN files) surface as nulls,
-        column order is the committed order.
+        """Scan ``paths`` (dirs and/or files) with the commit's schema as
+        the scan schema: no schema inference (planning starts no Spark
+        job), columns a file lacks (pre-ADD COLUMN, pre-append-evolution
+        files) read as NULL, and column order is the committed order.
 
         If the commit carries deletion vectors, soft-deleted (file, pos)
         rows are removed with an anti-join against the DV sidecar —
@@ -365,7 +368,10 @@ class VersionedTable:
                     "__dew_ref", F.lit(None).cast("string")
                 ).withColumn("__dew_pos", F.lit(None).cast("long"))
             return empty
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # the committed schema IS the scan schema: planning launches no
+        # footer-merging job, and a file written before an ADD COLUMN or
+        # an append-evolved schema reads NULL for the columns it lacks
+        df = self.spark.read.schema(committed).parquet(*paths)
         dv_paths = [self._abs(d) for d in (c.dv_dirs or [])]
         if dv_paths or lineage:
             df = df.withColumn("__dew_ref", self._scan_ref()).withColumn(
@@ -381,9 +387,6 @@ class VersionedTable:
                 & (F.col("__dew_pos") == F.col("__dv_pos")),
                 "left_anti",
             )
-        for field in committed.fields:
-            if field.name not in df.columns:
-                df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
         cols = [f.name for f in committed.fields]
         if lineage:
             cols += ["__dew_ref", "__dew_pos"]
@@ -558,9 +561,12 @@ class VersionedTable:
             touched, untouched = self._active_refs(prev), []
             cur = self.read()
         cond = F.expr(condition) if condition else F.lit(True)
+        # SET values are cast to the column's committed type: data files
+        # always hold the types the log records (reads scan with them)
         out = cur.select(
             *[
-                (F.when(cond, F.expr(expr)).otherwise(F.col(c)).alias(c)
+                (F.when(cond, F.expr(expr)).otherwise(F.col(c))
+                 .cast(cur.schema[c].dataType).alias(c)
                  if c in set_exprs and (expr := set_exprs[c]) is not None
                  else F.col(c))
                 for c in cur.columns
@@ -630,7 +636,7 @@ class VersionedTable:
             ]
             updated = staged.select(
                 *[
-                    (F.expr(expr).alias(c)
+                    (F.expr(expr).cast(staged.schema[c].dataType).alias(c)
                      if c in set_exprs and (expr := set_exprs[c]) is not None
                      else F.col(c))
                     for c in data_cols
@@ -845,41 +851,10 @@ class VersionedTable:
         identical to the copy-on-write merge (same full-sync grammar);
         only the storage strategy differs.
 
-        The SOURCE is materialized once to a staging artifact before
-        the join (Delta's own merge source-materialization): the plan
-        below evaluates it for the DV write, the append write and the
-        insert anti-join, and a non-deterministic source (rand(),
-        LIMIT without ORDER BY, a changing view) would otherwise
-        soft-delete one row set and append another (ADVICE r12).
-        Clause CONDITIONS must still be deterministic — same
-        restriction Delta documents for merge."""
-        import shutil
-
-        src_stage = f"v{prev.version + 1:08d}-stage-{uuid.uuid4().hex[:8]}"
-        source.write.mode("overwrite").parquet(f"{self.path}/{src_stage}")
-        source = self.spark.read.parquet(f"{self.path}/{src_stage}")
-        try:
-            self._merge_mor_staged(
-                source, on, update_condition, insert, update, nmbs_action,
-                nmbs_condition, nmbs_set, prev, cols, new_fields,
-            )
-        finally:
-            shutil.rmtree(f"{self.path}/{src_stage}", ignore_errors=True)
-
-    def _merge_mor_staged(
-        self,
-        source: DataFrame,
-        on: str,
-        update_condition: str | None,
-        insert: bool,
-        update: bool,
-        nmbs_action: str | None,
-        nmbs_condition: str | None,
-        nmbs_set: dict[str, str] | None,
-        prev: Commit,
-        cols: list[str],
-        new_fields: list,
-    ) -> None:
+        ``source`` arrives materialized (:meth:`merge`): the plan below
+        reads it for the DV write, the append write and the insert
+        anti-join, and a non-deterministic source evaluated three times
+        would soft-delete one row set and append another (ADVICE r12)."""
         t = self._evolved(
             [self._abs(d) for d in prev.data_dirs], prev, lineage=True
         )
@@ -947,6 +922,9 @@ class VersionedTable:
         rel = None
         n_app = 0
         if appends is not None:
+            # appended versions take the committed column types
+            types = {**{f.name: f.dataType for f in t.schema.fields}, **new_types}
+            appends = appends.select(*[F.col(c).cast(types[c]) for c in all_cols])
             rel = self._new_data_dir(prev.version + 1)
             appends.write.mode("overwrite").parquet(f"{self.path}/{rel}")
             n_app = self.spark.read.parquet(f"{self.path}/{rel}").count()
@@ -1035,8 +1013,17 @@ class VersionedTable:
         ``mode``: None resolves from ``delta.enableDeletionVectors``
         (Delta's opt-in); ``"mor"`` runs the merge as deletion-vector +
         append (see :meth:`_merge_mor`), ``"cow"`` as the pruned
-        copy-on-write below.  Semantics are identical either way.
-        Expressed as one full-outer-join plan:
+        copy-on-write of :meth:`_merge_cow`.  Semantics are identical
+        either way.
+
+        The source is evaluated ONCE: whenever the plan reads it more
+        than once (any conjunctive-equality ON, and every merge-on-read
+        merge) it is materialized with ``localCheckpoint`` and released
+        after the commit.  For the conjunctive-equality form one 1-row
+        probe aggregate over it then yields the duplicate-key check and
+        the single key's range; the target join that decides whether a
+        duplicate key matches a target row runs only when a key repeats.
+        The copy-on-write rewrite is one full-outer-join plan:
 
           matched & cond       -> source row      (update *)
           matched & !cond      -> target row      (no-op, row-hash guard)
@@ -1095,70 +1082,127 @@ class VersionedTable:
                         )
                 else:
                     new_fields.append(f)
-        # Delta raises when several source rows match one target row; a
-        # full-outer join would silently DUPLICATE the target instead.
-        # Checkable only for the pure conjunctive-equality ON form; the
-        # guard fires only when the duplicate key actually MATCHES a
-        # target row (duplicate not-matched keys legally insert twice).
+        resolved_mode = self._dml_mode(mode)
+        if resolved_mode not in ("cow", "mor"):
+            raise ValueError(
+                f"merge mode must be 'cow' or 'mor', got {resolved_mode!r}"
+            )
         terms = [t.strip() for t in re.split(r"(?i)\s+AND\s+", on.strip())]
         pair_re = re.compile(r"^(?:t\.(\w+)\s*=\s*s\.(\w+)|s\.(\w+)\s*=\s*t\.(\w+))$")
         matches = [pair_re.match(t) for t in terms]
-        conj_eq = bool(matches) and all(matches)
-        if conj_eq:
-            pairs = [
-                ((m.group(1) or m.group(4)), (m.group(2) or m.group(3)))
-                for m in matches
-            ]
-            t_keys = [p[0] for p in pairs]
-            s_keys = [p[1] for p in pairs]
+        pairs = (
+            [((m.group(1) or m.group(4)), (m.group(2) or m.group(3))) for m in matches]
+            if matches and all(matches)
+            else None
+        )
+        # Delta's merge source materialization: a plan that reads the
+        # source more than once (the probe aggregate, the probe semi-join
+        # and the rewrite; or the DV write, the append and the insert
+        # anti-join) evaluates it ONCE into executor storage, so it pays
+        # the source's scans, filters and windows once and a
+        # non-deterministic source (rand(), LIMIT without ORDER BY, a
+        # changing view) cannot match one row set in the probe and
+        # another in the rewrite.  Clause CONDITIONS must still be
+        # deterministic, the same restriction Delta documents.
+        materialize = pairs is not None or resolved_mode == "mor"
+        if materialize:
+            source = source.localCheckpoint()  # eager, MEMORY_AND_DISK
+        try:
+            key_range = (
+                self._merge_source_probe(source, cur, pairs) if pairs else None
+            )
+            if resolved_mode == "mor":
+                self._merge_mor(
+                    source, on, update_condition, insert, update,
+                    unmatched_by_source_action, unmatched_by_source_condition,
+                    unmatched_by_source_set, prev, cols, new_fields,
+                )
+            else:
+                self._merge_cow(
+                    source, cur, on, update_condition, insert, update,
+                    unmatched_by_source_action, unmatched_by_source_condition,
+                    unmatched_by_source_set, prev, cols, new_fields,
+                    pairs, key_range,
+                )
+        finally:
+            if materialize:
+                _release_checkpoint(source)
+
+    def _merge_source_probe(
+        self, source: DataFrame, cur: DataFrame, pairs: list[tuple[str, str]]
+    ) -> tuple | None:
+        """One 1-row aggregate over the materialized MERGE source: the
+        largest per-key row count and, for a single key, the key's
+        (min, max) — returned for the COW probe's file skipping.
+
+        Delta raises when several source rows match one target row; a
+        full-outer join would silently DUPLICATE the target instead.
+        Checkable only for the pure conjunctive-equality ON form.  The
+        guard fires only when a duplicate key actually MATCHES a target
+        row (duplicate not-matched keys legally insert twice), so the
+        join against the target's keys runs only when some key repeats."""
+        s_keys = [sc for _, sc in pairs]
+        aggs = [F.max("__dew_n")]
+        if len(pairs) == 1:
+            aggs += [F.min(s_keys[0]), F.max(s_keys[0])]
+        row = (
+            source.groupBy(*s_keys)
+            .agg(F.count(F.lit(1)).alias("__dew_n"))
+            .agg(*aggs)
+            .collect()[0]
+        )
+        if (row[0] or 0) > 1:
             dup_keys = source.groupBy(*s_keys).count().filter(F.col("count") > 1)
             tgt_keys = cur.select(*[F.col(tc).alias(sc) for tc, sc in pairs]).distinct()
-            dup_matched = dup_keys.join(tgt_keys, s_keys).limit(1).count()
-            if dup_matched:
+            if dup_keys.join(tgt_keys, s_keys).limit(1).count():
                 raise ValueError(
                     f"MERGE source has multiple rows per join key {s_keys} that "
                     "match one target row — Delta semantics forbid this"
                 )
-        resolved_mode = self._dml_mode(mode)
-        if resolved_mode == "mor":
-            self._merge_mor(
-                source, on, update_condition, insert, update,
-                unmatched_by_source_action, unmatched_by_source_condition,
-                unmatched_by_source_set, prev, cols, new_fields,
-            )
-            return
-        if resolved_mode != "cow":
-            raise ValueError(
-                f"merge mode must be 'cow' or 'mor', got {resolved_mode!r}"
-            )
+        return (row[1], row[2]) if len(pairs) == 1 else None
+
+    def _merge_cow(
+        self,
+        source: DataFrame,
+        cur: DataFrame,
+        on: str,
+        update_condition: str | None,
+        insert: bool,
+        update: bool,
+        unmatched_by_source_action: str | None,
+        unmatched_by_source_condition: str | None,
+        unmatched_by_source_set: dict[str, str] | None,
+        prev: Commit,
+        cols: list[str],
+        new_fields: list,
+        pairs: list[tuple[str, str]] | None,
+        key_range: tuple | None,
+    ) -> None:
         # File-pruned copy-on-write (Delta's rewrite-set pruning): when
         # no BY SOURCE clause is present, only files containing a
         # MATCHED target row can change — probe them with a left-semi
-        # join on the ON condition (second source pass, like Delta's own
-        # find-touched-files scan) and carry every other file forward by
-        # reference.  A BY SOURCE clause can touch any target row, so it
-        # keeps the full rewrite; non-conjunctive-equality ON forms skip
-        # pruning to keep the probe an equi-join.
+        # join on the ON condition (like Delta's own find-touched-files
+        # scan) and carry every other file forward by reference.  A BY
+        # SOURCE clause can touch any target row, so it keeps the full
+        # rewrite; non-conjunctive-equality ON forms skip pruning to
+        # keep the probe an equi-join.
         untouched: list[str] = []
         touched_list: list[str] | None = None
-        if unmatched_by_source_action is None and conj_eq:
+        if unmatched_by_source_action is None and pairs is not None:
             # Delta's join-key file skipping: bound the probe's target
-            # scan by the SOURCE's key range (one 1-row aggregate) so
-            # commit-log min/max stats drop non-overlapping files before
-            # the semi-join reads a row.  Numeric single-key form only —
-            # the conservative fallback is the full candidate set.
+            # scan by the SOURCE's key range (from the probe aggregate)
+            # so commit-log min/max stats drop non-overlapping files
+            # before the semi-join reads a row.  Numeric single-key form
+            # only — the conservative fallback is the full candidate set.
             probe_where = None
-            if len(pairs) == 1:
-                t_key, s_key = pairs[0]
-                row = source.selectExpr(
-                    f"min({s_key})", f"max({s_key})"
-                ).collect()[0]
+            if key_range is not None:
+                lo, hi = key_range
                 if (
-                    row[0] is not None
-                    and isinstance(row[0], (int, float))
-                    and not isinstance(row[0], bool)
+                    lo is not None
+                    and isinstance(lo, (int, float))
+                    and not isinstance(lo, bool)
                 ):
-                    probe_where = f"{t_key} >= {row[0]} AND {t_key} <= {row[1]}"
+                    probe_where = f"{pairs[0][0]} >= {lo} AND {pairs[0][0]} <= {hi}"
             all_paths = self.scan_files(prev.version, probe_where)
             probe = (
                 self._evolved(all_paths, prev, lineage=True)
@@ -1211,6 +1255,8 @@ class VersionedTable:
                 f"NOT MATCHED BY SOURCE SET references unknown columns {sorted(unknown)}"
             )
         new_types = {f.name: f.dataType for f in new_fields}
+        # output columns take the committed types (reads scan with them)
+        types = {**{f.name: f.dataType for f in cur.schema.fields}, **new_types}
 
         def _out_col(c: str):
             if c in new_types:
@@ -1222,7 +1268,7 @@ class VersionedTable:
                 base = F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
             if unmatched_by_source_action == "update" and c in upd_set:
                 base = F.when(tgt_only & nmbs_cond, upd_set[c]).otherwise(base)
-            return base.alias(c)
+            return base.cast(types[c]).alias(c)
 
         keep = t_here | (s_here & F.lit(insert))
         if unmatched_by_source_action == "delete":
@@ -1740,6 +1786,19 @@ def _stats_exclude(file_stats: dict, bounds: list[tuple[str, str, object]]) -> b
         if op == ">" and hi == val:
             return True
     return False
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the executor blocks behind a ``localCheckpoint`` DataFrame
+    now, rather than when the JVM garbage-collects its RDD."""
+    from py4j.protocol import Py4JError
+
+    try:
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except (AttributeError, Py4JError):
+        pass  # a Spark Connect DataFrame has no JVM plan to release
 
 
 def _ddl_of(simple_string: str) -> str:

@@ -459,3 +459,22 @@ AS SELECT * FROM json.`{tmp_path / "d.json"}`
     p.run(spark)
     assert p.read_dataset(spark, "gated").count() == 7
     assert p.read_quarantine(spark, "gated").count() == 3
+
+
+def test_view_memo_is_cleared_after_run(spark, tmp_path):
+    """The per-run upstream-view memo ends with the run: a direct
+    ``_substitute`` afterwards re-registers the view, so it sees the
+    table's current snapshot rather than the file listing of the run."""
+    from dataengineeringworkshop_spark.pipeline.runner import Pipeline
+    from dataengineeringworkshop_spark.tables.backend import open_table
+
+    p = Pipeline("memo", str(tmp_path / "pl"))
+    p.table("base", fn=lambda s, _r: s.range(10).withColumnRenamed("id", "v"))
+    p.table("gold", "SELECT CAST(SUM(v) AS BIGINT) AS total FROM live.base")
+    p.run(spark)
+    assert p._run_view_memo is None
+    open_table(spark, p._table_dir("base")).write(
+        spark.range(3).withColumnRenamed("id", "v")
+    )
+    sql = p._substitute(spark, "SELECT * FROM live.base", streaming=False)
+    assert spark.sql(sql).count() == 3

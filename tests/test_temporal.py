@@ -127,3 +127,36 @@ def test_session_artifact_rebuilds_when_source_files_change(spark, tmp_path):
         band_seconds=3600, artifact_key=f"test:gsi:{src}",
     ).agg(F.max("end_us").alias("m")).first()
     assert row.m == (1_700_000_000 + 49 * 10) * 1_000_000
+
+
+def test_gsi_band_fold_tolerates_null_ts(spark):
+    """An event with a NULL ts gives a NULL band and NULL band starts;
+    the collected-summary fold falls back to the distributed fold instead of
+    raising TypeError, and both paths agree."""
+    import dataengineeringworkshop_spark.operators.temporal as temporal
+
+    df = spark.createDataFrame(
+        [(1, 0), (2, 30), (3, 5000), (4, None), (5, 9000)],
+        "event_id long, secs long",
+    ).withColumn("ts", F.timestamp_seconds("secs"))
+
+    def run():
+        return sorted(
+            map(
+                tuple,
+                temporal.global_session_intervals(
+                    df, ts="ts", gap_seconds=60, order_tiebreak="event_id",
+                    band_seconds=3600,
+                ).collect(),
+            ),
+            key=repr,
+        )
+
+    fast = run()
+    old_cap = temporal.BANDS_DRIVER_CAP
+    temporal.BANDS_DRIVER_CAP = 0
+    try:
+        slow = run()
+    finally:
+        temporal.BANDS_DRIVER_CAP = old_cap
+    assert fast == slow
