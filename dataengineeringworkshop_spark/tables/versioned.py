@@ -15,16 +15,19 @@ committed schema as the scan schema, never re-inferring it from the
 files: planning a read starts no Spark job, and files written before an
 ADD COLUMN read NULL for the new column.
 
-Scale posture: all data movement is Spark jobs — reads are parquet scans
-of the active units (partition pruning/pushdown intact), UPDATE / MERGE /
-DELETE are FILE-PRUNED copy-on-write (round 11): a probe pass finds the
-files that actually contain affected rows (itself pruned by commit-log
-min/max stats and parquet pushdown), ONLY those files are rewritten, and
-untouched files are carried forward by reference in the commit — the
-same rewrite-set pruning real Delta does, so a selective UPDATE on a
-100 TB table rewrites megabytes, not the table.  A commit's active set
-may therefore mix directory refs and individual file refs.  The probe's
-one driver-side ``collect`` is the DISTINCT FILE LIST (metadata-scale,
+Scale posture: all data movement is Spark jobs.  Reads are parquet
+scans of the active units (partition pruning/pushdown intact).  UPDATE,
+DELETE and MERGE run one plan, as Delta does: a probe scan finds the
+rows and files a DML affects (itself pruned by commit-log min/max stats
+and parquet pushdown), one write produces the new data, and one commit
+publishes it.  Copy-on-write rewrites ONLY the touched files and carries
+every other file forward by reference, so a selective UPDATE on a
+100 TB table rewrites megabytes, not the table; a commit's active set
+may therefore mix directory refs and individual file refs.
+Merge-on-read, the deletion-vector variant of the same plan, rewrites
+no file: it records the (file, position) of every replaced row in a
+small sidecar and appends the new row versions.  The probe's one
+driver-side ``collect`` is the DISTINCT FILE LIST (metadata-scale,
 bounded by file count — exactly what Delta's driver does when planning a
 rewrite), never row data.  The transaction log is tiny JSON driver-side
 metadata, like Delta's _delta_log.
@@ -180,8 +183,8 @@ class VersionedTable:
         os.rename(tmp, self._log_path(version))  # atomic publish
         return c
 
-    def _new_data_dir(self, version: int) -> str:
-        return f"v{version:08d}-{uuid.uuid4().hex[:8]}"
+    def _new_data_dir(self, version: int, dv: bool = False) -> str:
+        return f"v{version:08d}-{'dv-' if dv else ''}{uuid.uuid4().hex[:8]}"
 
     # ---------------------------------------------------------------- write
 
@@ -392,7 +395,7 @@ class VersionedTable:
             cols += ["__dew_ref", "__dew_pos"]
         return df.select(*cols)
 
-    # -------------------------------------------------- file-pruned COW
+    # ------------------------------------------------------ DML planning
 
     def _active_refs(self, c: Commit) -> list[str]:
         """The commit's active data set exploded to individual FILE refs
@@ -412,53 +415,50 @@ class VersionedTable:
         return refs
 
     def _refs_of_probe(self, probe: DataFrame) -> set[str]:
-        """DISTINCT file refs containing probe rows.  ``probe`` must
-        carry ``__dew_file`` = input_file_name().  The collect here is
-        the distinct FILE LIST — metadata-scale (bounded by file count,
-        like Delta's driver-side rewrite planning), never row data."""
+        """DISTINCT file refs of a lineage probe's ``__dew_ref`` column.
+        The collect here is the distinct FILE LIST — metadata-scale
+        (bounded by file count, like Delta's driver-side rewrite
+        planning), never row data."""
         from urllib.parse import unquote, urlparse
 
         root = self.path + "/"
         out: set[str] = set()
-        for (name,) in probe.select("__dew_file").distinct().collect():
+        for (name,) in probe.select("__dew_ref").distinct().collect():
             p = unquote(urlparse(name).path)
             out.add(p[len(root):] if p.startswith(root) else p)
         return out
 
-    def _touched_untouched(
-        self, condition: str, c: Commit
+    def _hits(self, c: Commit, condition: str | None) -> DataFrame | None:
+        """The rows of snapshot ``c`` where ``condition`` is TRUE (every
+        row for ``None``), with their lineage — the probe of UPDATE and
+        DELETE.  The scan is pruned by commit-log min/max stats and
+        parquet pushdown before any row is read, and it is DV-applied,
+        so a condition matching only soft-deleted rows hits nothing.
+        ``None`` when the stats exclude every file."""
+        paths = self.scan_files(c.version, condition)
+        if not paths:
+            return None
+        return self._evolved(paths, c, lineage=True).filter(
+            F.expr(condition or "TRUE").eqNullSafe(F.lit(True))
+        )
+
+    def _split(
+        self, c: Commit, probe: DataFrame | None
     ) -> tuple[list[str], list[str]]:
-        """Split the active file set into (touched, untouched) for a
-        row-level predicate: touched files contain ≥1 row where the
-        condition is TRUE.  The probe scan is pruned by commit-log
-        min/max stats AND parquet predicate pushdown before any row is
-        read, so a stats-excluded file costs nothing."""
-        candidates = self.scan_files(c.version, condition)
-        touched: set[str] = set()
-        if candidates:
-            # lineage=True: file identity from _metadata (survives the
-            # DV anti-join; input_file_name() is unreliable post-join),
-            # and the scan is DV-applied so a condition matching only
-            # soft-deleted rows does not mark their file touched
-            probe = (
-                self._evolved(candidates, c, lineage=True)
-                .withColumnRenamed("__dew_ref", "__dew_file")
-                .filter(F.expr(condition).eqNullSafe(F.lit(True)))
-            )
-            touched = self._refs_of_probe(probe)
-        all_refs = self._active_refs(c)
-        # stats-pruned candidates are untouched by construction
-        untouched = [r for r in all_refs if r not in touched]
-        touched_ordered = [r for r in all_refs if r in touched]
-        if set(touched_ordered) != touched:
-            # data-integrity invariant — a mismatch means matched rows
-            # would be silently dropped from the rewrite set, so this
-            # must survive ``python -O`` (never a bare assert)
+        """Split the active file set of ``c`` into (touched, untouched):
+        touched files hold at least one ``probe`` row.  Files the stats
+        kept out of the probe are untouched by construction."""
+        touched = self._refs_of_probe(probe) if probe is not None else set()
+        refs = self._active_refs(c)
+        stray = touched - set(refs)
+        if stray:
+            # data-integrity invariant — a probe ref outside the active
+            # set means matched rows would be carried forward unchanged,
+            # so this must survive ``python -O`` (never a bare assert)
             raise RuntimeError(
-                "COW probe returned files outside the active set: "
-                f"{sorted(touched - set(touched_ordered))!r}"
+                f"DML probe returned files outside the active set: {sorted(stray)!r}"
             )
-        return touched_ordered, untouched
+        return [r for r in refs if r in touched], [r for r in refs if r not in touched]
 
     def _carried_stats(self, prev: Commit, untouched: list[str]) -> dict:
         """File stats survive for carried-forward files (data skipping
@@ -483,17 +483,24 @@ class VersionedTable:
                 total += os.path.getsize(p)
         return total
 
-    def _written_metrics(self, rel: str) -> dict:
-        """files/bytes added by a freshly written data dir (Delta's
-        ``numTargetFilesAdded`` / ``numTargetBytesAdded`` parity)."""
+    def _written_metrics(self, rel: str | None) -> dict:
+        """files/bytes added by a freshly written data dir, zero for
+        ``None`` (Delta's ``numTargetFilesAdded`` /
+        ``numTargetBytesAdded`` parity)."""
         base = f"{self.path}/{rel}"
-        parts = [fn for fn in os.listdir(base) if fn.endswith(".parquet")]
+        parts = (
+            [f"{base}/{fn}" for fn in os.listdir(base) if fn.endswith(".parquet")]
+            if rel
+            else []
+        )
         return {
             "files_added": len(parts),
-            "bytes_added": sum(os.path.getsize(os.path.join(base, fn)) for fn in parts),
+            "bytes_added": sum(map(os.path.getsize, parts)),
         }
 
-    def _rewrite_metrics(self, rel: str, touched: list[str], untouched: list[str]) -> dict:
+    def _rewrite_metrics(
+        self, rel: str | None, touched: list[str], untouched: list[str]
+    ) -> dict:
         """Per-DML rewrite accounting surfaced via ``history()``:
         ``files_rewritten``/``bytes_rewritten`` are the INPUT files a
         full (unpruned) copy-on-write would also have rewritten but a
@@ -509,6 +516,101 @@ class VersionedTable:
             "bytes_carried": self._bytes_of_refs(untouched),
             **self._written_metrics(rel),
         }
+
+    def _write_rows(self, df: DataFrame, rel: str) -> tuple[str | None, int]:
+        """Write ``df`` as the directory ``rel`` and return (rel, rows),
+        the row count taken from the parquet footers just written (no
+        second scan).  A write that produced no row leaves no directory
+        behind and returns (None, 0)."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        base = f"{self.path}/{rel}"
+        df.write.mode("overwrite").parquet(base)
+        rows = sum(
+            pq.ParquetFile(f"{base}/{fn}").metadata.num_rows
+            for fn in os.listdir(base)
+            if fn.endswith(".parquet")
+        )
+        if not rows:
+            shutil.rmtree(base, ignore_errors=True)
+            return None, 0
+        return rel, rows
+
+    def _write_dv(self, hits: DataFrame | None, version: int) -> tuple[str | None, int]:
+        """Write the (file, position) lineage of ``hits`` as a deletion
+        vector for commit ``version``.  A DV is metadata-scale by
+        contract (Delta compacts tables whose DVs grow); one file keeps
+        the read-side anti-join input a single broadcastable artifact.
+        File identity is the symmetric ``_scan_ref()`` representation,
+        so clone reads match too."""
+        if hits is None:
+            return None, 0
+        return self._write_rows(
+            hits.select(
+                F.col("__dew_ref").alias("file_ref"), F.col("__dew_pos").alias("pos")
+            ).coalesce(1),
+            self._new_data_dir(version, dv=True),
+        )
+
+    def _apply(
+        self,
+        op: str,
+        prev: Commit,
+        params: dict,
+        rows: tuple[str | None, int],
+        split: tuple[list[str], list[str]] | None = None,
+        dv: tuple[str | None, int] = (None, 0),
+        mor: str | None = None,
+        schema_ddl: str | None = None,
+    ) -> None:
+        """Commit a DML on top of ``prev`` — the one place that sets a
+        DML commit's data files, deletion vectors, carried stats and
+        history metrics.  ``rows`` and ``dv`` are ``_write_rows``
+        results.
+
+        Copy-on-write (``mor=None``): ``split`` is the probe's (touched,
+        untouched) files, or ``None`` for an unpruned full rewrite,
+        which claims no rewrite-set accounting.  The commit holds the
+        untouched files plus the new directory; with nothing touched
+        and nothing written it is metadata-only, like Delta.  Deletion
+        vectors carry forward while some file is untouched; once every
+        file was rewritten from the DV-applied scan they are cleared.
+
+        Merge-on-read (``mor`` names the metric counting ``dv``'s rows):
+        every active file stays, the new directory is appended and the
+        new deletion vector joins the table's vectors."""
+        rel, n_rows = rows
+        rel_dv, n_dv = dv
+        new = [rel] if rel else []
+        if mor:
+            split = ([], self._active_refs(prev))
+            dirs, stats = prev.data_dirs + new, prev.file_stats
+            dv_dirs = (list(prev.dv_dirs or []) + [rel_dv]) if rel_dv else None
+            params = {**params, "mode": "merge-on-read"}
+        elif split is not None and not split[0] and not rel:
+            dirs, stats, dv_dirs = prev.data_dirs, prev.file_stats, None
+        else:
+            untouched = split[1] if split else []
+            dirs, stats = untouched + new, self._carried_stats(prev, untouched)
+            dv_dirs = None if untouched else []
+        metrics = (
+            self._rewrite_metrics(rel, *split) if split else self._written_metrics(rel)
+        )
+        if mor:
+            dv_bytes = self._written_metrics(rel_dv)["bytes_added"]
+            metrics.update({
+                mor: n_dv,
+                "rows_appended": n_rows,
+                "bytes_added": metrics["bytes_added"] + dv_bytes,
+                "dv_files_added": int(rel_dv is not None),
+                "dv_bytes_added": dv_bytes,
+            })
+        self._commit(
+            op, dirs, schema_ddl or prev.schema_ddl, params,
+            metrics=metrics, file_stats=stats, dv_dirs=dv_dirs,
+        )
 
     # ------------------------------------------------------------------ DML
 
@@ -532,140 +634,60 @@ class VersionedTable:
         and ONLY the updated rows are appended as a new file.  Write
         volume is O(matched rows), not O(touched files) — at 100 TB a
         ten-row UPDATE writes kilobytes either way on the DV path, where
-        even a pruned COW rewrites whole files.
+        even a pruned COW rewrites whole files.  The matched rows are
+        evaluated once (``localCheckpoint``, released after the
+        commit): the DV and the appended versions both derive from that
+        one result, so a non-deterministic condition cannot soft-delete
+        one row set and append another.
 
         ``mode=None`` resolves from the ``delta.enableDeletionVectors``
         table property (Delta's own opt-in surface): ``'true'`` routes
         to merge-on-read, anything else to copy-on-write."""
-        mode = self._dml_mode(mode)
+        mode = self._dml_mode(mode, "update")
+        prev = self._latest()
+        params = {"condition": condition, "set": set_exprs}
+        version = prev.version + 1
+
+        def set_rows(df: DataFrame, cond: F.Column) -> DataFrame:
+            # SET values are cast to the column's committed type: data
+            # files always hold the types the log records
+            return df.select(*[
+                F.when(cond, F.expr(e)).otherwise(F.col(c))
+                .cast(df.schema[c].dataType).alias(c)
+                if (e := set_exprs.get(c)) is not None
+                else F.col(c)
+                for c in df.columns
+            ])
+
         if mode == "mor":
-            self._update_mor(set_exprs, condition)
+            hits = self._hits(prev, condition)
+            matched = hits.localCheckpoint() if hits is not None else None
+            try:
+                dv = self._write_dv(matched, version)
+                rows = (None, 0)
+                if dv[0]:
+                    rows = self._write_rows(
+                        set_rows(matched.drop("__dew_ref", "__dew_pos"), F.lit(True)),
+                        self._new_data_dir(version),
+                    )
+                self._apply("UPDATE", prev, params, rows, dv=dv, mor="rows_updated")
+            finally:
+                if matched is not None:
+                    _release_checkpoint(matched)
             return
-        if mode != "cow":
-            raise ValueError(f"update mode must be 'cow' or 'mor', got {mode!r}")
-        prev = self._latest()
-        if condition is not None:
-            touched, untouched = self._touched_untouched(condition, prev)
-            if not touched:
-                # no row matches: metadata-only commit, like Delta
-                self._commit(
-                    "UPDATE", prev.data_dirs, prev.schema_ddl,
-                    {"condition": condition, "set": set_exprs},
-                    metrics={"files_rewritten": 0, "bytes_rewritten": 0,
-                             "files_carried": len(self._active_refs(prev))},
-                    file_stats=prev.file_stats or {},
-                )
-                return
-            cur = self._evolved([self._abs(r) for r in touched], prev)
+        if condition is None:
+            split = (self._active_refs(prev), [])
+            paths = [self._abs(d) for d in prev.data_dirs]
         else:
-            touched, untouched = self._active_refs(prev), []
-            cur = self.read()
-        cond = F.expr(condition) if condition else F.lit(True)
-        # SET values are cast to the column's committed type: data files
-        # always hold the types the log records (reads scan with them)
-        out = cur.select(
-            *[
-                (F.when(cond, F.expr(expr)).otherwise(F.col(c))
-                 .cast(cur.schema[c].dataType).alias(c)
-                 if c in set_exprs and (expr := set_exprs[c]) is not None
-                 else F.col(c))
-                for c in cur.columns
-            ]
-        )
-        rel = self._new_data_dir(prev.version + 1)
-        out.write.mode("overwrite").parquet(f"{self.path}/{rel}")
-        self._commit(
-            "UPDATE", untouched + [rel], prev.schema_ddl,
-            {"condition": condition, "set": set_exprs},
-            metrics=self._rewrite_metrics(rel, touched, untouched),
-            file_stats=self._carried_stats(prev, untouched),
-            # unconditional UPDATE rewrote everything from the
-            # DV-applied read — deletion vectors are compacted away
-            dv_dirs=None if condition is not None else [],
-        )
-
-    def _update_mor(self, set_exprs: dict[str, str], condition: str | None) -> None:
-        """Merge-on-read UPDATE: soft-delete the matched rows' old
-        versions via a deletion vector and APPEND only the updated rows
-        — write volume is O(matched rows).  The matched plan is
-        evaluated EXACTLY ONCE into a staging artifact; the DV sidecar
-        and the appended row versions both derive from that single
-        written result, so a non-deterministic condition (rand(),
-        LIMIT-fed subquery) cannot make the soft-deleted set and the
-        appended set diverge (ADVICE r12), and the matched count rides
-        the artifact — no plan re-execution anywhere."""
-        import shutil
-
-        prev = self._latest()
-        cond_sql = condition if condition is not None else "TRUE"
-        candidates = self.scan_files(prev.version, condition)
-        matched = (
-            self._evolved(candidates, prev, lineage=True)
-            .filter(F.expr(cond_sql).eqNullSafe(F.lit(True)))
-        )
-        rel_stage = f"v{prev.version + 1:08d}-stage-{uuid.uuid4().hex[:8]}"
-        rel_dv = f"v{prev.version + 1:08d}-dv-{uuid.uuid4().hex[:8]}"
-        n = 0
-        try:
-            if candidates:
-                matched.write.mode("overwrite").parquet(
-                    f"{self.path}/{rel_stage}"
-                )
-                staged = self.spark.read.parquet(f"{self.path}/{rel_stage}")
-                staged.select(
-                    F.col("__dew_ref").alias("file_ref"),
-                    F.col("__dew_pos").alias("pos"),
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    f"{self.path}/{rel_dv}"
-                )
-                n = self.spark.read.parquet(f"{self.path}/{rel_dv}").count()
-            if n == 0:
-                shutil.rmtree(f"{self.path}/{rel_dv}", ignore_errors=True)
-                self._commit(
-                    "UPDATE", prev.data_dirs, prev.schema_ddl,
-                    {"condition": condition, "set": set_exprs,
-                     "mode": "merge-on-read"},
-                    metrics={"files_rewritten": 0, "bytes_rewritten": 0,
-                             "rows_updated": 0, "dv_files_added": 0,
-                             "files_carried": len(self._active_refs(prev))},
-                    file_stats=prev.file_stats or {},
-                )
-                return
-            data_cols = [
-                c for c in staged.columns if c not in ("__dew_ref", "__dew_pos")
-            ]
-            updated = staged.select(
-                *[
-                    (F.expr(expr).cast(staged.schema[c].dataType).alias(c)
-                     if c in set_exprs and (expr := set_exprs[c]) is not None
-                     else F.col(c))
-                    for c in data_cols
-                ]
+            split = self._split(prev, self._hits(prev, condition))
+            paths = [self._abs(r) for r in split[0]]
+        rows = (None, 0)
+        if split[0]:
+            rows = self._write_rows(
+                set_rows(self._evolved(paths, prev), F.expr(condition or "TRUE")),
+                self._new_data_dir(version),
             )
-            rel = self._new_data_dir(prev.version + 1)
-            updated.write.mode("overwrite").parquet(f"{self.path}/{rel}")
-        finally:
-            shutil.rmtree(f"{self.path}/{rel_stage}", ignore_errors=True)
-        wm = self._written_metrics(rel)
-        dvb = self._bytes_of_refs([rel_dv])
-        self._commit(
-            "UPDATE",
-            prev.data_dirs + [rel],
-            prev.schema_ddl,
-            {"condition": condition, "set": set_exprs, "mode": "merge-on-read"},
-            metrics={
-                "files_rewritten": 0,
-                "bytes_rewritten": 0,
-                "files_carried": len(self._active_refs(prev)),
-                "rows_updated": n,
-                "files_added": wm["files_added"],
-                "bytes_added": wm["bytes_added"] + dvb,
-                "dv_files_added": 1,
-                "dv_bytes_added": dvb,
-            },
-            file_stats=prev.file_stats or {},
-            dv_dirs=list(prev.dv_dirs or []) + [rel_dv],
-        )
+        self._apply("UPDATE", prev, params, rows, split=split)
 
     def delete(self, condition: str, mode: str | None = None) -> None:
         """DELETE WHERE — SQL three-valued semantics: only rows where
@@ -682,38 +704,28 @@ class VersionedTable:
         it out.  At 100 TB this turns a one-row-per-file DELETE from a
         full-table rewrite into a KB-scale write; OPTIMIZE (or any full
         rewrite) compacts the vectors away, exactly as Delta compacts
-        DVs.
+        DVs.  File stats carry unchanged — min/max ranges stay
+        conservative over deleted rows, which only costs skipped-file
+        opportunities, never wrong rows.
 
         ``mode=None`` resolves from the ``delta.enableDeletionVectors``
         table property, like real Delta."""
-        mode = self._dml_mode(mode)
-        if mode == "mor":
-            self._delete_mor(condition)
-            return
-        if mode != "cow":
-            raise ValueError(f"delete mode must be 'cow' or 'mor', got {mode!r}")
+        mode = self._dml_mode(mode, "delete")
         prev = self._latest()
-        touched, untouched = self._touched_untouched(condition, prev)
-        if not touched:
-            self._commit(
-                "DELETE", prev.data_dirs, prev.schema_ddl,
-                {"condition": condition},
-                metrics={"files_rewritten": 0, "bytes_rewritten": 0,
-                         "files_carried": len(self._active_refs(prev))},
-                file_stats=prev.file_stats or {},
-            )
+        params = {"condition": condition}
+        hits = self._hits(prev, condition)
+        if mode == "mor":
+            dv = self._write_dv(hits, prev.version + 1)
+            self._apply("DELETE", prev, params, (None, 0), dv=dv, mor="rows_deleted")
             return
-        cur = self._evolved([self._abs(r) for r in touched], prev).filter(
-            ~F.expr(condition).eqNullSafe(F.lit(True))
-        )
-        rel = self._new_data_dir(prev.version + 1)
-        cur.write.mode("overwrite").parquet(f"{self.path}/{rel}")
-        self._commit(
-            "DELETE", untouched + [rel], prev.schema_ddl,
-            {"condition": condition},
-            metrics=self._rewrite_metrics(rel, touched, untouched),
-            file_stats=self._carried_stats(prev, untouched),
-        )
+        split = self._split(prev, hits)
+        rows = (None, 0)
+        if split[0]:
+            kept = self._evolved([self._abs(r) for r in split[0]], prev).filter(
+                ~F.expr(condition).eqNullSafe(F.lit(True))
+            )
+            rows = self._write_rows(kept, self._new_data_dir(prev.version + 1))
+        self._apply("DELETE", prev, params, rows, split=split)
 
     # ------------------------------------------------------- properties
 
@@ -755,220 +767,17 @@ class VersionedTable:
                 out.update(c.operation_params.get("properties") or {})
         return out
 
-    def _dml_mode(self, mode: str | None) -> str:
-        """Resolve a DML mode: an explicit argument wins; otherwise the
-        Delta ``delta.enableDeletionVectors`` table property selects
-        merge-on-read, defaulting to copy-on-write — the same precedence
-        real Delta applies."""
-        if mode is not None:
-            return mode
-        prop = str(self.properties().get("delta.enableDeletionVectors", "")).lower()
-        return "mor" if prop == "true" else "cow"
-
-    def _delete_mor(self, condition: str) -> None:
-        """Merge-on-read DELETE: record (file, row-position) of matching
-        rows in a deletion-vector sidecar; data files are untouched.
-
-        The probe is the same stats+pushdown-pruned scan as the COW
-        path, already DV-applied (re-deleting a soft-deleted row records
-        nothing).  File identity uses the symmetric ``_scan_ref()``
-        representation, so clone reads match too.  File stats carry
-        unchanged — min/max ranges stay conservative over deleted rows,
-        which only costs skipped-file opportunities, never wrong rows."""
-        prev = self._latest()
-        candidates = self.scan_files(prev.version, condition)
-        rel_dv = None
-        n_deleted = 0
-        if candidates:
-            hits = (
-                self._evolved(candidates, prev, lineage=True)
-                .filter(F.expr(condition).eqNullSafe(F.lit(True)))
-                .select(
-                    F.col("__dew_ref").alias("file_ref"),
-                    F.col("__dew_pos").alias("pos"),
-                )
-            )
-            rel_dv = f"v{prev.version + 1:08d}-dv-{uuid.uuid4().hex[:8]}"
-            # a DV is metadata-scale by contract (Delta compacts tables
-            # whose DVs grow); one file keeps the read-side join input
-            # a single broadcastable artifact
-            hits.coalesce(1).write.mode("overwrite").parquet(
-                f"{self.path}/{rel_dv}"
-            )
-            n_deleted = self.spark.read.parquet(f"{self.path}/{rel_dv}").count()
-            if n_deleted == 0:
-                import shutil
-
-                shutil.rmtree(f"{self.path}/{rel_dv}", ignore_errors=True)
-                rel_dv = None
-        if rel_dv:
-            dvb = self._bytes_of_refs([rel_dv])
-            dv_metrics = {
-                "files_added": 0,  # no DATA file added; bytes_added is
-                "bytes_added": dvb,  # the commit's total new bytes (DV)
-                "dv_files_added": 1,
-                "dv_bytes_added": dvb,
-            }
-        else:
-            dv_metrics = {"dv_files_added": 0}
-        self._commit(
-            "DELETE",
-            prev.data_dirs,
-            prev.schema_ddl,
-            {"condition": condition, "mode": "merge-on-read"},
-            metrics={
-                "files_rewritten": 0,
-                "bytes_rewritten": 0,
-                "files_carried": len(self._active_refs(prev)),
-                "rows_deleted": n_deleted,
-                **dv_metrics,
-            },
-            file_stats=prev.file_stats or {},
-            dv_dirs=(list(prev.dv_dirs or []) + [rel_dv]) if rel_dv else None,
-        )
-
-    def _merge_mor(
-        self,
-        source: DataFrame,
-        on: str,
-        update_condition: str | None,
-        insert: bool,
-        update: bool,
-        nmbs_action: str | None,
-        nmbs_condition: str | None,
-        nmbs_set: dict[str, str] | None,
-        prev: Commit,
-        cols: list[str],
-        new_fields: list,
-    ) -> None:
-        """Merge-on-read MERGE (Delta's deletion-vector merge): target
-        rows whose current version stops being visible (updated, or
-        BY-SOURCE deleted/updated) are soft-deleted via a DV sidecar,
-        and the new row versions (source-valued updates, BY-SOURCE
-        SET-updates, inserts) are APPENDED — write volume is O(affected
-        rows), zero data files rewritten, any ON form.  Untouched
-        target rows are never read twice or rewritten.  Semantics are
-        identical to the copy-on-write merge (same full-sync grammar);
-        only the storage strategy differs.
-
-        ``source`` arrives materialized (:meth:`merge`): the plan below
-        reads it for the DV write, the append write and the insert
-        anti-join, and a non-deterministic source evaluated three times
-        would soft-delete one row set and append another (ADVICE r12)."""
-        t = self._evolved(
-            [self._abs(d) for d in prev.data_dirs], prev, lineage=True
-        )
-        src = source.withColumn("__s_present", F.lit(True)).alias("s")
-        joined = t.alias("t").join(src, F.expr(on), "left")
-        s_here = F.col("__s_present").isNotNull()
-        upd_cond = F.expr(update_condition) if update_condition else F.lit(True)
-        take_source = s_here & F.lit(update) & upd_cond
-        nmbs_cond = F.expr(nmbs_condition) if nmbs_condition else F.lit(True)
-        tgt_only = ~s_here
-        dv_pred = take_source
-        if nmbs_action in ("delete", "update"):
-            dv_pred = dv_pred | (tgt_only & nmbs_cond)
-        rel_dv = f"v{prev.version + 1:08d}-dv-{uuid.uuid4().hex[:8]}"
-        joined.filter(dv_pred).select(
-            F.col("t.__dew_ref").alias("file_ref"),
-            F.col("t.__dew_pos").alias("pos"),
-        ).coalesce(1).write.mode("overwrite").parquet(f"{self.path}/{rel_dv}")
-        n_dv = self.spark.read.parquet(f"{self.path}/{rel_dv}").count()
-        if n_dv == 0:
-            import shutil
-
-            shutil.rmtree(f"{self.path}/{rel_dv}", ignore_errors=True)
-            rel_dv = None
-
-        all_cols = cols + [f.name for f in new_fields]
-        new_types = {f.name: f.dataType for f in new_fields}
-        upd_set = {c: F.expr(e) for c, e in (nmbs_set or {}).items()}
-        appends: DataFrame | None = None
-
-        def _add(df: DataFrame) -> None:
-            nonlocal appends
-            appends = df if appends is None else appends.unionByName(df)
-
-        if update:
-            # new versions of updated rows take source values (UPDATE *)
-            _add(
-                joined.filter(take_source).select(
-                    *[F.col(f"s.{c}").alias(c) for c in all_cols]
-                )
-            )
-        if nmbs_action == "update":
-            _add(
-                joined.filter(tgt_only & nmbs_cond).select(
-                    *[
-                        (
-                            upd_set[c]
-                            if c in upd_set
-                            else (
-                                F.lit(None).cast(new_types[c])
-                                if c in new_types
-                                else F.col(f"t.{c}")
-                            )
-                        ).alias(c)
-                        for c in all_cols
-                    ]
-                )
-            )
-        if insert:
-            _add(
-                src.join(t.alias("t"), F.expr(on), "left_anti").select(
-                    *[F.col(f"s.{c}").alias(c) for c in all_cols]
-                )
-            )
-        rel = None
-        n_app = 0
-        if appends is not None:
-            # appended versions take the committed column types
-            types = {**{f.name: f.dataType for f in t.schema.fields}, **new_types}
-            appends = appends.select(*[F.col(c).cast(types[c]) for c in all_cols])
-            rel = self._new_data_dir(prev.version + 1)
-            appends.write.mode("overwrite").parquet(f"{self.path}/{rel}")
-            n_app = self.spark.read.parquet(f"{self.path}/{rel}").count()
-            if n_app == 0:
-                import shutil
-
-                shutil.rmtree(f"{self.path}/{rel}", ignore_errors=True)
-                rel = None
-        if new_fields:
-            from pyspark.sql.types import StructType
-
-            old_schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
-            schema_ddl = StructType(
-                list(old_schema.fields) + new_fields
-            ).simpleString()
-        else:
-            schema_ddl = prev.schema_ddl
-        wm = self._written_metrics(rel) if rel else {"files_added": 0, "bytes_added": 0}
-        dvb = self._bytes_of_refs([rel_dv]) if rel_dv else 0
-        self._commit(
-            "MERGE",
-            prev.data_dirs + ([rel] if rel else []),
-            schema_ddl,
-            metrics={
-                "files_rewritten": 0,
-                "bytes_rewritten": 0,
-                "files_carried": len(self._active_refs(prev)),
-                "rows_dv_marked": n_dv,
-                "rows_appended": n_app,
-                "files_added": wm["files_added"],
-                "bytes_added": wm["bytes_added"] + dvb,
-                "dv_files_added": 1 if rel_dv else 0,
-                "dv_bytes_added": dvb,
-            },
-            file_stats=prev.file_stats or {},
-            dv_dirs=(list(prev.dv_dirs or []) + [rel_dv]) if rel_dv else None,
-            params={
-                "on": on,
-                "update_condition": update_condition,
-                "unmatched_by_source_action": nmbs_action,
-                "unmatched_by_source_condition": nmbs_condition,
-                "mode": "merge-on-read",
-            },
-        )
+    def _dml_mode(self, mode: str | None, op: str) -> str:
+        """Resolve and validate the mode of DML ``op``: an explicit
+        argument wins; otherwise the Delta ``delta.enableDeletionVectors``
+        table property selects merge-on-read, defaulting to
+        copy-on-write — the same precedence real Delta applies."""
+        if mode is None:
+            prop = str(self.properties().get("delta.enableDeletionVectors", "")).lower()
+            mode = "mor" if prop == "true" else "cow"
+        if mode not in ("cow", "mor"):
+            raise ValueError(f"{op} mode must be 'cow' or 'mor', got {mode!r}")
+        return mode
 
     def merge(
         self,
@@ -1010,12 +819,6 @@ class VersionedTable:
         (matched rows keep their target values — insert-only or pure
         by-source-sync merges).
 
-        ``mode``: None resolves from ``delta.enableDeletionVectors``
-        (Delta's opt-in); ``"mor"`` runs the merge as deletion-vector +
-        append (see :meth:`_merge_mor`), ``"cow"`` as the pruned
-        copy-on-write of :meth:`_merge_cow`.  Semantics are identical
-        either way.
-
         The source is evaluated ONCE: whenever the plan reads it more
         than once (any conjunctive-equality ON, and every merge-on-read
         merge) it is materialized with ``localCheckpoint`` and released
@@ -1023,12 +826,27 @@ class VersionedTable:
         probe aggregate over it then yields the duplicate-key check and
         the single key's range; the target join that decides whether a
         duplicate key matches a target row runs only when a key repeats.
-        The copy-on-write rewrite is one full-outer-join plan:
+
+        Both modes run one full-outer join of target and source, with
+        one projection of the new row versions:
 
           matched & cond       -> source row      (update *)
           matched & !cond      -> target row      (no-op, row-hash guard)
           target-only          -> target row / dropped / SET-updated
           source-only          -> source row      (insert *)
+
+        ``mode="cow"`` joins only the files a left-semi probe on the ON
+        condition finds (Delta's find-touched-files scan; with no BY
+        SOURCE clause and a conjunctive-equality ON, bounded by the
+        source's key range against commit-log stats) and rewrites them
+        with the kept rows; every other file carries forward.  A BY
+        SOURCE clause can touch any row, so it, like a non-equi ON,
+        rewrites the whole table.  ``mode="mor"`` joins the whole
+        target, writes a deletion vector for the updated and BY-SOURCE
+        target rows and appends the updated, inserted and BY-SOURCE
+        updated rows — zero data files rewritten, any ON form.
+        ``mode=None`` resolves from ``delta.enableDeletionVectors``
+        (Delta's opt-in).  Semantics are identical either way.
         """
         if unmatched_by_source_action not in (None, "delete", "update"):
             raise ValueError(
@@ -1067,7 +885,6 @@ class VersionedTable:
                 )
         prev = self._latest()
         cur = self.read()
-        cols = cur.columns
         # WITH SCHEMA EVOLUTION: collect source-only columns to add
         new_fields = []
         if schema_evolution:
@@ -1082,10 +899,15 @@ class VersionedTable:
                         )
                 else:
                     new_fields.append(f)
-        resolved_mode = self._dml_mode(mode)
-        if resolved_mode not in ("cow", "mor"):
+        mode = self._dml_mode(mode, "merge")
+        all_cols = cur.columns + [f.name for f in new_fields]
+        upd_set = {
+            c: F.expr(e) for c, e in (unmatched_by_source_set or {}).items()
+        }
+        unknown = set(upd_set) - set(all_cols)
+        if unknown:
             raise ValueError(
-                f"merge mode must be 'cow' or 'mor', got {resolved_mode!r}"
+                f"NOT MATCHED BY SOURCE SET references unknown columns {sorted(unknown)}"
             )
         terms = [t.strip() for t in re.split(r"(?i)\s+AND\s+", on.strip())]
         pair_re = re.compile(r"^(?:t\.(\w+)\s*=\s*s\.(\w+)|s\.(\w+)\s*=\s*t\.(\w+))$")
@@ -1097,32 +919,122 @@ class VersionedTable:
         )
         # Delta's merge source materialization: a plan that reads the
         # source more than once (the probe aggregate, the probe semi-join
-        # and the rewrite; or the DV write, the append and the insert
-        # anti-join) evaluates it ONCE into executor storage, so it pays
-        # the source's scans, filters and windows once and a
-        # non-deterministic source (rand(), LIMIT without ORDER BY, a
-        # changing view) cannot match one row set in the probe and
-        # another in the rewrite.  Clause CONDITIONS must still be
-        # deterministic, the same restriction Delta documents.
-        materialize = pairs is not None or resolved_mode == "mor"
+        # and the rewrite; or the DV write and the append) evaluates it
+        # ONCE into executor storage, so it pays the source's scans,
+        # filters and windows once and a non-deterministic source
+        # (rand(), LIMIT without ORDER BY, a changing view) cannot match
+        # one row set in the probe and another in the rewrite.  Clause
+        # CONDITIONS must still be deterministic, the same restriction
+        # Delta documents.
+        materialize = pairs is not None or mode == "mor"
         if materialize:
             source = source.localCheckpoint()  # eager, MEMORY_AND_DISK
         try:
             key_range = (
                 self._merge_source_probe(source, cur, pairs) if pairs else None
             )
-            if resolved_mode == "mor":
-                self._merge_mor(
-                    source, on, update_condition, insert, update,
-                    unmatched_by_source_action, unmatched_by_source_condition,
-                    unmatched_by_source_set, prev, cols, new_fields,
+            target, split = cur, None
+            if mode == "mor":
+                target = self._evolved(
+                    [self._abs(d) for d in prev.data_dirs], prev, lineage=True
+                )
+            elif unmatched_by_source_action is None and pairs is not None:
+                # Delta's join-key file skipping: bound the probe's
+                # target scan by the SOURCE's key range (from the probe
+                # aggregate) so commit-log min/max stats drop
+                # non-overlapping files before the semi-join reads a
+                # row.  Numeric single-key form only — the conservative
+                # fallback is the full candidate set.
+                probe_where = None
+                if key_range is not None:
+                    lo, hi = key_range
+                    if (
+                        lo is not None
+                        and isinstance(lo, (int, float))
+                        and not isinstance(lo, bool)
+                    ):
+                        probe_where = f"{pairs[0][0]} >= {lo} AND {pairs[0][0]} <= {hi}"
+                probe = (
+                    self._evolved(
+                        self.scan_files(prev.version, probe_where), prev, lineage=True
+                    )
+                    .drop("__dew_pos")
+                    .alias("t")
+                    .join(source.alias("s"), F.expr(on), "left_semi")
+                )
+                split = self._split(prev, probe)
+                target = self._evolved([self._abs(r) for r in split[0]], prev)
+            joined = (
+                target.withColumn("__t_present", F.lit(True))
+                .alias("t")
+                .join(
+                    source.alias("s").withColumn("__s_present", F.lit(True)),
+                    F.expr(on),
+                    "full_outer",
+                )
+            )
+            upd_cond = F.expr(update_condition) if update_condition else F.lit(True)
+            t_here = F.col("__t_present").isNotNull()
+            s_here = F.col("__s_present").isNotNull()
+            updated = t_here & s_here & F.lit(update) & upd_cond
+            take_source = updated | (~t_here & s_here & F.lit(insert))
+            tgt_only = t_here & ~s_here
+            nmbs_cond = (
+                F.expr(unmatched_by_source_condition)
+                if unmatched_by_source_condition
+                else F.lit(True)
+            )
+            by_source = tgt_only & nmbs_cond
+            new_types = {f.name: f.dataType for f in new_fields}
+            # output columns take the committed types (reads scan with them)
+            types = {**{f.name: f.dataType for f in cur.schema.fields}, **new_types}
+
+            def _out_col(c: str):
+                if c in new_types:
+                    # evolution-added column: no target-side value exists
+                    base = F.when(take_source, F.col(f"s.{c}")).otherwise(
+                        F.lit(None).cast(new_types[c])
+                    )
+                else:
+                    base = F.when(take_source, F.col(f"s.{c}")).otherwise(
+                        F.col(f"t.{c}")
+                    )
+                if unmatched_by_source_action == "update" and c in upd_set:
+                    base = F.when(by_source, upd_set[c]).otherwise(base)
+                return base.cast(types[c]).alias(c)
+
+            out_cols = [_out_col(c) for c in all_cols]
+            schema_ddl = None
+            if new_fields:
+                from pyspark.sql.types import StructType
+
+                schema_ddl = StructType(cur.schema.fields + new_fields).simpleString()
+            params = {
+                "on": on,
+                "update_condition": update_condition,
+                "unmatched_by_source_action": unmatched_by_source_action,
+                "unmatched_by_source_condition": unmatched_by_source_condition,
+            }
+            rel = self._new_data_dir(prev.version + 1)
+            if mode == "mor":
+                gone, appended = updated, take_source
+                if unmatched_by_source_action is not None:
+                    gone = gone | by_source
+                if unmatched_by_source_action == "update":
+                    appended = appended | by_source
+                dv = self._write_dv(joined.filter(gone), prev.version + 1)
+                rows = self._write_rows(joined.filter(appended).select(*out_cols), rel)
+                self._apply(
+                    "MERGE", prev, params, rows, dv=dv, mor="rows_dv_marked",
+                    schema_ddl=schema_ddl,
                 )
             else:
-                self._merge_cow(
-                    source, cur, on, update_condition, insert, update,
-                    unmatched_by_source_action, unmatched_by_source_condition,
-                    unmatched_by_source_set, prev, cols, new_fields,
-                    pairs, key_range,
+                keep = t_here | (s_here & F.lit(insert))
+                if unmatched_by_source_action == "delete":
+                    keep = keep & ~by_source
+                rows = self._write_rows(joined.select(*out_cols).filter(keep), rel)
+                self._apply(
+                    "MERGE", prev, params, rows, split=split, schema_ddl=schema_ddl
                 )
         finally:
             if materialize:
@@ -1160,155 +1072,6 @@ class VersionedTable:
                     "match one target row — Delta semantics forbid this"
                 )
         return (row[1], row[2]) if len(pairs) == 1 else None
-
-    def _merge_cow(
-        self,
-        source: DataFrame,
-        cur: DataFrame,
-        on: str,
-        update_condition: str | None,
-        insert: bool,
-        update: bool,
-        unmatched_by_source_action: str | None,
-        unmatched_by_source_condition: str | None,
-        unmatched_by_source_set: dict[str, str] | None,
-        prev: Commit,
-        cols: list[str],
-        new_fields: list,
-        pairs: list[tuple[str, str]] | None,
-        key_range: tuple | None,
-    ) -> None:
-        # File-pruned copy-on-write (Delta's rewrite-set pruning): when
-        # no BY SOURCE clause is present, only files containing a
-        # MATCHED target row can change — probe them with a left-semi
-        # join on the ON condition (like Delta's own find-touched-files
-        # scan) and carry every other file forward by reference.  A BY
-        # SOURCE clause can touch any target row, so it keeps the full
-        # rewrite; non-conjunctive-equality ON forms skip pruning to
-        # keep the probe an equi-join.
-        untouched: list[str] = []
-        touched_list: list[str] | None = None
-        if unmatched_by_source_action is None and pairs is not None:
-            # Delta's join-key file skipping: bound the probe's target
-            # scan by the SOURCE's key range (from the probe aggregate)
-            # so commit-log min/max stats drop non-overlapping files
-            # before the semi-join reads a row.  Numeric single-key form
-            # only — the conservative fallback is the full candidate set.
-            probe_where = None
-            if key_range is not None:
-                lo, hi = key_range
-                if (
-                    lo is not None
-                    and isinstance(lo, (int, float))
-                    and not isinstance(lo, bool)
-                ):
-                    probe_where = f"{pairs[0][0]} >= {lo} AND {pairs[0][0]} <= {hi}"
-            all_paths = self.scan_files(prev.version, probe_where)
-            probe = (
-                self._evolved(all_paths, prev, lineage=True)
-                .withColumnRenamed("__dew_ref", "__dew_file")
-                .drop("__dew_pos")
-                .alias("t")
-                .join(source.alias("s"), F.expr(on), "left_semi")
-            )
-            touched_set = self._refs_of_probe(probe)
-            refs = self._active_refs(prev)
-            stray = touched_set - set(refs)
-            if stray:
-                # same invariant as _touched_untouched: a probe ref
-                # outside the active set means matched target files
-                # would be carried forward unchanged while the join
-                # re-inserts their rows — silent duplicates
-                raise RuntimeError(
-                    "MERGE probe returned files outside the active set: "
-                    f"{sorted(stray)!r}"
-                )
-            touched = [r for r in refs if r in touched_set]
-            untouched = [r for r in refs if r not in touched_set]
-            touched_list = touched
-            cur = self._evolved([self._abs(r) for r in touched], prev)
-        src = source.alias("s")
-        joined = (
-            cur.withColumn("__t_present", F.lit(True))
-            .alias("t")
-            .join(src.withColumn("__s_present", F.lit(True)), F.expr(on), "full_outer")
-        )
-        upd_cond = F.expr(update_condition) if update_condition else F.lit(True)
-        t_here = F.col("__t_present").isNotNull()
-        s_here = F.col("__s_present").isNotNull()
-        take_source = (t_here & s_here & F.lit(update) & upd_cond) | (
-            ~t_here & s_here & F.lit(insert)
-        )
-        tgt_only = t_here & ~s_here
-        nmbs_cond = (
-            F.expr(unmatched_by_source_condition)
-            if unmatched_by_source_condition
-            else F.lit(True)
-        )
-        upd_set = {
-            c: F.expr(e) for c, e in (unmatched_by_source_set or {}).items()
-        }
-        all_cols = cols + [f.name for f in new_fields]
-        unknown = set(upd_set) - set(all_cols)
-        if unknown:
-            raise ValueError(
-                f"NOT MATCHED BY SOURCE SET references unknown columns {sorted(unknown)}"
-            )
-        new_types = {f.name: f.dataType for f in new_fields}
-        # output columns take the committed types (reads scan with them)
-        types = {**{f.name: f.dataType for f in cur.schema.fields}, **new_types}
-
-        def _out_col(c: str):
-            if c in new_types:
-                # evolution-added column: no target-side value exists
-                base = F.when(take_source, F.col(f"s.{c}")).otherwise(
-                    F.lit(None).cast(new_types[c])
-                )
-            else:
-                base = F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
-            if unmatched_by_source_action == "update" and c in upd_set:
-                base = F.when(tgt_only & nmbs_cond, upd_set[c]).otherwise(base)
-            return base.cast(types[c]).alias(c)
-
-        keep = t_here | (s_here & F.lit(insert))
-        if unmatched_by_source_action == "delete":
-            keep = keep & ~(tgt_only & nmbs_cond)
-        out = joined.select(*[_out_col(c) for c in all_cols]).filter(keep)
-        if new_fields:
-            from pyspark.sql.types import StructType
-
-            old_schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
-            schema_ddl = StructType(
-                list(old_schema.fields) + new_fields
-            ).simpleString()
-        else:
-            schema_ddl = prev.schema_ddl
-        rel = self._new_data_dir(prev.version + 1)
-        out.write.mode("overwrite").parquet(f"{self.path}/{rel}")
-        # unpruned MERGE (BY SOURCE / non-equi ON) intentionally records
-        # no files_rewritten — a full rewrite has no pruning story to
-        # account for; the write-side numbers are still surfaced
-        metrics = (
-            self._rewrite_metrics(rel, touched_list, untouched)
-            if touched_list is not None
-            else self._written_metrics(rel)
-        )
-        self._commit(
-            "MERGE",
-            untouched + [rel],
-            schema_ddl,
-            metrics=metrics,
-            # pruned merge carries DVs for the untouched files; the
-            # unpruned form rewrote everything from the DV-applied read
-            dv_dirs=None if touched_list is not None else [],
-            file_stats=self._carried_stats(prev, untouched),
-            params={
-                "on": on,
-                "update_condition": update_condition,
-                "unmatched_by_source_action": unmatched_by_source_action,
-                "unmatched_by_source_condition": unmatched_by_source_condition,
-            },
-        )
 
     # --------------------------------------------------------- maintenance
 
@@ -1430,16 +1193,10 @@ class VersionedTable:
         # the broadcast sidecar from accreting garbage)
         rel_dv = None
         if carried:
-            cand = f"v{prev.version + 1:08d}-dv-{uuid.uuid4().hex[:8]}"
-            dv.filter(
-                F.col("file_ref").isin([abs_of[r] for r in carried])
-            ).coalesce(1).write.mode("overwrite").parquet(f"{self.path}/{cand}")
-            if self.spark.read.parquet(f"{self.path}/{cand}").count() > 0:
-                rel_dv = cand
-            else:
-                import shutil
-
-                shutil.rmtree(f"{self.path}/{cand}", ignore_errors=True)
+            rel_dv, _ = self._write_rows(
+                dv.filter(F.col("file_ref").isin([abs_of[r] for r in carried])).coalesce(1),
+                self._new_data_dir(prev.version + 1, dv=True),
+            )
         self._commit(
             "REORG",
             carried + [rel],
@@ -1615,7 +1372,12 @@ class VersionedTable:
         ``numTargetFilesRemoved/Added`` + byte counters: per DML commit,
         how many files (and bytes) the copy-on-write actually rewrote vs
         carried forward by reference — NULL for commits where the notion
-        doesn't apply (CTAS, unpruned MERGE)."""
+        doesn't apply (CTAS, unpruned MERGE).  A merge-on-read commit
+        rewrites nothing and carries every file; its commit metrics also
+        count the rows its deletion vector marks (``rows_deleted``,
+        ``rows_updated`` or ``rows_dv_marked`` for DELETE, UPDATE and
+        MERGE; ``rows_deleted`` is a column here) and the rows it appends
+        (``rows_appended``), and ``bytes_added`` includes the vector."""
         rows = [
             (
                 c.version,

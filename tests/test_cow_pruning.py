@@ -61,6 +61,9 @@ def test_delete_rewrites_only_touched_files(spark, tmp_path):
     c = t._commits()[-1]
     assert c.metrics["files_rewritten"] == 1
     assert c.metrics["files_carried"] == 3
+    # the touched file lost every row: no empty directory is committed
+    assert c.metrics["files_added"] == 0 and c.metrics["bytes_added"] == 0
+    assert len(c.data_dirs) == 3 and all(d.endswith(".parquet") for d in c.data_dirs)
     assert _state(t) == {k: v for k, v in before.items() if k < 300}
 
 
@@ -314,3 +317,18 @@ def test_unpruned_merge_still_records_write_side_only(spark, tmp_path):
     assert "files_rewritten" not in c.metrics
     assert c.metrics["files_added"] >= 1
     assert c.metrics["bytes_added"] > 0
+
+
+def test_cow_update_touching_every_file_clears_deletion_vectors(spark, tmp_path):
+    """Every file rewritten from the DV-applied scan: the soft deletes
+    are materialized, so the commit drops the table's vectors."""
+    t = _mk_four_file_table(spark, tmp_path)
+    t.delete("k = 300", mode="mor")
+    assert len(t._latest().dv_dirs) == 1
+    t.update({"v": "v + 1000"}, condition="k >= 0", mode="cow")
+    c = t._latest()
+    assert (c.metrics["files_rewritten"], c.metrics["files_carried"]) == (4, 0)
+    assert c.dv_dirs == []
+    expect = {k: k + 1000 for i in range(4) for k in range(i * 100, i * 100 + 5)}
+    del expect[300]
+    assert _state(t) == expect

@@ -433,3 +433,23 @@ def test_reorg_purge_sql_statement(spark, tmp_path):
     tbl = lh.table("t")
     assert tbl._latest().dv_dirs == []
     assert lh.sql("SELECT count(*) AS n FROM t").first().n == 90
+
+
+def test_mor_update_nondeterministic_condition_replaces_the_same_rows(spark, tmp_path):
+    """The matched rows are evaluated once: with a rand() condition the
+    deletion vector and the appended versions still name the same rows,
+    so every key survives exactly once, and the materialized rows are
+    released after the commit."""
+    t = _mk_four_file_table(spark, tmp_path)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    t.update({"v": "v + 1000"}, condition="rand() < 0.5", mode="mor")
+    c = t._latest()
+    assert c.metrics["rows_updated"] == c.metrics["rows_appended"]
+    rows = [(r.k, r.v) for r in t.read().collect()]
+    assert len(rows) == 20
+    assert sorted(k for k, _ in rows) == sorted(
+        k for i in range(4) for k in range(i * 100, i * 100 + 5)
+    )
+    assert all(v in (k, k + 1000) for k, v in rows)
+    assert sum(v >= 1000 for _, v in rows) == c.metrics["rows_updated"]
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= persisted

@@ -113,15 +113,24 @@ def test_validation_errors(spark, tmp_path):
             unmatched_by_source_action="delete",
             unmatched_by_source_set={"v": "0"},
         )
+    with pytest.raises(ValueError, match="update_condition is meaningless"):
+        vt.merge(src, on="t.k = s.k", update=False, update_condition="t.v > 0")
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_unknown_by_source_set_column_rejected(spark, tmp_path, mode):
+    """Both modes reject a NOT MATCHED BY SOURCE SET on a column the
+    table (and an evolved schema) does not have, and commit nothing."""
+    vt, src = _mk(spark, tmp_path)
     with pytest.raises(ValueError, match="unknown columns"):
         vt.merge(
             src,
             on="t.k = s.k",
             unmatched_by_source_action="update",
             unmatched_by_source_set={"nope": "0"},
+            mode=mode,
         )
-    with pytest.raises(ValueError, match="update_condition is meaningless"):
-        vt.merge(src, on="t.k = s.k", update=False, update_condition="t.v > 0")
+    assert len(vt.history().collect()) == 1
 
 
 def test_sql_full_sync_merge_routes(spark, tmp_path):
@@ -276,8 +285,8 @@ def test_merge_on_relative_table_path(spark, tmp_path, monkeypatch):
 
 def test_merge_probe_outside_active_set_raises(spark, tmp_path, monkeypatch):
     """The probe/active-set invariant is a RuntimeError (survives
-    ``python -O``), not a bare assert, in BOTH merge() and
-    _touched_untouched()."""
+    ``python -O``), not a bare assert, in BOTH merge() and update(),
+    which split the active files through the same _split()."""
     vt, src = _mk(spark, tmp_path)
     monkeypatch.setattr(
         VersionedTable, "_refs_of_probe", lambda self, probe: {"bogus/ref.parquet"}

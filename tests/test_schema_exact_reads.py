@@ -7,30 +7,13 @@ probe and the rewrite see the same rows."""
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 HINTS = "ts long, exported_ts long, SaleID string"
-
-
-@contextlib.contextmanager
-def _jobs_started(spark):
-    """Collect the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    jobs: list[int] = []
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _land(src, name, rows):
@@ -47,7 +30,7 @@ def _sale(i):
 # ------------------------------------------------------------- (a) 0 jobs
 
 
-def test_reads_and_view_refresh_start_no_job(spark, tmp_path):
+def test_reads_and_view_refresh_start_no_job(spark, tmp_path, jobs_started):
     from dataengineeringworkshop_spark.engine import Lakehouse
 
     lh = Lakehouse(str(tmp_path / "lake"), spark=spark, table_backend="versioned")
@@ -56,7 +39,7 @@ def test_reads_and_view_refresh_start_no_job(spark, tmp_path):
     t.add_column("w", "string")
     t.write(spark.range(5).withColumn("v", F.lit(0).cast("bigint")), mode="append")
 
-    with _jobs_started(spark) as jobs:
+    with jobs_started() as jobs:
         df = t.read()
         old = t.read(version=0)
         lh.refresh_view("t")
@@ -67,7 +50,7 @@ def test_reads_and_view_refresh_start_no_job(spark, tmp_path):
     src.mkdir()
     _land(str(src), "a.json", [_sale(i) for i in range(20)])
     lh.auto_ingest(str(src), target="bronze", fmt="json", schema_hints=HINTS)
-    with _jobs_started(spark) as jobs:
+    with jobs_started() as jobs:
         bronze = lh.read_ingested("bronze")
     assert jobs == []
     assert bronze.count() == 20
