@@ -29,7 +29,8 @@ from dataengineeringworkshop_spark.pipeline.runner import Pipeline
 from dataengineeringworkshop_spark.session import ensure_session_defaults, get_spark
 from dataengineeringworkshop_spark.sources import batch as batch_io
 from dataengineeringworkshop_spark.streaming.autoingest import AutoIngest
-from dataengineeringworkshop_spark.tables.backend import TableBackend
+from dataengineeringworkshop_spark.tables.backend import open_table
+from dataengineeringworkshop_spark.tables.versioned import VersionedTable
 
 
 class Lakehouse:
@@ -42,14 +43,13 @@ class Lakehouse:
         app_name: str = "dew-lakehouse",
         table_backend: str | None = None,
     ):
-        """``table_backend``: force ``"versioned"`` / ``"delta"`` for
-        every table this lakehouse opens (None = auto-select per
-        tables/backend.py).  Pin it when behavior must be
-        backend-stable — e.g. oracle-checked tests that assert
-        VersionedTable history op names."""
+        """``table_backend``: ``None`` or ``"versioned"``, the one table
+        format (accepted so callers that name it keep working); any other
+        value raises ``ValueError``."""
+        if table_backend not in (None, "versioned"):
+            raise ValueError(f"unknown table backend {table_backend!r}")
         self.spark = ensure_session_defaults(spark) if spark else get_spark(app_name)
         self.storage_dir = storage_dir
-        self.table_backend = table_backend
         os.makedirs(storage_dir, exist_ok=True)
 
     # ---- ad-hoc query surface (workshop %sql / display cells) ----
@@ -84,19 +84,13 @@ class Lakehouse:
     def _table_path(self, name: str) -> str:
         return os.path.join(self.storage_dir, "tables", name)
 
-    def table(self, name: str) -> TableBackend:
-        """Open the named table through the backend seam: parquet +
-        commit-log VersionedTable here; DeltaBackend automatically when
-        delta-spark is importable (tables/backend.py)."""
-        from dataengineeringworkshop_spark.tables.backend import open_table
-
-        return open_table(
-            self.spark, self._table_path(name), backend=self.table_backend
-        )
+    def table(self, name: str) -> VersionedTable:
+        """Open the named versioned table (tables/backend.py)."""
+        return open_table(self.spark, self._table_path(name))
 
     def create_table(
         self, name: str, df: DataFrame, register_view: bool = True
-    ) -> TableBackend:
+    ) -> VersionedTable:
         """CTAS (N1:125-130): materialize df as version 0 of a versioned
         table; optionally expose it to ``sql()`` as a temp view."""
         vt = self.table(name)
@@ -131,11 +125,9 @@ class Lakehouse:
         return ing
 
     def read_ingested(self, target: str) -> DataFrame:
-        return AutoIngest(
-            source_dir="",
-            target_dir=os.path.join(self.storage_dir, "ingest", target),
-            checkpoint_dir=os.path.join(self.storage_dir, "checkpoints", target),
-        ).read_target(self.spark)
+        return open_table(
+            self.spark, os.path.join(self.storage_dir, "ingest", target)
+        ).read()
 
     # ---- declarative pipelines (DLT parity, N3/N4) ----
     def pipeline(self, name: str) -> Pipeline:

@@ -14,14 +14,14 @@ A pipeline is a DAG of dataset definitions:
 
 Execution semantics (N4:14-18, 38; SURVEY §7.4):
 - **table** (complete LIVE TABLE): fully recomputed each run and
-  committed through the table-backend seam (``tables.backend.open_table``
-  — Delta when ``delta-spark`` is importable, else the parquet +
-  commit-log VersionedTable; CREATE OR REPLACE, history preserved).
-- **incremental_table**: executed as a Structured Streaming query with
-  ``trigger(availableNow=True)`` reading only data unseen by its
-  checkpoint — from a landing directory (``cloud_files``) or from an
-  upstream incremental table's storage (``STREAM(live.x)``) — and
-  APPENDED to its storage.  Exactly-once via the stream checkpoint.
+  committed as a new version of its VersionedTable (CREATE OR REPLACE,
+  history preserved).
+- **incremental_table**: one batch APPENDED to its VersionedTable per
+  run, holding only input no earlier commit consumed — the landing files
+  its commits do not list (``cloud_files``, AutoIngest's batch step), or
+  the rows an upstream incremental table appended after the version its
+  last commit records (``STREAM(live.x)``).  Exactly-once via the
+  commit: the batch and that progress publish together.
 - **temp_table** (TEMPORARY LIVE TABLE): fully recomputed each run as
   PLAIN parquet — no commit log, no version history.  Intermediate DAG
   stages that nobody time-travels belong here; only gold/published
@@ -44,8 +44,8 @@ topological order.  Dev/prod target remapping (N4:77) falls out of the
 ``storage_dir`` root.
 
 Scale posture: the runner is driver-side orchestration only — every
-node's work is a Spark batch/streaming job; expectations metrics ride on
-the materializing action via a single aggregate over the batch.
+node's work is a Spark batch job; expectations metrics ride on the
+materializing action via a single aggregate over the batch.
 """
 
 from __future__ import annotations
@@ -67,7 +67,8 @@ from dataengineeringworkshop_spark.operators.expectations import (
 from dataengineeringworkshop_spark.session import ensure_session_defaults
 from dataengineeringworkshop_spark.tables.backend import open_table
 
-_LIVE_RE = re.compile(r"STREAM\s*\(\s*live\.([A-Za-z_][A-Za-z_0-9]*)\s*\)|live\.([A-Za-z_][A-Za-z_0-9]*)")
+_STREAM_RE = re.compile(r"STREAM\s*\(\s*live\.([A-Za-z_][A-Za-z_0-9]*)\s*\)")
+_LIVE_RE = re.compile(_STREAM_RE.pattern + r"|live\.([A-Za-z_][A-Za-z_0-9]*)")
 # both quote styles, tolerant of spaces — the reference writes
 # cloud_files( '/dir/' , "json")  (N4:34)
 _CLOUD_FILES_RE = re.compile(
@@ -209,7 +210,7 @@ class Pipeline:
         """Batch-read a materialized dataset."""
         spec = self.datasets[name]
         if spec.kind == "incremental_table":
-            return spark.read.option("mergeSchema", "true").parquet(self._incr_dir(name))
+            return open_table(spark, self._incr_dir(name)).read()
         if spec.kind == "table":
             return open_table(spark, self._table_dir(name)).read()
         if spec.kind == "temp_table":
@@ -312,35 +313,35 @@ class Pipeline:
     def _view_name(self, name: str) -> str:
         return f"__pl_{self.name}_{name}"
 
-    def _substitute(self, spark: SparkSession, sql: str, streaming: bool) -> str:
-        """Replace live./STREAM(live.) refs with registered temp views.
-        String literals are left untouched, and a ref to an undefined
-        dataset raises a named error instead of a KeyError."""
+    def _spec(self, name: str) -> DatasetSpec:
+        if name not in self.datasets:
+            raise ValueError(
+                f"pipeline {self.name!r}: query references live.{name} "
+                "but no such dataset is defined"
+            )
+        return self.datasets[name]
+
+    def _substitute(self, spark: SparkSession, sql: str) -> str:
+        """Replace live. refs with registered temp views.  String
+        literals are left untouched, and a ref to an undefined dataset
+        raises a named error instead of a KeyError.  ``STREAM(live.x)``
+        refs are resolved by :meth:`_run_incremental` before this runs,
+        so one left here is outside an incremental table."""
 
         def repl(m: re.Match) -> str:
             stream_ref, batch_ref = m.group(1), m.group(2)
-            name = stream_ref or batch_ref
-            if name not in self.datasets:
-                raise ValueError(
-                    f"pipeline {self.name!r}: query references live.{name} "
-                    "but no such dataset is defined"
-                )
-            spec = self.datasets[name]
-            view = self._view_name(name) + ("__stream" if stream_ref else "")
+            spec = self._spec(stream_ref or batch_ref)
             if stream_ref:
-                if spec.kind != "incremental_table":
-                    raise ValueError(f"STREAM(live.{name}) requires an incremental table")
-                sdf = spark.readStream.schema(
-                    spark.read.parquet(self._incr_dir(name)).schema
-                ).parquet(self._incr_dir(name))
-                sdf.createOrReplaceTempView(view)
-            else:
-                if spec.kind != "view":  # views already registered in topo order
-                    memo = getattr(self, "_run_view_memo", None)
-                    if memo is None or view not in memo:
-                        self.read_dataset(spark, name).createOrReplaceTempView(view)
-                        if memo is not None:
-                            memo.add(view)
+                raise ValueError(
+                    f"STREAM(live.{stream_ref}) is read only by an incremental table"
+                )
+            view = self._view_name(batch_ref)
+            if spec.kind != "view":  # views already registered in topo order
+                memo = getattr(self, "_run_view_memo", None)
+                if memo is None or view not in memo:
+                    self.read_dataset(spark, batch_ref).createOrReplaceTempView(view)
+                    if memo is not None:
+                        memo.add(view)
             return view
 
         from dataengineeringworkshop_spark.sqlcompat import _split_literals
@@ -355,7 +356,7 @@ class Pipeline:
             return spec.fn(spark, lambda n: self.read_dataset(spark, n))
         if _CLOUD_FILES_RE.search(spec.sql or ""):
             raise ValueError("cloud_files sources must be incremental tables")
-        return spark.sql(self._substitute(spark, spec.sql, streaming=False))
+        return spark.sql(self._substitute(spark, spec.sql))
 
     def _prepare_node_write(self, df: DataFrame, spec: DatasetSpec):
         """(kept_df, finish) — expectation metrics and the output row
@@ -366,8 +367,8 @@ class Pipeline:
 
         ``fail``-mode expectations are a row-level ``raise_error`` guard
         on the kept frame (:func:`fail_guard`): the FIRST violating row
-        aborts the write action itself — no eager pre-scan, and with a
-        transactional sink (VersionedTable commit log, Delta) nothing is
+        aborts the write action itself — no eager pre-scan, and since
+        the VersionedTable commit follows the write, nothing is
         published.  Callers translate the guard's runtime error back to
         :class:`ExpectationFailed` via :func:`_translate_fail_guard`."""
         expectations = spec.expectations
@@ -450,11 +451,10 @@ class Pipeline:
 
         _kept, violating = quarantine_split(df, quarantine)
         if batch_id is not None:
-            # streaming path: key each batch's quarantine rows by a
+            # incremental path: key each batch's quarantine rows by a
             # hive-style batch_id=N subdirectory written with OVERWRITE —
-            # a replayed foreachBatch (checkpoint recovery) rewrites the
-            # same directory instead of double-appending, giving the
-            # side table the same exactly-once guarantee as the main sink
+            # a retried batch gets the same id and rewrites the same
+            # directory instead of double-appending
             violating.write.mode("overwrite").parquet(
                 f"{self._quarantine_dir(spec.name)}/batch_id={batch_id}"
             )
@@ -467,92 +467,67 @@ class Pipeline:
         return spark.read.parquet(self._quarantine_dir(name))
 
     def _run_incremental(self, spark: SparkSession, spec: DatasetSpec):
-        """availableNow streaming append with per-batch expectations via
-        foreachBatch (bounded, deterministic — ST6)."""
-        sql = spec.sql or ""
+        """One batch append per run (ST6).  The batch and the input it
+        consumed — the landing files it loaded, and the upstream version
+        each ``STREAM(live.x)`` read up to — publish as one commit of the
+        node's VersionedTable (``txn``), so a run that fails before the
+        commit leaves nothing visible and its retry reads the same input
+        again.  A run with no new input writes nothing and starts no
+        Spark job.  Returns ``(rows_appended, expectation_metrics)``."""
+        from dataengineeringworkshop_spark.sqlcompat import _split_literals
+
+        table = open_table(spark, self._incr_dir(spec.name))
+        txns = table.txns()
+        consumed = txns[-1].get("sources", {}) if txns else {}
+        sources: dict[str, int] = {}
+
+        def stream_view(m: re.Match) -> str:
+            name = m.group(1)
+            if self._spec(name).kind != "incremental_table":
+                raise ValueError(f"STREAM(live.{name}) requires an incremental table")
+            rows, sources[name] = open_table(
+                spark, self._incr_dir(name)
+            ).appended_since(consumed.get(name))
+            view = self._view_name(name) + "__stream"
+            rows.createOrReplaceTempView(view)
+            return view
+
+        sql = "".join(
+            seg if is_lit else _STREAM_RE.sub(stream_view, seg)
+            for is_lit, seg in _split_literals(spec.sql or "")
+        )
+        txn: dict = {"sources": sources} if sources else {}
         cf = _CLOUD_FILES_RE.search(sql)
         if cf:
-            src_dir, fmt = cf.group(1), cf.group(2)
             from dataengineeringworkshop_spark.streaming.autoingest import AutoIngest
 
             ai = AutoIngest(
-                source_dir=src_dir,
+                source_dir=cf.group(1),
                 checkpoint_dir=self._chk_dir(spec.name),
                 target_dir=self._incr_dir(spec.name),
-                fmt=fmt,
+                fmt=cf.group(2),
                 schema_hints=spec.schema_hints,
             )
-            sdf = ai._stream(spark)
-            rest = _CLOUD_FILES_RE.sub("__cloud_files_src", sql)
-            if rest.strip().lower() not in (
-                "select * from __cloud_files_src",
-                "select *  from __cloud_files_src",
-            ):
-                sdf.createOrReplaceTempView("__cloud_files_src")
-                sdf = spark.sql(self._substitute(spark, rest, streaming=True))
-        else:
-            sdf = spark.sql(self._substitute(spark, sql, streaming=True))
-
-        state = {"rows": 0, "metrics": []}
-        expectations = spec.expectations
-        target = self._incr_dir(spec.name)
-
-        has_fail = any(e.mode == "fail" for e in expectations)
-
-        def handle(batch_df: DataFrame, batch_id: int):
-            # metrics + row count observe the ONE write action per batch
-            # (previously an extra .count() re-executed the batch plan)
-            batch_spec = DatasetSpec(
-                name=spec.name, kind="table", expectations=expectations
-            )
-            kept, finish = self._prepare_node_write(batch_df, batch_spec)
-            if has_fail:
-                # the fail guard can abort the write mid-scan; a plain
-                # parquet append would leave the partial batch visible.
-                # Stage the batch and move files in only on success.
-                import shutil
-
-                staging = f"{target}__batch_staging"
-                shutil.rmtree(staging, ignore_errors=True)
-                try:
-                    kept.write.mode("overwrite").parquet(staging)
-                except Exception as ex:  # noqa: BLE001
-                    from dataengineeringworkshop_spark.tables.staging import (
-                        remove_staged_dir,
-                    )
-
-                    remove_staged_dir(staging)
-                    _translate_fail_guard(spec.name, ex)
-                os.makedirs(target, exist_ok=True)
-                for f in os.listdir(staging):
-                    if f.endswith(".parquet"):
-                        os.rename(f"{staging}/{f}", f"{target}/{f}")
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                kept.write.mode("append").parquet(target)
-            # quarantine AFTER the (possibly guarded) main write, keyed
-            # by batch_id so a checkpoint replay is idempotent
-            self._write_quarantine(batch_df, batch_spec, batch_id=batch_id)
-            cnt, metrics = finish()
-            state["metrics"] = _merge_metrics(state["metrics"], metrics)
-            state["rows"] += cnt
-
-        q = (
-            sdf.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", self._chk_dir(spec.name))
-            .trigger(availableNow=True)
-            .start()
-        )
+            txn["files"] = ai._new_files(table)
+        if table.exists() and sources == consumed and not txn.get("files"):
+            return 0, []
+        if cf:
+            ai._parse(spark, txn["files"]).createOrReplaceTempView("__cloud_files_src")
+            sql = _CLOUD_FILES_RE.sub("__cloud_files_src", sql)
+        df = spark.sql(self._substitute(spark, sql))
+        kept, finish = self._prepare_node_write(df, spec)
+        # quarantine rows publish with the batch: written after the
+        # guarded data write, before the commit, under an id a retry of
+        # this batch reproduces
+        batch_id = len(txns)
         try:
-            q.awaitTermination()
+            table.write(
+                kept, mode="append", txn=txn,
+                precommit=lambda: self._write_quarantine(df, spec, batch_id=batch_id),
+            )
         except Exception as ex:  # noqa: BLE001
             _translate_fail_guard(spec.name, ex)
-        os.makedirs(target, exist_ok=True)
-        if not any(f.endswith(".parquet") for f in _walk_files(target)):
-            # no data yet: materialize an empty frame with the right schema
-            empty = spark.createDataFrame([], sdf.schema)
-            empty.write.mode("append").parquet(target)
-        return state["rows"], state["metrics"]
+        return finish()
 
     @staticmethod
     def _emit(fh, event_type: str, flow_name: str, details: dict) -> None:
@@ -576,14 +551,9 @@ def _translate_fail_guard(node_name: str, ex: Exception) -> None:
     API-level :class:`ExpectationFailed`; anything else propagates
     unchanged."""
     msg = str(ex)
-    # two spellings, both carrying the unique sentinel token so an
-    # unrelated failure whose message merely echoes "ON VIOLATION FAIL
-    # UPDATE" (user data, a user raise_error) is NEVER mis-wrapped:
-    # the guard's own raise_error text (batch write actions), and an
-    # already-translated ExpectationFailed re-wrapped by the streaming
-    # engine (foreachBatch exceptions surface as StreamingQueryException
-    # with the Python traceback in the message — we re-emit the sentinel
-    # in our message below so the outer translation still matches).
+    # match the guard's unique sentinel token, so an unrelated failure
+    # whose message merely echoes "ON VIOLATION FAIL UPDATE" (user data,
+    # a user raise_error) is NEVER mis-wrapped
     from dataengineeringworkshop_spark.operators.expectations import (
         FAIL_SENTINEL,
         FAIL_SENTINEL_END,
@@ -616,25 +586,3 @@ def _flow_progress_details(n: int, metrics: list[dict]) -> dict:
             "expectations": metrics,
         },
     }
-
-
-def _merge_metrics(acc: list[dict], new: list[dict]) -> list[dict]:
-    by = {m["name"]: dict(m) for m in acc}
-    for m in new:
-        if m["name"] in by:
-            for k in (
-                "passed_records",
-                "failed_records",
-                "dropped_records",
-                "quarantined_records",
-            ):
-                by[m["name"]][k] += m[k]
-        else:
-            by[m["name"]] = dict(m)
-    return list(by.values())
-
-
-def _walk_files(root: str):
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            yield os.path.join(dirpath, f)

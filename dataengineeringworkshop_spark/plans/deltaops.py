@@ -386,10 +386,7 @@ def vt_dv_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops routing."""
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_dvsql_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_dvsql_"), spark=spark)
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
     )
@@ -640,12 +637,7 @@ def vt_sql_dml_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation) rows; the oracle recomputes every step relationally."""
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    # pinned to the versioned backend: the oracle asserts VersionedTable
-    # history op names, which must not flip if delta-spark appears
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_sqldml_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_sqldml_"), spark=spark)
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
     )
@@ -759,12 +751,7 @@ def vt_maintenance_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta contract) while the restored snapshot still reads in full."""
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    # pinned: the oracle asserts version-count VACUUM semantics and
-    # VersionedTable op names (Delta's differ)
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_maint_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_maint_"), spark=spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     lh.create_table("maint_orders", o)  # v0
     lh.sql(  # v1
@@ -894,10 +881,7 @@ def vt_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-level aggregate, not a self-join."""
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_fullsync_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_fullsync_"), spark=spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",
@@ -990,10 +974,7 @@ def vt_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     METADATA-only change for untouched files."""
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_schemaevo_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_schemaevo_"), spark=spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",

@@ -179,7 +179,10 @@ def cp_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equals the rn=1 row), but the aggregate gets a map-side partial
     # pass — duplicate texts collapse BEFORE the exchange — and skips
     # the window's per-partition sort (round-14 A/B: 0.82x; guide §2.3
-    # "aggregate before you shuffle")
+    # "aggregate before you shuffle").  Assumes doc_id is never NULL:
+    # min_by skips a NULL ordering key, where the window (and the
+    # oracle) would order it first; the generated documents hold none
+    # (tests/test_review_fixes.py).
     p.table(
         "deduped",
         """
@@ -406,10 +409,10 @@ def pl_event_log_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "ext-corpus", "ST-incremental", "E2"),
 )
 def cp_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus build in STREAMING form — how a production ingest
+    """The corpus build in INCREMENTAL form — how a production ingest
     actually runs: documents land as JSON files, an incremental
     cloud_files bronze picks up only unseen files (exactly-once via the
-    stream checkpoint), the gate is an incremental node whose
+    loaded-file set its commits record), the gate is an incremental node whose
     too-short documents are QUARANTINED (not lost) and wrong-language
     ones dropped, and gold fully recomputes per run.  The query lands
     the corpus in TWO batches with a pipeline run after each; the final

@@ -184,10 +184,7 @@ def tj_sessionize_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_sess_sql_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_sess_sql_"), spark=spark)
     load_table(spark, sf_dir, "events").createOrReplaceTempView(
         "dew_sess_events_src"
     )
@@ -259,10 +256,7 @@ def tj_asof_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_asof_sql_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_asof_sql_"), spark=spark)
     load_table(spark, sf_dir, "events").createOrReplaceTempView(
         "dew_asof_events_src"
     )
@@ -328,10 +322,7 @@ def tj_range_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dataengineeringworkshop_spark.engine import Lakehouse
 
-    lh = Lakehouse(
-        tempfile.mkdtemp(prefix="dew_range_sql_"), spark=spark,
-        table_backend="versioned",
-    )
+    lh = Lakehouse(tempfile.mkdtemp(prefix="dew_range_sql_"), spark=spark)
     load_table(spark, sf_dir, "events").createOrReplaceTempView(
         "dew_range_events_src"
     )

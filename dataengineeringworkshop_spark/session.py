@@ -87,9 +87,14 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     Gated per session object: every entry point calls this on every
     table load, and each ``conf.set`` is a py4j round-trip — re-asserting
     identical values tens of times per query is measurable driver
-    overhead (round-14).  Nothing in the repo or the driver contract
-    mutates these five confs after a session is handed to us, so the
-    first successful pass is authoritative for that session."""
+    overhead (round-14).  The first successful pass is therefore
+    authoritative for that session: a conf a caller changes afterwards
+    keeps the caller's value on every later call.  That is how
+    ``scripts/sweep_oracles.py --aqe-off`` works — it sets
+    ``spark.sql.adaptive.enabled=false`` after ``get_spark()`` and AQE
+    stays off for the whole sweep.  A caller that wants the defaults
+    re-asserted resets the gate with ``del spark._dew_defaults_ok``;
+    the next call sets them all again."""
     if getattr(spark, "_dew_defaults_ok", False):
         _ship_package(spark)  # self-gated
         return spark

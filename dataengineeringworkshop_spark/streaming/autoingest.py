@@ -2,41 +2,39 @@
 §2.11 ST1-ST4, §1.2).
 
 The reference ingests with Databricks Auto Loader
-(`2 Medaillon architecture.py:262-274`):
-
-    spark.readStream.format('cloudFiles')
-      .option('cloudFiles.format', 'json')
-      .option('cloudFiles.schemaHints', 'ts long, exported_ts long, SaleID string')
-      .option('cloudFiles.schemaLocation', chkpt)
-      .load(path)
-      .withColumn('file_path', input_file_name())
-      .withColumn('inserted_at', current_timestamp())
-      .writeStream.option('checkpointLocation', chkpt)
-      .option('mergeSchema', 'true').table('bronze_sales')
+(`2 Medaillon architecture.py:262-274`): a ``cloudFiles`` stream over
+the landing directory with ``cloudFiles.format=json``, the schema hints
+``ts long, exported_ts long, SaleID string`` and a ``schemaLocation``,
+adds ``file_path`` (``input_file_name()``) and ``inserted_at``
+(``current_timestamp()``), and appends to ``bronze_sales`` with
+``mergeSchema``.
 
 OSS mapping implemented here:
-- **Incremental discovery / exactly-once** (ST1-ST2): Structured Streaming
-  file source + checkpoint — built-in.
+- **Incremental discovery / exactly-once** (ST1-ST2): the target is a
+  :class:`~dataengineeringworkshop_spark.tables.versioned.VersionedTable`
+  whose commits record the source files they loaded (``COPY INTO``'s
+  loaded-file set, kept in the commit's ``txn``).  A run lists the
+  source directory, subtracts the loaded files, parses the rest in one
+  batch and appends them as one commit.  Data and progress publish
+  together: a run that fails before its commit leaves nothing visible,
+  and the retry loads the same files again.
 - **Schema inference + hints** (§1.2): infer once from existing files
   (batch sample), override hinted fields, persist the resolved schema JSON
-  next to the checkpoint (``_dew_schema.json``) so later runs reuse it
-  without re-inference — Auto Loader's schemaLocation behavior.  The
-  sink's own schema is persisted too (``_dew_sink_schema.json``), and
-  batch reads of the target scan with it.
+  in the checkpoint directory (``_dew_schema.json``) so later runs reuse
+  it without re-inference — Auto Loader's schemaLocation behavior.  The
+  table's own schema lives in its commit log, widened by append schema
+  evolution when a run writes more columns.
 - **Rescued data** (ST3): every ingested file line is ALSO parsed as loose
   strings; fields that fail the typed parse but exist in the raw record
   land in a ``_rescued_data`` JSON-string column (field-level rescue via
   built-in map functions — no Python UDF).
 - **Provenance columns**: file_path + inserted_at, like the reference.
 
-Sink: parquet-append directory or a VersionedTable (mergeSchema-style
-evolution by null-filling new columns).  ``run_once`` uses
-``trigger(availableNow=True)`` for deterministic, bounded runs (ST6);
-``run_continuous`` starts the long-lived micro-batch loop.
+``run_once`` is the triggered mode (ST6): bounded and deterministic.
 
-Scale posture: file listing + checkpoint state are Spark-managed; the
-double parse is a narrow map (no shuffle); schema objects are tiny driver
-metadata.
+Scale posture: the listing and the loaded-file set are driver-side
+metadata (one name per file); the double parse is a narrow map (no
+shuffle); a run with no new file starts no Spark job.
 """
 
 from __future__ import annotations
@@ -46,10 +44,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 from dataengineeringworkshop_spark.session import ensure_session_defaults
+from dataengineeringworkshop_spark.tables.versioned import VersionedTable
 
 
 def merge_schema_hints(inferred: StructType, hints_ddl: str | None) -> StructType:
@@ -79,18 +77,12 @@ def merge_schema_hints(inferred: StructType, hints_ddl: str | None) -> StructTyp
 
 
 class AutoIngest:
-    """Incremental JSON/CSV directory → table, with schema tracking and
-    rescued data.
+    """Incremental JSON/CSV directory → versioned table, with schema
+    tracking and rescued data.
 
-    Two schemas live next to the checkpoint: ``_dew_schema.json`` (the
-    resolved SOURCE schema, inferred once + hints) and
-    ``_dew_sink_schema.json`` (the exact schema the sink writes:
-    the typed fields plus ``_rescued_data`` / ``file_path`` /
-    ``inserted_at`` as this ingest's flags produce them), recorded when
-    a run starts.  :meth:`read_target` scans the sink with the latter,
-    so a batch read of bronze never re-infers over a directory that
-    grows every cycle; checkpoints without the record fall back to
-    inference."""
+    ``checkpoint_dir`` holds only the resolved SOURCE schema
+    (``_dew_schema.json``, inferred once + hints); ``target_dir`` is a
+    VersionedTable whose commits list the files they loaded."""
 
     def __init__(
         self,
@@ -132,41 +124,35 @@ class AutoIngest:
             json.dump(resolved.jsonValue(), f)
         return resolved
 
-    @property
-    def _sink_schema_file(self) -> str:
-        return os.path.join(self.checkpoint_dir, "_dew_sink_schema.json")
-
-    def _sink_schema(self) -> StructType | None:
-        if not os.path.exists(self._sink_schema_file):
-            return None
-        with open(self._sink_schema_file) as f:
-            return StructType.fromJson(json.load(f))
-
-    def _persist_sink_schema(self, schema: StructType) -> None:
-        """Record the schema the sink writes.  A later run whose sink
-        gains columns (different flags on the same checkpoint) widens
-        the record; none is ever dropped, since earlier files hold it."""
-        known = self._sink_schema()
-        if known is not None:
-            names = {f.name for f in known.fields}
-            added = [f for f in schema.fields if f.name not in names]
-            if not added:
-                return
-            schema = StructType(known.fields + added)
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        with open(self._sink_schema_file, "w") as f:
-            json.dump(schema.jsonValue(), f)
-
     # ------------------------------------------------------------ plan
 
-    def _stream(self, spark: SparkSession) -> DataFrame:
+    def _new_files(self, table: VersionedTable) -> list[str]:
+        """Names of the files directly in ``source_dir`` that no commit
+        of ``table`` loaded, sorted.  Spark's hidden-file rule applies:
+        names starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc``
+        checksums) and in-flight ``._COPYING_`` uploads are never
+        loaded."""
+        loaded = {f for t in table.txns() for f in t.get("files", ())}
+        return sorted(
+            e.name
+            for e in os.scandir(self.source_dir)
+            if e.is_file()
+            and not e.name.startswith(("_", "."))
+            and not e.name.endswith("._COPYING_")
+            and e.name not in loaded
+        )
+
+    def _parse(self, spark: SparkSession, names: list[str]) -> DataFrame:
+        """The typed + rescue + provenance plan over the given files of
+        ``source_dir``."""
         ensure_session_defaults(spark)
         schema = self.resolve_schema(spark)
+        paths = [os.path.join(self.source_dir, n) for n in names]
         if self.fmt in ("json", "csv"):
             # read raw lines so the typed parse and the rescue parse see the
             # exact same record text; for CSV the (exact-match) header line
             # is filtered before parsing
-            raw = spark.readStream.schema("value string").text(self.source_dir)
+            raw = spark.read.schema("value string").text(paths)
             if self.fmt == "csv":
                 ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
                 loose_ddl = ", ".join(f"{f.name} string" for f in schema.fields)
@@ -234,10 +220,9 @@ class AutoIngest:
                 df = typed.select(*cols)
         else:
             # binary/columnar formats (parquet, orc) enforce their schema at
-            # write time — there is nothing to rescue; the column is kept
-            # for sink-schema stability but is always null
-            reader = spark.readStream.schema(schema)
-            df = getattr(reader, self.fmt)(self.source_dir)
+            # write time — there is nothing to rescue; the column is kept,
+            # always null, so every format gives the same table schema
+            df = getattr(spark.read.schema(schema), self.fmt)(*paths)
             if self.rescue:
                 df = df.withColumn("_rescued_data", F.lit(None).cast("string"))
         if self.provenance:
@@ -248,31 +233,19 @@ class AutoIngest:
 
     # ------------------------------------------------------------- run
 
-    def _writer(self, spark: SparkSession) -> DataStreamWriter:
-        """The parquet sink writer, after recording the schema it writes."""
-        stream = self._stream(spark)
-        self._persist_sink_schema(stream.schema)
-        return (
-            stream.writeStream.format("parquet")
-            .option("path", self.target_dir)
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-
     def run_once(self, spark: SparkSession) -> None:
-        """Process all currently-unseen files, then stop (ST6 triggered
-        mode; deterministic for tests/CI)."""
-        self._writer(spark).trigger(availableNow=True).start().awaitTermination()
-
-    def run_continuous(self, spark: SparkSession) -> StreamingQuery:
-        """Long-lived micro-batch loop (ST4: caller polls .isActive /
-        .stop(), N2:479-482, 609)."""
-        return self._writer(spark).start()
+        """Load every file no earlier run loaded as ONE append commit
+        that also records their names (ST6 triggered mode; deterministic
+        for tests/CI).  With no new file it commits nothing and starts
+        no Spark job."""
+        table = VersionedTable(spark, self.target_dir)
+        names = self._new_files(table)
+        if names:
+            table.write(
+                self._parse(spark, names), mode="append", txn={"files": names}
+            )
 
     def read_target(self, spark: SparkSession) -> DataFrame:
-        """Batch read of the sink, scanned with the persisted sink
-        schema (no inference job); inference only for a checkpoint that
-        predates the record."""
-        schema = self._sink_schema()
-        if schema is None:
-            return spark.read.option("mergeSchema", "true").parquet(self.target_dir)
-        return spark.read.schema(schema).parquet(self.target_dir)
+        """Snapshot read of the target table (schema from its commit
+        log; planning starts no Spark job)."""
+        return VersionedTable(spark, self.target_dir).read()

@@ -1,275 +1,19 @@
-"""Versioned-table backend seam.
+"""Opening a table by path.
 
-The engine's table DML surface — write / snapshot read / time travel /
-MERGE / UPDATE / DELETE / OPTIMIZE / ADD COLUMN / history — is the
-:class:`TableBackend` protocol.  Two implementations:
-
-- :class:`~dataengineeringworkshop_spark.tables.versioned.VersionedTable`
-  — parquet + JSON commit log, always available; what this container
-  runs (the ``delta-spark`` wheel is not installed here — documented
-  deviation, see README).
-- :class:`DeltaBackend` (this module) — a thin adapter over
-  ``delta.tables.DeltaTable``, selected automatically by
-  :func:`open_table` when ``delta-spark`` is importable.  On a real
-  cluster (reference: `1 Data ingestion.py:127-130`,
-  ``CREATE TABLE … USING DELTA``) this backend gives ACID commits,
-  concurrent writers, and file-stats skipping from Delta itself.
-
-Callers that depend only on :func:`open_table` + the protocol (the
-pipeline runner, the ``vt_*`` plan queries via ``VersionedTable``
-directly) can switch backends without code changes.
+Every table the engine writes is a
+:class:`~dataengineeringworkshop_spark.tables.versioned.VersionedTable`
+(parquet + JSON commit log).  :func:`open_table` refuses a directory
+that holds a Delta Lake log instead, so a workspace of Delta tables is
+never silently forked into a second history.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Protocol, runtime_checkable
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-if TYPE_CHECKING:  # pragma: no cover
-    pass
-
-
-@runtime_checkable
-class TableBackend(Protocol):
-    """The DML surface every table backend provides (SURVEY §2.10)."""
-
-    def exists(self) -> bool: ...
-
-    def write(self, df: DataFrame, mode: str = "overwrite") -> "TableBackend": ...
-
-    def read(self, version: int | None = None) -> DataFrame: ...
-
-    def update(
-        self,
-        set_exprs: dict[str, str],
-        condition: str | None = None,
-        mode: str | None = None,
-    ) -> None: ...
-
-    def delete(self, condition: str, mode: str | None = None) -> None: ...
-
-    def merge(
-        self,
-        source: DataFrame,
-        on: str,
-        update_condition: str | None = None,
-        insert: bool = True,
-        update: bool = True,
-        unmatched_by_source_action: str | None = None,
-        unmatched_by_source_condition: str | None = None,
-        unmatched_by_source_set: dict[str, str] | None = None,
-        schema_evolution: bool = False,
-        mode: str | None = None,
-    ) -> None: ...
-
-    def optimize(self, zorder_by: list[str] | None = None, target_files: int = 4) -> None: ...
-
-    def reorg_purge(self, threshold: float = 0.0) -> None: ...
-
-    def restore(self, version: int) -> None: ...
-
-    def shallow_clone(self, target_path: str, version: int | None = None): ...
-
-    def vacuum(self, retain_last: int = 1) -> list[str]: ...
-
-    def add_column(self, name: str, dtype: str) -> None: ...
-
-    def history(self) -> DataFrame: ...
-
-    def set_properties(self, props: dict[str, str]) -> None: ...
-
-    def properties(self) -> dict[str, str]: ...
-
-
-def delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class DeltaBackend:
-    """``TableBackend`` over delta-spark (unused in this container —
-    delta-spark is not installed; the adapter exists so a cluster deploy
-    swaps backends at :func:`open_table` without touching callers)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    def _dt(self):
-        from delta.tables import DeltaTable
-
-        return DeltaTable.forPath(self.spark, self.path)
-
-    def exists(self) -> bool:
-        from delta.tables import DeltaTable
-
-        return DeltaTable.isDeltaTable(self.spark, self.path)
-
-    def write(self, df: DataFrame, mode: str = "overwrite") -> "DeltaBackend":
-        # overwrite = full CREATE OR REPLACE recompute (the runner's
-        # documented semantics, matching VersionedTable): the committed
-        # schema becomes EXACTLY df's schema — overwriteSchema, not
-        # mergeSchema, which would keep dropped columns alive as nulls.
-        # append keeps mergeSchema (additive evolution, streaming sink).
-        w = df.write.format("delta").mode(mode)
-        if mode == "overwrite":
-            w = w.option("overwriteSchema", "true")
-        else:
-            w = w.option("mergeSchema", "true")
-        w.save(self.path)
-        return self
-
-    def read(self, version: int | None = None) -> DataFrame:
-        r = self.spark.read.format("delta")
-        if version is not None:
-            r = r.option("versionAsOf", version)
-        return r.load(self.path)
-
-    def update(
-        self,
-        set_exprs: dict[str, str],
-        condition: str | None = None,
-        mode: str | None = None,
-    ) -> None:
-        self._mode_guard(mode)
-        self._dt().update(condition=condition, set=set_exprs)
-
-    def delete(self, condition: str, mode: str | None = None) -> None:
-        self._mode_guard(mode)
-        self._dt().delete(condition)
-
-    @staticmethod
-    def _mode_guard(mode: str | None) -> None:
-        if mode is not None:
-            # Delta chooses merge-on-read vs copy-on-write from the
-            # delta.enableDeletionVectors table property; a per-statement
-            # storage-mode override does not exist in delta-spark
-            raise NotImplementedError(
-                "DeltaBackend cannot force a per-statement DML mode; set "
-                "TBLPROPERTIES ('delta.enableDeletionVectors'='true'|'false') "
-                "on the table instead"
-            )
-
-    def merge(
-        self,
-        source: DataFrame,
-        on: str,
-        update_condition: str | None = None,
-        insert: bool = True,
-        update: bool = True,
-        unmatched_by_source_action: str | None = None,
-        unmatched_by_source_condition: str | None = None,
-        unmatched_by_source_set: dict[str, str] | None = None,
-        schema_evolution: bool = False,
-        mode: str | None = None,
-    ) -> None:
-        # Full MERGE surface, same signature as VersionedTable.merge —
-        # the SQL dispatcher (sqldml.py) always passes every kwarg, so
-        # this adapter must accept them all or every SQL MERGE breaks
-        # on a delta-spark deployment.
-        if unmatched_by_source_action not in (None, "delete", "update"):
-            raise ValueError(
-                "unmatched_by_source_action must be None, 'delete' or 'update'"
-            )
-        if mode is not None:
-            # Delta chooses merge-on-read vs copy-on-write from the
-            # delta.enableDeletionVectors table property; a per-statement
-            # storage-mode override does not exist in delta-spark, so
-            # refuse rather than silently ignore the request.
-            raise NotImplementedError(
-                "DeltaBackend cannot force a per-statement DML mode; set "
-                "TBLPROPERTIES ('delta.enableDeletionVectors'='true'|'false') "
-                "on the table instead"
-            )
-        m = self._dt().alias("t").merge(source.alias("s"), on)
-        if schema_evolution:
-            m = m.withSchemaEvolution()
-        if update:
-            m = m.whenMatchedUpdateAll(condition=update_condition)
-        if insert:
-            m = m.whenNotMatchedInsertAll()
-        if unmatched_by_source_action == "delete":
-            m = m.whenNotMatchedBySourceDelete(
-                condition=unmatched_by_source_condition
-            )
-        elif unmatched_by_source_action == "update":
-            m = m.whenNotMatchedBySourceUpdate(
-                condition=unmatched_by_source_condition,
-                set=unmatched_by_source_set,
-            )
-        m.execute()
-
-    def optimize(self, zorder_by: list[str] | None = None, target_files: int = 4) -> None:
-        opt = self._dt().optimize()
-        if zorder_by:
-            opt.executeZOrderBy(*zorder_by)
-        else:
-            opt.executeCompaction()
-
-    def reorg_purge(self, threshold: float = 0.0) -> None:
-        if threshold:
-            # Delta's REORG statement has no fraction gate; refuse
-            # rather than silently purging more than asked
-            raise NotImplementedError(
-                "Delta REORG APPLY (PURGE) has no threshold form; "
-                "use threshold=0.0 or Delta's own maintenance jobs"
-            )
-        self.spark.sql(f"REORG TABLE delta.`{self.path}` APPLY (PURGE)")
-
-    def restore(self, version: int) -> None:
-        self.spark.sql(
-            f"RESTORE TABLE delta.`{self.path}` TO VERSION AS OF {version}"
-        )
-
-    def shallow_clone(self, target_path: str, version: int | None = None):
-        ver = f" VERSION AS OF {version}" if version is not None else ""
-        self.spark.sql(
-            f"CREATE TABLE delta.`{target_path}` "
-            f"SHALLOW CLONE delta.`{self.path}`{ver}"
-        )
-        return DeltaBackend(self.spark, target_path)
-
-    def vacuum(self, retain_last: int = 1) -> list[str]:
-        # Delta's VACUUM retention is hours-based; a version-count
-        # request cannot be honored faithfully — refuse instead of
-        # silently running something semantically different.
-        raise NotImplementedError(
-            "DeltaBackend cannot map 'RETAIN n VERSIONS' onto Delta's "
-            "hours-based VACUUM; run Delta's own VACUUM statement with "
-            "a RETAIN ... HOURS clause instead"
-        )
-
-    def add_column(self, name: str, dtype: str) -> None:
-        self.spark.sql(
-            f"ALTER TABLE delta.`{self.path}` ADD COLUMNS ({name} {dtype})"
-        )
-
-    def history(self) -> DataFrame:
-        return self._dt().history()
-
-    def set_properties(self, props: dict[str, str]) -> None:
-        # escape embedded single quotes — a quote-bearing key/value must
-        # not break the statement or inject SQL into the session
-        def q(s: str) -> str:
-            return str(s).replace("'", "''")
-
-        pairs = ", ".join(f"'{q(k)}' = '{q(v)}'" for k, v in props.items())
-        self.spark.sql(
-            f"ALTER TABLE delta.`{self.path}` SET TBLPROPERTIES ({pairs})"
-        )
-
-    def properties(self) -> dict[str, str]:
-        return {
-            r["key"]: r["value"]
-            for r in self.spark.sql(
-                f"SHOW TBLPROPERTIES delta.`{self.path}`"
-            ).collect()
-        }
+from dataengineeringworkshop_spark.tables.versioned import _LOG_DIR, VersionedTable
 
 
 def _is_local_path(path: str) -> bool:
@@ -281,46 +25,20 @@ def _is_local_path(path: str) -> bool:
     return scheme in ("", "file")
 
 
-def open_table(spark: SparkSession, path: str, backend: str | None = None):
-    """Open (or create-on-first-write) a versioned table at ``path``.
+def open_table(spark: SparkSession, path: str) -> VersionedTable:
+    """Open (or create-on-first-write) the versioned table at ``path``.
 
-    ``backend``: ``"delta"`` / ``"versioned"`` force a choice.  With
-    ``None``, an EXISTING table keeps the format already on disk
-    (``_delta_log`` → Delta, ``_dew_log`` → VersionedTable) — installing
-    delta-spark must not break a workspace of previously-written
-    parquet+commit-log tables, nor vice versa — and a fresh path picks
-    Delta when delta-spark is importable, else VersionedTable.
-
-    Sniffing caveats (deliberate, documented):
-
-    - Sniffing is LOCAL-FILESYSTEM ONLY (``os.path``).  For remote URIs
-      the existing-format check is skipped and the default-backend rule
-      applies; pass ``backend=`` explicitly there (wiring Hadoop FS
-      listing through the JVM is the cluster-deploy follow-up).
-    - A ``_delta_log`` found WITHOUT delta-spark importable raises
-      instead of silently opening a VersionedTable: a fall-through would
-      start a second ``_dew_log`` history beside the Delta one and fork
-      the table into two divergent timelines."""
-    import os
-
-    if backend not in (None, "delta", "versioned"):
-        raise ValueError(f"unknown backend {backend!r}")
-    from dataengineeringworkshop_spark.tables.versioned import _LOG_DIR, VersionedTable
-
-    if backend is None and _is_local_path(path):
+    A local directory with a ``_delta_log`` and no ``_dew_log`` raises
+    instead of opening: writing would start a second ``_dew_log``
+    history beside the Delta one and fork the table into two divergent
+    timelines.  Sniffing is LOCAL-FILESYSTEM ONLY (``os.path``); remote
+    URIs open without the check."""
+    if _is_local_path(path):
         p = path.rstrip("/").removeprefix("file://").removeprefix("file:")
-        if os.path.isdir(f"{p}/{_LOG_DIR}"):
-            return VersionedTable(spark, path)
-        if os.path.isdir(f"{p}/_delta_log"):
-            if delta_available():
-                return DeltaBackend(spark, path)
+        if not os.path.isdir(f"{p}/{_LOG_DIR}") and os.path.isdir(f"{p}/_delta_log"):
             raise RuntimeError(
-                f"table at {path} has a _delta_log but delta-spark is not "
-                "importable; refusing to open it as a parquet+commit-log "
-                "table (writing would fork the history into a second, "
-                "divergent _dew_log).  Install delta-spark or pass "
-                "backend='versioned' explicitly to override."
+                f"table at {path} has a _delta_log; refusing to open it as "
+                "a parquet+commit-log table (writing would fork the history "
+                "into a second, divergent _dew_log)"
             )
-    if backend == "delta" or (backend is None and delta_available()):
-        return DeltaBackend(spark, path)
     return VersionedTable(spark, path)

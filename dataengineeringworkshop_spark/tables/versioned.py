@@ -32,8 +32,12 @@ bounded by file count — exactly what Delta's driver does when planning a
 rewrite), never row data.  The transaction log is tiny JSON driver-side
 metadata, like Delta's _delta_log.
 
-Single-writer semantics (commits are atomic via rename); the workshop's
-workloads are single-writer.
+Commits publish put-if-absent (a hard link of the finished log file):
+a writer that computed a version another writer already published gets
+:class:`CommitConflictError` instead of replacing that commit.  Data
+directories are written before their commit, so a writer that dies in
+between leaves an unreferenced directory that no snapshot reads and
+``vacuum`` removes.
 
 Reference cites: MERGE `2 Medaillon architecture.py:534-540`; UPDATE
 `1 Data ingestion.py:151-172`, `2 Medaillon architecture.py:511-518`;
@@ -54,6 +58,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LOG_DIR = "_dew_log"
+
+
+class CommitConflictError(RuntimeError):
+    """The version a commit was about to publish already exists."""
+
+
+class SourceChangedError(RuntimeError):
+    """An incremental reader found a commit that removed or rewrote data
+    it may already have consumed (Delta's streaming source raises the
+    same unless ``skipChangeCommits`` is set)."""
 
 
 @dataclass
@@ -177,10 +191,21 @@ class VersionedTable:
             properties=props,
         )
         os.makedirs(f"{self.path}/{_LOG_DIR}", exist_ok=True)
-        tmp = self._log_path(version) + f".tmp-{uuid.uuid4().hex}"
+        final = self._log_path(version)
+        tmp = final + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(c.__dict__, f)
-        os.rename(tmp, self._log_path(version))  # atomic publish
+        # put-if-absent publish: link() fails when the version exists,
+        # where rename() would silently replace another writer's commit
+        try:
+            os.link(tmp, final)
+        except FileExistsError:
+            raise CommitConflictError(
+                f"{self.path}: version {version} was committed by another "
+                "writer"
+            ) from None
+        finally:
+            os.remove(tmp)
         return c
 
     def _new_data_dir(self, version: int, dv: bool = False) -> str:
@@ -188,12 +213,9 @@ class VersionedTable:
 
     # ---------------------------------------------------------------- write
 
-    # the commit-log format lets a caller interpose between the data
-    # write and the log append (transactional fail-mode expectations)
-    supports_precommit = True
-
     def write(
-        self, df: DataFrame, mode: str = "overwrite", precommit=None
+        self, df: DataFrame, mode: str = "overwrite", precommit=None,
+        txn: dict | None = None,
     ) -> "VersionedTable":
         """CTAS / saveAsTable parity (S5-S6).  mode: overwrite | append.
 
@@ -201,6 +223,12 @@ class VersionedTable:
         new fields) so a narrower batch cannot silently drop columns from
         subsequent snapshot reads; a type conflict on a shared column
         raises instead of corrupting.
+
+        ``txn``: the writer's progress, recorded in the commit's
+        ``operation_params["txn"]`` (Delta's ``txn`` action; see
+        :meth:`txns`).  Data and progress publish in the same commit, so
+        an incremental writer that fails before the commit re-reads the
+        same input on retry and never appends it twice.
 
         ``precommit``: optional callable invoked AFTER the data write but
         BEFORE the commit-log append.  If the write action itself fails
@@ -249,8 +277,11 @@ class VersionedTable:
         else:
             dirs = [rel]
             op = "CREATE TABLE AS SELECT" if prev is None else "WRITE OVERWRITE"
+        params = {"mode": mode}
+        if txn is not None:
+            params["txn"] = txn
         self._commit(
-            op, dirs, schema_ddl, {"mode": mode},
+            op, dirs, schema_ddl, params,
             metrics=self._written_metrics(rel),
             # overwrite replaces the data set wholesale; append's new
             # files have no DV entries, existing ones keep theirs
@@ -336,6 +367,42 @@ class VersionedTable:
             paths = [self._abs(d) for d in c.data_dirs]
         out = self._evolved(paths, c)
         return out.filter(F.expr(where)) if where else out
+
+    def txns(self) -> list[dict]:
+        """The ``txn`` progress records of the commits that carry one,
+        oldest first (see :meth:`write`)."""
+        return [
+            c.operation_params["txn"]
+            for c in self._commits()
+            if "txn" in c.operation_params
+        ]
+
+    def appended_since(self, version: int | None) -> tuple[DataFrame, int]:
+        """(rows appended after ``version``, latest version): the
+        increment an incremental reader that consumed up to ``version``
+        has not seen yet, read with the latest schema.  ``None`` means
+        nothing was consumed, so every current row is new.  Raises
+        :class:`SourceChangedError` when a later commit removed a data
+        file or marked rows deleted, since those rows may already be
+        downstream."""
+        latest = self._resolve_commit(None)
+        if version is None:
+            return self.read(), latest.version
+        seen = self._resolve_commit(version)
+        prev = seen
+        for v in range(version + 1, latest.version + 1):
+            c = self._resolve_commit(v)
+            if not set(prev.data_dirs) <= set(c.data_dirs) or not set(
+                c.dv_dirs or []
+            ) <= set(prev.dv_dirs or []):
+                raise SourceChangedError(
+                    f"{self.path}: version {v} ({c.operation}) removed or "
+                    f"rewrote data appended by version {version} or earlier"
+                )
+            prev = c
+        known = set(seen.data_dirs)
+        new = [self._abs(d) for d in latest.data_dirs if d not in known]
+        return self._evolved(new, latest), latest.version
 
     # scan-side file identity: `_metadata.file_path` with the URI scheme
     # stripped.  Deletion-vector refs are RECORDED with this same

@@ -112,13 +112,13 @@ INVENTORY: list[tuple[str, str]] = [
 # registry query (Delta-style DML, streaming internals) — name the proof.
 NON_QUERY_PROOF = {
     "S4": "tests/test_autoingest.py (incremental exactly-once + rescue)",
-    "S7": "tests/test_autoingest.py; streaming/autoingest.py sink",
+    "S7": "tests/test_autoingest.py; streaming/autoingest.py append commits",
     "ST1": "tests/test_autoingest.py::test_incremental_exactly_once_and_rescue",
-    "ST2": "tests/test_autoingest.py + tests/test_streaming_ext.py (checkpoint recovery)",
+    "ST2": "tests/test_autoingest.py (commit-failure retry) + tests/test_streaming_ext.py (checkpoint recovery)",
     "ST3": "tests/test_autoingest.py (schema hints + _rescued_data)",
-    "ST4": "streaming/autoingest.py run_once/run_continuous + StreamingQuery handles",
+    "ST4": "streaming/apply_changes.py StreamingQuery handle (caller awaits/stops it)",
     "ST5": "tests/test_pipeline.py (stream-fed pipeline nodes)",
-    "ST6": "trigger(availableNow) vs continuous in streaming/autoingest.py",
+    "ST6": "one-batch triggered runs: AutoIngest.run_once, Pipeline.run",
 }
 
 

@@ -69,7 +69,10 @@ def main() -> int:
                     help="prime shuffle partitions + fractured input splits")
     ap.add_argument("--aqe-off", action="store_true",
                     help="disable adaptive query execution — proves no "
-                         "result depends on AQE's runtime re-planning")
+                         "result depends on AQE's runtime re-planning; "
+                         "stays off for the whole session, since "
+                         "ensure_session_defaults asserts its defaults "
+                         "only once per session")
     ap.add_argument("--timeout", type=int, default=300,
                     help="per-query oracle budget in seconds")
     ap.add_argument("--memory-limit", default="16GB")

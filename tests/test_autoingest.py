@@ -130,3 +130,66 @@ def test_repair_scenario_end_to_end(spark, ingest, tmp_path):
     got = silver.read()
     assert got.count() == 6
     assert got.filter(F.col("STATE") == "CANCELED").count() == 3
+
+
+def test_rerun_and_hidden_files_load_nothing(spark, ingest, jobs_started):
+    """Two new files load as one commit in at most one Spark job; the
+    commit records their names, so a re-run commits nothing and starts
+    no job.  Spark's hidden-file rule applies: job markers, checksums
+    and in-flight copies are never loaded."""
+    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
+
+    ai, src = ingest
+    _write_file(src / "a.json", [_sale(i) for i in range(5)])
+    _write_file(src / "b.json", [_sale(i) for i in range(5, 10)])
+    _write_file(src / "_SUCCESS", [])
+    (src / ".a.json.crc").write_text("not json\n")
+    _write_file(src / "c.json._COPYING_", [_sale(99)])
+    ai.resolve_schema(spark)  # first-run inference is its own job
+
+    with jobs_started() as jobs:
+        ai.run_once(spark)
+    assert len(jobs) <= 1
+    table = VersionedTable(spark, ai.target_dir)
+    assert table.txns() == [{"files": ["a.json", "b.json"]}]
+    t = ai.read_target(spark)
+    assert t.count() == 10
+    names = {r.file_path.rsplit("/", 1)[-1] for r in t.select("file_path").collect()}
+    assert names == {"a.json", "b.json"}
+
+    with jobs_started() as jobs:
+        ai.run_once(spark)
+    assert jobs == []
+    assert len(table.txns()) == 1
+
+
+def test_commit_failure_then_retry_loads_every_row_once(spark, ingest, monkeypatch):
+    """A run that dies between the data write and the commit publishes
+    nothing; the retry loads the same files again, every row lands once,
+    and vacuum reclaims the dead run's directory."""
+    import os
+
+    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
+
+    ai, src = ingest
+    _write_file(src / "a.json", [_sale(i) for i in range(6)])
+    real = VersionedTable._commit
+
+    def crash(self, *args, **kwargs):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(VersionedTable, "_commit", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        ai.run_once(spark)
+    monkeypatch.setattr(VersionedTable, "_commit", real)
+    table = VersionedTable(spark, ai.target_dir)
+    assert not table.exists()
+    orphans = [d for d in os.listdir(ai.target_dir) if d.startswith("v")]
+    assert len(orphans) == 1
+
+    ai.run_once(spark)
+    ai.run_once(spark)
+    ids = sorted(r.SaleID for r in ai.read_target(spark).collect())
+    assert ids == [f"sale-{i:04d}" for i in range(6)]
+    table.vacuum()
+    assert orphans[0] not in os.listdir(ai.target_dir)

@@ -1,54 +1,40 @@
-"""The table-backend seam: callers program against TableBackend +
-open_table(); VersionedTable (this container) and DeltaBackend (cluster)
-both satisfy the protocol, and a merge scenario runs through the seam."""
+"""Opening tables by path: open_table() gives the one table format
+(VersionedTable), refuses a Delta Lake log, and a merge scenario runs
+through it."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from dataengineeringworkshop_spark.tables.backend import (
-    DeltaBackend,
-    TableBackend,
-    delta_available,
-    open_table,
-)
+from dataengineeringworkshop_spark.tables.backend import open_table
+from dataengineeringworkshop_spark.tables.versioned import VersionedTable
 from tests.conftest import SF_SMOKE
 
 
 def test_open_table_resolves_here_to_versioned(spark, tmp_path):
-    t = open_table(spark, str(tmp_path / "t"))
-    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
-
-    if delta_available():  # pragma: no cover - not this container
-        assert isinstance(t, DeltaBackend)
-    else:
-        assert isinstance(t, VersionedTable)
-    assert isinstance(t, TableBackend)  # structural protocol check
-
-
-def test_both_backends_satisfy_protocol():
-    # runtime_checkable only inspects attribute presence, so DeltaBackend
-    # conformance is checkable without delta-spark installed
-    for method in (
-        "exists", "write", "read", "update", "delete",
-        "merge", "optimize", "add_column", "history",
-    ):
-        assert callable(getattr(DeltaBackend, method)), method
+    assert isinstance(open_table(spark, str(tmp_path / "t")), VersionedTable)
 
 
 def test_unknown_backend_rejected(spark, tmp_path):
+    from dataengineeringworkshop_spark.engine import Lakehouse
+
     with pytest.raises(ValueError):
-        open_table(spark, str(tmp_path / "t"), backend="iceberg")
+        Lakehouse(str(tmp_path / "lake"), spark=spark, table_backend="iceberg")
+    with pytest.raises(ValueError):
+        Lakehouse(str(tmp_path / "lake"), spark=spark, table_backend="delta")
+    for name in (None, "versioned"):
+        lh = Lakehouse(str(tmp_path / "lake"), spark=spark, table_backend=name)
+        assert isinstance(lh.table("t"), VersionedTable)
 
 
 def test_merge_scenario_through_seam(spark, tmp_path):
     """The reference's medallion MERGE (`2 Medaillon architecture.py:
-    534-540`) driven purely through open_table() + the protocol."""
+    534-540`) driven purely through open_table()."""
     from dataengineeringworkshop_spark.plans.tables import load_table
 
     o = load_table(spark, SF_SMOKE, "orders")
-    t = open_table(spark, str(tmp_path / "orders"), backend="versioned")
+    t = open_table(spark, str(tmp_path / "orders"))
     assert not t.exists()
     t.write(o)
     assert t.exists()
@@ -63,87 +49,34 @@ def test_merge_scenario_through_seam(spark, tmp_path):
                       "o_orderkey").filter(F.col("o_totalprice") != F.col("old"))
     assert bumped.count() == o.filter(F.col("o_orderkey") % 5 == 0).count()
 
-    # time travel + history through the same protocol surface
+    # time travel + history through the same surface
     assert t.read(version=0).exceptAll(o).count() == 0
     ops = [r.operation for r in t.history().collect()]
     assert ops == ["CREATE TABLE AS SELECT", "MERGE"]
 
 
 def test_delta_log_without_delta_spark_raises(spark, tmp_path):
-    """A _delta_log on disk with no delta-spark importable must REFUSE to
-    open (a VersionedTable fall-through would write a second _dew_log
-    beside the Delta history and fork the table into two divergent
-    timelines)."""
-    if delta_available():  # pragma: no cover - not this container
-        pytest.skip("delta-spark installed: the refusal path cannot trigger")
+    """A _delta_log on disk must REFUSE to open (a VersionedTable
+    fall-through would write a second _dew_log beside the Delta history
+    and fork the table into two divergent timelines)."""
     t_dir = tmp_path / "dt"
     (t_dir / "_delta_log").mkdir(parents=True)
     with pytest.raises(RuntimeError, match="_delta_log"):
         open_table(spark, str(t_dir))
-    # the explicit override stays available for disaster recovery
-    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
-
-    assert isinstance(
-        open_table(spark, str(t_dir), backend="versioned"), VersionedTable
-    )
+    # constructing the table directly stays available for disaster recovery
+    VersionedTable(spark, str(t_dir)).write(spark.range(3))
+    # once it has its own log, the table opens
+    assert open_table(spark, str(t_dir)).read().count() == 3
 
 
 def test_remote_uris_are_never_sniffed(spark):
-    """Format sniffing is local-filesystem-only: a remote URI resolves by
-    the default-backend rule without touching os.path (a local-style
-    isdir probe on an s3 URI would silently return False and mask an
-    existing table)."""
+    """Format sniffing is local-filesystem-only: a remote URI opens
+    without touching os.path (a local-style isdir probe on an s3 URI
+    would silently return False and mask an existing table)."""
     from dataengineeringworkshop_spark.tables.backend import _is_local_path
-    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
 
     assert not _is_local_path("s3://bucket/table")
     assert not _is_local_path("hdfs://nn/table")
     assert _is_local_path("/tmp/table")
     assert _is_local_path("file:///tmp/table")
-    t = open_table(spark, "s3://bucket/never-contacted")
-    expected = DeltaBackend if delta_available() else VersionedTable
-    assert isinstance(t, expected)
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_backend_contract(spark, tmp_path):  # pragma: no cover
-    """Full DML contract through DeltaBackend — armed the moment
-    delta-spark appears in the environment (identical scenario to
-    test_merge_scenario_through_seam, so both backends are held to the
-    same behavior)."""
-    from dataengineeringworkshop_spark.plans.tables import load_table
-
-    o = load_table(spark, SF_SMOKE, "orders")
-    t = open_table(spark, str(tmp_path / "orders"), backend="delta")
-    assert not t.exists()
-    t.write(o)
-    assert t.exists()
-    src = o.filter(F.col("o_orderkey") % 5 == 0).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 1
-    )
-    t.merge(src, on="t.o_orderkey = s.o_orderkey")
-    assert t.read().count() == o.count()
-    assert t.read(version=0).exceptAll(o).count() == 0
-    t.update({"o_comment": "'x'"}, condition="o_orderkey % 7 = 0")
-    t.delete("o_orderkey % 11 = 0")
-    t.optimize()
-    t.add_column("extra_col", "string")
-    assert "extra_col" in t.read().columns
-    assert t.history().count() >= 5
-
-
-def test_delta_backend_merge_signature_matches_versioned():
-    """r11 ADVICE: sqldml always passes the full MERGE kwarg set, so the
-    DeltaBackend adapter must accept exactly the same signature as
-    VersionedTable.merge — otherwise every SQL MERGE on a delta-spark
-    deployment dies with TypeError before reaching Delta."""
-    import inspect
-
-    from dataengineeringworkshop_spark.tables.backend import DeltaBackend
-    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
-
-    d = inspect.signature(DeltaBackend.merge).parameters
-    v = inspect.signature(VersionedTable.merge).parameters
-    assert list(d) == list(v)
-    for name in v:
-        assert d[name].default == v[name].default, name
+    assert isinstance(open_table(spark, "s3://bucket/never-contacted"), VersionedTable)

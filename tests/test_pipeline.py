@@ -375,10 +375,10 @@ def test_fail_mode_passes_when_clean(spark, tmp_path):
 
 
 def test_fail_mode_streaming_aborts_without_partial_batch(spark, tmp_path):
-    """Fail-mode on an INCREMENTAL table: the violating batch is staged,
-    the guard aborts it, nothing lands in the target dir, and run()
-    raises the API-level ExpectationFailed (not a raw
-    StreamingQueryException)."""
+    """Fail-mode on an INCREMENTAL table: the guard aborts the batch
+    write before its commit, so no version is committed, no data
+    directory is left behind, and run() raises the API-level
+    ExpectationFailed."""
     import json
     import os
 
@@ -387,6 +387,7 @@ def test_fail_mode_streaming_aborts_without_partial_batch(spark, tmp_path):
         ExpectationFailed,
     )
     from dataengineeringworkshop_spark.pipeline.runner import Pipeline
+    from dataengineeringworkshop_spark.tables.backend import open_table
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -404,13 +405,9 @@ def test_fail_mode_streaming_aborts_without_partial_batch(spark, tmp_path):
     with pytest.raises(ExpectationFailed, match="v_small"):
         p.run(spark)
     target = p._incr_dir("incr")
-    files = (
-        [x for x in os.listdir(target) if x.endswith(".parquet")]
-        if os.path.isdir(target)
-        else []
-    )
-    assert files == []
-    assert not os.path.isdir(target + "__batch_staging")
+    assert not open_table(spark, target).exists()
+    left = os.listdir(target) if os.path.isdir(target) else []
+    assert [x for x in left if x.startswith("v")] == []
 
 
 def test_quarantine_mode_routes_rows(spark, tmp_path):
@@ -476,5 +473,101 @@ def test_view_memo_is_cleared_after_run(spark, tmp_path):
     open_table(spark, p._table_dir("base")).write(
         spark.range(3).withColumnRenamed("id", "v")
     )
-    sql = p._substitute(spark, "SELECT * FROM live.base", streaming=False)
+    sql = p._substitute(spark, "SELECT * FROM live.base")
     assert spark.sql(sql).count() == 3
+
+
+def _incremental_pair(tmp_path, landing):
+    """bronze (cloud_files) → silver (STREAM(live.bronze)), both
+    incremental."""
+    from dataengineeringworkshop_spark.pipeline.runner import Pipeline
+
+    p = Pipeline("pair", str(tmp_path / "pl"))
+    p.table("bronze", f"SELECT * FROM cloud_files('{landing}', 'json')",
+            incremental=True, schema_hints="k long, v long")
+    p.table("silver", "SELECT k, v * 10 AS v10 FROM STREAM(live.bronze)",
+            incremental=True)
+    return p
+
+
+def _kv_rows(lo, hi):
+    return [{"k": i, "v": i} for i in range(lo, hi)]
+
+
+@pytest.mark.parametrize("failing", ["bronze", "silver"])
+def test_incremental_commit_failure_then_retry_appends_every_row_once(
+    spark, tmp_path, monkeypatch, failing
+):
+    """A commit that fails after its node's data write publishes nothing:
+    the retried run reads the same input again and every row lands in
+    both incremental tables exactly once."""
+    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_json(landing / "a.json", _kv_rows(0, 10))
+    p = _incremental_pair(tmp_path, landing)
+    p.run(spark)
+    _write_json(landing / "b.json", _kv_rows(10, 15))
+
+    real = VersionedTable._commit
+    armed = [True]
+
+    def crash_once(self, *args, **kwargs):
+        if armed[0] and self.path.endswith(f"/{failing}"):
+            armed[0] = False
+            raise RuntimeError("crash before commit")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(VersionedTable, "_commit", crash_once)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        p.run(spark)
+    p.run(spark)
+    for name in ("bronze", "silver"):
+        keys = sorted(r.k for r in p.read_dataset(spark, name).collect())
+        assert keys == list(range(15)), name
+
+
+def test_stream_reads_only_new_upstream_commits(spark, tmp_path):
+    """STREAM(live.x) reads the rows x appended after the version its
+    last commit records; a later rewrite of x raises SourceChangedError
+    instead of replaying rows the node may already hold."""
+    from dataengineeringworkshop_spark.tables.backend import open_table
+    from dataengineeringworkshop_spark.tables.versioned import SourceChangedError
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_json(landing / "a.json", _kv_rows(0, 5))
+    p = _incremental_pair(tmp_path, landing)
+    p.run(spark)
+    silver = open_table(spark, p._incr_dir("silver"))
+    assert silver.txns() == [{"sources": {"bronze": 0}}]
+
+    _write_json(landing / "b.json", _kv_rows(5, 8))
+    r = p.run(spark)
+    assert r["silver"]["rows_appended"] == 3
+    assert silver.txns()[-1] == {"sources": {"bronze": 1}}
+    assert sorted(x.v10 for x in p.read_dataset(spark, "silver").collect()) == [
+        10 * i for i in range(8)
+    ]
+
+    open_table(spark, p._incr_dir("bronze")).delete("k = 0")
+    with pytest.raises(SourceChangedError, match="DELETE"):
+        p.run(spark)
+    assert len(silver.txns()) == 2
+
+
+def test_incremental_run_without_new_input_starts_no_job(spark, tmp_path, jobs_started):
+    from dataengineeringworkshop_spark.tables.backend import open_table
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_json(landing / "a.json", _kv_rows(0, 5))
+    p = _incremental_pair(tmp_path, landing)
+    p.run(spark)
+    with jobs_started() as jobs:
+        r = p.run(spark)
+    assert jobs == []
+    assert r["bronze"]["rows_appended"] == 0 and r["silver"]["rows_appended"] == 0
+    for name in ("bronze", "silver"):
+        assert len(open_table(spark, p._incr_dir(name)).txns()) == 1

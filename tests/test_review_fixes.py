@@ -648,3 +648,36 @@ def test_rake_combined_oracle_asserts_surgery_landed():
             )
     finally:
         textops._RAKE_PW_BODY = original
+
+
+def test_session_defaults_gate_reset(spark):
+    """The first ensure_session_defaults pass is authoritative: a conf
+    changed afterwards (sweep_oracles.py --aqe-off) keeps its value, and
+    deleting ``_dew_defaults_ok`` re-asserts the defaults."""
+    from dataengineeringworkshop_spark.session import (
+        RUNTIME_DEFAULTS,
+        ensure_session_defaults,
+    )
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    try:
+        ensure_session_defaults(spark)
+        spark.conf.set(key, "false")
+        ensure_session_defaults(spark)
+        assert spark.conf.get(key) == "false"
+        del spark._dew_defaults_ok
+        ensure_session_defaults(spark)
+        assert spark.conf.get(key) == RUNTIME_DEFAULTS[key]
+        assert spark._dew_defaults_ok
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_smoke_documents_have_no_null_doc_id(spark):
+    """The corpus pipeline's min_by dedup (plans/pipelineq.py) assumes a
+    non-NULL doc_id."""
+    from dataengineeringworkshop_spark.plans.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    assert docs.where("doc_id IS NULL").count() == 0

@@ -1,9 +1,9 @@
 """Schema-exact reads and the single-evaluation MERGE source.
 
-VersionedTable reads scan with the schema the commit log records, and
-bronze reads scan with the schema AutoIngest persisted, so planning a
-read starts no Spark job.  MERGE materializes its source once, so the
-probe and the rewrite see the same rows."""
+VersionedTable reads, bronze's included, scan with the schema the
+commit log records, so planning a read starts no Spark job.  MERGE
+materializes its source once, so the probe and the rewrite see the same
+rows."""
 
 from __future__ import annotations
 
@@ -166,10 +166,13 @@ def test_nondeterministic_source_is_evaluated_once(spark, tmp_path, mode):
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= persisted
 
 
-# --------------------------------------------- (e) bronze sink schema
+# ------------------------------------------------- (e) bronze schema
 
 
-def test_read_ingested_uses_persisted_sink_schema(spark, tmp_path):
+def test_read_ingested_uses_the_bronze_commit_schema(spark, tmp_path):
+    """Bronze is a VersionedTable: reads scan with the schema its commit
+    log records, and a run that writes more columns widens that schema
+    through append schema evolution (NULL in the older files)."""
     from dataengineeringworkshop_spark.engine import Lakehouse
     from dataengineeringworkshop_spark.streaming.autoingest import AutoIngest
 
@@ -188,30 +191,19 @@ def test_read_ingested_uses_persisted_sink_schema(spark, tmp_path):
     ai.run_once(spark)
     got = lh.read_ingested("plain")
     assert "_rescued_data" not in got.columns
-    assert got.columns == ai._stream(spark).columns
+    source = [f.name for f in ai.resolve_schema(spark).fields]
+    assert got.columns == source + ["file_path", "inserted_at"]
     assert got.count() == 10
 
-    # a checkpoint without the persisted sink schema falls back to inference
-    os.remove(ai._sink_schema_file)
-    inferred = lh.read_ingested("plain")
-    assert sorted(inferred.columns) == sorted(got.columns)
-    assert sorted(map(tuple, inferred.select(*got.columns).collect())) == sorted(
-        map(tuple, got.collect())
-    )
-    # the next run records it again ...
+    # a run with more columns on the same table widens its schema
     _land(str(src), "b.json", [_sale(i) for i in range(10, 15)])
-    ai.run_once(spark)
-    assert ai._sink_schema().fieldNames() == got.columns
-    # ... and a run with more sink columns on the same checkpoint widens
-    # the record, so the new column reads back (NULL in older files)
-    _land(str(src), "c.json", [_sale(i) for i in range(15, 20)])
     AutoIngest(
         source_dir=str(src),
         checkpoint_dir=ai.checkpoint_dir,
         target_dir=ai.target_dir,
         schema_hints=HINTS,
     ).run_once(spark)
-    assert ai._sink_schema().fieldNames() == got.columns + ["_rescued_data"]
     wide = lh.read_ingested("plain")
-    assert wide.count() == 20
+    assert wide.columns == got.columns + ["_rescued_data"]
+    assert wide.count() == 15
     assert wide.where("_rescued_data IS NOT NULL").count() == 0

@@ -314,3 +314,33 @@ def test_shallow_clone_target_exists_raises(spark, tmp_path):
     t.shallow_clone(str(tmp_path / "c1"))
     with _pytest.raises(ValueError, match="already exists"):
         t.shallow_clone(str(tmp_path / "c1"))
+
+
+def test_commit_publish_is_put_if_absent(spark, tmp_path, monkeypatch):
+    """A writer whose view of the log is stale computes a version another
+    writer already published: it gets CommitConflictError, and that
+    version's log file is left byte-identical."""
+    import os
+
+    from dataengineeringworkshop_spark.tables.versioned import (
+        CommitConflictError,
+        VersionedTable,
+    )
+
+    a = VersionedTable(spark, str(tmp_path / "t"))
+    a.write(spark.range(3))
+    stale = a._latest()
+    a.write(spark.range(2), mode="append")
+    with open(a._log_path(1), "rb") as f:
+        v1 = f.read()
+
+    b = VersionedTable(spark, str(tmp_path / "t"))
+    monkeypatch.setattr(b, "_latest", lambda: stale)
+    with pytest.raises(CommitConflictError, match="version 1"):
+        b.write(spark.range(7), mode="append")
+    with open(a._log_path(1), "rb") as f:
+        assert f.read() == v1
+    assert a.read().count() == 5
+    assert sorted(os.listdir(tmp_path / "t" / "_dew_log")) == [
+        "00000000.json", "00000001.json"
+    ]
