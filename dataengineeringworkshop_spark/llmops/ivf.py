@@ -91,9 +91,8 @@ def train_centroids(
     )
     # Arrow local relation, not a pickled-row parallelize: the list form
     # plans as a Python-RDD scan whose tasks each need a plain Python
-    # worker (measured 2-18 s of worker-spawn wait for nlist rows —
-    # OPTIMIZATION_r13.md); the Arrow conversion is driver-side and the
-    # executors see JVM rows only
+    # worker (measured 2-18 s of worker-spawn wait for nlist rows); the
+    # Arrow conversion is driver-side and the executors see JVM rows only
     import pandas as pd
 
     pdf = pd.DataFrame(rows, columns=["cell_id", "centroid"])

@@ -132,7 +132,7 @@ def ann_topk_lsh(
     def build_index() -> DataFrame:
         # deliberately NOT fanned out: fanning a pandas-UDF stage to 32
         # partitions forces 32 simultaneous cold Python-worker spawns
-        # (~15-20 s measured, OPTIMIZATION_r13.md) while the BLAS matmul
+        # (~15-20 s measured) while the BLAS matmul
         # itself is trivial at the scale where the fan-out gate fires —
         # and at production scale the scan is already wide, so the
         # fan-out would be a no-op there too; it has no winning case here

@@ -8,8 +8,7 @@ partition — and any CPU-heavy map chain sitting on top of it (BPE
 replace chains, shingle explodes, DECIMAL dot-product folds, gram
 hashing) runs on one core of the 32 while the rest idle.  Round-13
 profiling measured the BPE apply stage at 56 s of single-task CPU and
-the whole-corpus shingle builds at 8-43 s single-task for this reason
-(OPTIMIZATION_r13.md).
+the whole-corpus shingle builds at 8-43 s single-task for this reason.
 
 ``fan_out`` repartitions ONLY when the frame's planned parallelism is
 below the session's core count.  The gate is what makes it scale-honest

@@ -106,7 +106,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (path, _stat_fp(path))
     hit = cache.get(key)
     if hit is not None:
-        return hit
+        # fresh column attributes per load (``alias`` keeps the old
+        # ones), so two loads of one table self-join unambiguously
+        return hit.toDF(*hit.columns)
     # drop stale fingerprints for the same path (file was rewritten)
     for k in [k for k in cache if k[0] == path]:
         del cache[k]

@@ -32,9 +32,13 @@ bounded by file count — exactly what Delta's driver does when planning a
 rewrite), never row data.  The transaction log is tiny JSON driver-side
 metadata, like Delta's _delta_log.
 
-Commits publish put-if-absent (a hard link of the finished log file):
-a writer that computed a version another writer already published gets
-:class:`CommitConflictError` instead of replacing that commit.  Data
+Every commit is (the snapshot it read, the refs it removes, the refs it
+adds), as in Delta's add/remove actions; one method derives the rest
+(active set, carried stats, deletion vectors, file metrics).  It
+publishes at the read version + 1, put-if-absent (a hard link of the
+finished log file): a writer whose snapshot another writer has moved
+past gets :class:`CommitConflictError` instead of replacing that commit
+or publishing a later version that silently drops its changes.  Data
 directories are written before their commit, so a writer that dies in
 between leaves an unreferenced directory that no snapshot reads and
 ``vacuum`` removes.
@@ -81,7 +85,8 @@ class Commit:
     metrics: dict
     # per-file column stats for data skipping (Delta's stats field):
     # {rel_file: {col: [min, max]}} — recorded by OPTIMIZE for the
-    # zorder columns; empty for other commits (older logs load fine).
+    # zorder columns and carried by every later commit for the files it
+    # keeps active (missing on older logs, which load fine).
     file_stats: dict = None
     # deletion-vector sidecar dirs (Delta deletion-vector parity):
     # parquet dirs of (file_ref, pos) rows marking soft-deleted row
@@ -148,26 +153,90 @@ class VersionedTable:
         """True once the table has at least one commit."""
         return self._latest() is not None
 
-    def _commit(
+    def _commit_change(
         self,
-        operation: str,
-        data_dirs: list[str],
-        schema_ddl: str,
-        params: dict | None = None,
-        metrics: dict | None = None,
-        file_stats: dict | None = None,
+        op: str,
+        prev: Commit | None,
+        params: dict,
+        *,
+        removed: list[str] = (),
+        added: list[str | None] = (),
+        stats: dict | None = None,
+        dv: str | None = None,
         dv_dirs: list[str] | None = None,
+        schema_ddl: str | None = None,
+        metrics: dict | None = None,
+        account: str | None = None,
     ) -> Commit:
-        prev = self._latest()
-        version = 0 if prev is None else prev.version + 1
+        """Build and publish the commit that follows snapshot ``prev``
+        (``None`` for a table's first commit) — the one place that
+        derives a commit's version, active set, file stats, deletion
+        vectors and file metrics.
+
+        ``removed``: refs of ``prev`` the commit drops (a directory ref
+        drops its files).  ``added``: the refs it adds (``None`` entries,
+        writes that produced no row, are skipped), with ``stats`` for
+        their files.  The active set is ``prev``'s refs plus ``added``
+        when nothing is removed, ``prev``'s remaining FILE refs plus
+        ``added`` on a removal.  Stats carry for every kept ref.
+        Deletion vectors carry while some file of ``prev`` stays active,
+        plus the commit's new vector ``dv``; ``dv_dirs`` replaces them
+        outright (REORG, RESTORE, CLONE).
+
+        ``account`` names the file metrics recorded next to ``metrics``:
+        ``None`` none, ``"added"`` the files and bytes added,
+        ``"rewrite"`` also the files and bytes removed (rewritten) and
+        kept (carried), and ``"mor"`` — a merge-on-read DML — also the
+        deletion vector, counted in ``bytes_added``.
+
+        The version is ``prev``'s + 1, so a commit built on a snapshot
+        another writer has moved past raises
+        :class:`CommitConflictError` instead of dropping that writer's
+        commit."""
+        added = [a for a in added if a]
+        removed = set(removed)
+        old = prev.data_dirs if prev is not None else []
+        files = self._files_of(old) if removed or account in ("rewrite", "mor") else []
+        gone = {r for r in files if r in removed or r.rsplit("/", 1)[0] in removed}
+        carried = [r for r in files if r not in gone]
+        kept = carried if removed else list(old)
+        keep = set(kept)
+        file_stats = {
+            k: v
+            for k, v in ((prev.file_stats or {}) if prev is not None else {}).items()
+            if k in keep or k.rsplit("/", 1)[0] in keep
+        }
+        file_stats.update(stats or {})
         if dv_dirs is None:
-            # deletion vectors CARRY FORWARD by default: a metadata-only
-            # or partial-rewrite commit that forgot to carry them would
-            # silently RESURRECT soft-deleted rows, while carrying a
-            # stale entry (its file no longer active) can never match a
-            # scan — so inherit unless the caller explicitly clears
-            # (full rewrites pass dv_dirs=[]).
-            dv_dirs = list(prev.dv_dirs or []) if prev is not None else []
+            # a vector whose file left the active set can never match a
+            # scan, while dropping one that still applies would
+            # resurrect soft-deleted rows: carry unless no file is kept
+            dv_dirs = (list(prev.dv_dirs or []) if kept else []) + ([dv] if dv else [])
+
+        def size(refs) -> int:
+            paths = [self._abs(r) for r in refs]
+            return sum(os.path.getsize(p) for p in paths if os.path.exists(p))
+
+        derived: dict = {}
+        if account in ("rewrite", "mor"):
+            derived = {
+                "files_rewritten": len(gone),
+                "files_carried": len(carried),
+                "bytes_rewritten": size(gone),
+                "bytes_carried": size(carried),
+            }
+        if account is not None:
+            new = self._files_of(added)
+            derived.update(files_added=len(new), bytes_added=size(new))
+        if account == "mor":
+            params = {**params, "mode": "merge-on-read"}
+            dv_bytes = size(self._files_of([dv])) if dv else 0
+            derived["bytes_added"] += dv_bytes
+            metrics = {
+                **(metrics or {}),
+                "dv_files_added": int(dv is not None),
+                "dv_bytes_added": dv_bytes,
+            }
         # fold the effective property map forward (legacy logs without a
         # snapshot pay the full merge ONCE here, then carry it)
         if prev is None:
@@ -176,22 +245,26 @@ class VersionedTable:
             props = dict(prev.properties)
         else:
             props = self._properties_scan()
-        if operation == "SET TBLPROPERTIES":
-            props.update((params or {}).get("properties") or {})
-        c = Commit(
-            version=version,
+        if op == "SET TBLPROPERTIES":
+            props.update(params.get("properties") or {})
+        return self._commit(Commit(
+            version=0 if prev is None else prev.version + 1,
             timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            operation_params=params or {},
-            data_dirs=data_dirs,
-            schema_ddl=schema_ddl,
-            metrics=metrics or {},
-            file_stats=file_stats or {},
+            operation=op,
+            operation_params=params,
+            data_dirs=kept + added,
+            schema_ddl=schema_ddl or prev.schema_ddl,
+            metrics={**derived, **(metrics or {})},
+            file_stats=file_stats,
             dv_dirs=dv_dirs,
             properties=props,
-        )
+        ))
+
+    def _commit(self, c: Commit) -> Commit:
+        """Publish ``c`` put-if-absent — the one publish point, reached
+        only through :meth:`_commit_change`."""
         os.makedirs(f"{self.path}/{_LOG_DIR}", exist_ok=True)
-        final = self._log_path(version)
+        final = self._log_path(c.version)
         tmp = final + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(c.__dict__, f)
@@ -201,7 +274,7 @@ class VersionedTable:
             os.link(tmp, final)
         except FileExistsError:
             raise CommitConflictError(
-                f"{self.path}: version {version} was committed by another "
+                f"{self.path}: version {c.version} was committed by another "
                 "writer"
             ) from None
         finally:
@@ -272,20 +345,16 @@ class VersionedTable:
                 else:
                     merged.append(f)
             schema_ddl = StructType(merged).simpleString()
-            dirs = prev.data_dirs + [rel]
-            op = "WRITE APPEND"
+            op, removed = "WRITE APPEND", []
         else:
-            dirs = [rel]
             op = "CREATE TABLE AS SELECT" if prev is None else "WRITE OVERWRITE"
+            removed = prev.data_dirs if prev is not None else []
         params = {"mode": mode}
         if txn is not None:
             params["txn"] = txn
-        self._commit(
-            op, dirs, schema_ddl, params,
-            metrics=self._written_metrics(rel),
-            # overwrite replaces the data set wholesale; append's new
-            # files have no DV entries, existing ones keep theirs
-            dv_dirs=None if mode == "append" else [],
+        self._commit_change(
+            op, prev, params, removed=removed, added=[rel],
+            schema_ddl=schema_ddl, account="added",
         )
         return self
 
@@ -324,23 +393,11 @@ class VersionedTable:
         c = self._resolve_commit(version)
         stats = c.file_stats or {}
         bounds = _parse_conjunctive_bounds(where) if where else []
-        out: list[str] = []
-        for d in c.data_dirs:
-            base = self._abs(d)
-            if os.path.isdir(base):
-                for fn in sorted(os.listdir(base)):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    rel = f"{d}/{fn}"
-                    if bounds and rel in stats and _stats_exclude(stats[rel], bounds):
-                        continue
-                    out.append(f"{base}/{fn}")
-            else:
-                # individual carried-forward file ref (file-pruned COW)
-                if bounds and d in stats and _stats_exclude(stats[d], bounds):
-                    continue
-                out.append(base)
-        return out
+        return [
+            self._abs(r)
+            for r in self._files_of(c.data_dirs)
+            if not (bounds and r in stats and _stats_exclude(stats[r], bounds))
+        ]
 
     def read(self, version: int | None = None, where: str | None = None) -> DataFrame:
         """Snapshot read; ``version`` = time travel (`VERSION AS OF n`,
@@ -464,22 +521,26 @@ class VersionedTable:
 
     # ------------------------------------------------------ DML planning
 
-    def _active_refs(self, c: Commit) -> list[str]:
-        """The commit's active data set exploded to individual FILE refs
-        (relative to the table root when inside it, absolute otherwise —
-        shallow clones).  Directory refs expand to their parquet files."""
-        refs: list[str] = []
-        for d in c.data_dirs:
+    def _files_of(self, refs: list[str]) -> list[str]:
+        """``refs`` exploded to individual FILE refs (relative to the
+        table root when inside it, absolute otherwise — shallow clones).
+        Directory refs expand to their parquet files."""
+        out: list[str] = []
+        for d in refs:
             base = self._abs(d)
             if os.path.isdir(base):
-                refs.extend(
+                out.extend(
                     f"{d}/{fn}"
                     for fn in sorted(os.listdir(base))
                     if fn.endswith(".parquet")
                 )
             else:
-                refs.append(d)
-        return refs
+                out.append(d)
+        return out
+
+    def _active_refs(self, c: Commit) -> list[str]:
+        """The active data set of ``c`` as FILE refs."""
+        return self._files_of(c.data_dirs)
 
     def _refs_of_probe(self, probe: DataFrame) -> set[str]:
         """DISTINCT file refs of a lineage probe's ``__dew_ref`` column.
@@ -509,12 +570,10 @@ class VersionedTable:
             F.expr(condition or "TRUE").eqNullSafe(F.lit(True))
         )
 
-    def _split(
-        self, c: Commit, probe: DataFrame | None
-    ) -> tuple[list[str], list[str]]:
-        """Split the active file set of ``c`` into (touched, untouched):
-        touched files hold at least one ``probe`` row.  Files the stats
-        kept out of the probe are untouched by construction."""
+    def _touched(self, c: Commit, probe: DataFrame | None) -> list[str]:
+        """The active files of ``c`` that hold at least one ``probe``
+        row.  Files the stats kept out of the probe are untouched by
+        construction."""
         touched = self._refs_of_probe(probe) if probe is not None else set()
         refs = self._active_refs(c)
         stray = touched - set(refs)
@@ -525,64 +584,7 @@ class VersionedTable:
             raise RuntimeError(
                 f"DML probe returned files outside the active set: {sorted(stray)!r}"
             )
-        return [r for r in refs if r in touched], [r for r in refs if r not in touched]
-
-    def _carried_stats(self, prev: Commit, untouched: list[str]) -> dict:
-        """File stats survive for carried-forward files (data skipping
-        keeps working on the untouched part after a selective DML)."""
-        stats = prev.file_stats or {}
-        return {r: stats[r] for r in untouched if r in stats}
-
-    def _bytes_of_refs(self, refs: list[str]) -> int:
-        """Total on-disk parquet bytes of file/dir refs — driver-side
-        metadata op bounded by file count (the same footprint as Delta's
-        commit-planning stat collection, never row data)."""
-        total = 0
-        for r in refs:
-            p = self._abs(r)
-            if os.path.isdir(p):
-                total += sum(
-                    os.path.getsize(os.path.join(p, fn))
-                    for fn in os.listdir(p)
-                    if fn.endswith(".parquet")
-                )
-            elif os.path.exists(p):
-                total += os.path.getsize(p)
-        return total
-
-    def _written_metrics(self, rel: str | None) -> dict:
-        """files/bytes added by a freshly written data dir, zero for
-        ``None`` (Delta's ``numTargetFilesAdded`` /
-        ``numTargetBytesAdded`` parity)."""
-        base = f"{self.path}/{rel}"
-        parts = (
-            [f"{base}/{fn}" for fn in os.listdir(base) if fn.endswith(".parquet")]
-            if rel
-            else []
-        )
-        return {
-            "files_added": len(parts),
-            "bytes_added": sum(map(os.path.getsize, parts)),
-        }
-
-    def _rewrite_metrics(
-        self, rel: str | None, touched: list[str], untouched: list[str]
-    ) -> dict:
-        """Per-DML rewrite accounting surfaced via ``history()``:
-        ``files_rewritten``/``bytes_rewritten`` are the INPUT files a
-        full (unpruned) copy-on-write would also have rewritten but a
-        pruned one actually did (Delta ``numTargetFilesRemoved`` /
-        ``numTargetBytesRemoved``), ``files_carried``/``bytes_carried``
-        the untouched files carried forward by reference — the ratio
-        (carried+rewritten)/rewritten is exactly the "N× less IO than a
-        full rewrite" number a selective DML earns from stats pruning."""
-        return {
-            "files_rewritten": len(touched),
-            "files_carried": len(untouched),
-            "bytes_rewritten": self._bytes_of_refs(touched),
-            "bytes_carried": self._bytes_of_refs(untouched),
-            **self._written_metrics(rel),
-        }
+        return [r for r in refs if r in touched]
 
     def _write_rows(self, df: DataFrame, rel: str) -> tuple[str | None, int]:
         """Write ``df`` as the directory ``rel`` and return (rel, rows),
@@ -621,64 +623,6 @@ class VersionedTable:
             self._new_data_dir(version, dv=True),
         )
 
-    def _apply(
-        self,
-        op: str,
-        prev: Commit,
-        params: dict,
-        rows: tuple[str | None, int],
-        split: tuple[list[str], list[str]] | None = None,
-        dv: tuple[str | None, int] = (None, 0),
-        mor: str | None = None,
-        schema_ddl: str | None = None,
-    ) -> None:
-        """Commit a DML on top of ``prev`` — the one place that sets a
-        DML commit's data files, deletion vectors, carried stats and
-        history metrics.  ``rows`` and ``dv`` are ``_write_rows``
-        results.
-
-        Copy-on-write (``mor=None``): ``split`` is the probe's (touched,
-        untouched) files, or ``None`` for an unpruned full rewrite,
-        which claims no rewrite-set accounting.  The commit holds the
-        untouched files plus the new directory; with nothing touched
-        and nothing written it is metadata-only, like Delta.  Deletion
-        vectors carry forward while some file is untouched; once every
-        file was rewritten from the DV-applied scan they are cleared.
-
-        Merge-on-read (``mor`` names the metric counting ``dv``'s rows):
-        every active file stays, the new directory is appended and the
-        new deletion vector joins the table's vectors."""
-        rel, n_rows = rows
-        rel_dv, n_dv = dv
-        new = [rel] if rel else []
-        if mor:
-            split = ([], self._active_refs(prev))
-            dirs, stats = prev.data_dirs + new, prev.file_stats
-            dv_dirs = (list(prev.dv_dirs or []) + [rel_dv]) if rel_dv else None
-            params = {**params, "mode": "merge-on-read"}
-        elif split is not None and not split[0] and not rel:
-            dirs, stats, dv_dirs = prev.data_dirs, prev.file_stats, None
-        else:
-            untouched = split[1] if split else []
-            dirs, stats = untouched + new, self._carried_stats(prev, untouched)
-            dv_dirs = None if untouched else []
-        metrics = (
-            self._rewrite_metrics(rel, *split) if split else self._written_metrics(rel)
-        )
-        if mor:
-            dv_bytes = self._written_metrics(rel_dv)["bytes_added"]
-            metrics.update({
-                mor: n_dv,
-                "rows_appended": n_rows,
-                "bytes_added": metrics["bytes_added"] + dv_bytes,
-                "dv_files_added": int(rel_dv is not None),
-                "dv_bytes_added": dv_bytes,
-            })
-        self._commit(
-            op, dirs, schema_ddl or prev.schema_ddl, params,
-            metrics=metrics, file_stats=stats, dv_dirs=dv_dirs,
-        )
-
     # ------------------------------------------------------------------ DML
 
     def update(
@@ -711,7 +655,7 @@ class VersionedTable:
         table property (Delta's own opt-in surface): ``'true'`` routes
         to merge-on-read, anything else to copy-on-write."""
         mode = self._dml_mode(mode, "update")
-        prev = self._latest()
+        prev = self._resolve_commit(None)
         params = {"condition": condition, "set": set_exprs}
         version = prev.version + 1
 
@@ -737,24 +681,31 @@ class VersionedTable:
                         set_rows(matched.drop("__dew_ref", "__dew_pos"), F.lit(True)),
                         self._new_data_dir(version),
                     )
-                self._apply("UPDATE", prev, params, rows, dv=dv, mor="rows_updated")
+                self._commit_change(
+                    "UPDATE", prev, params, added=[rows[0]], dv=dv[0], account="mor",
+                    metrics={"rows_updated": dv[1], "rows_appended": rows[1]},
+                )
             finally:
                 if matched is not None:
                     _release_checkpoint(matched)
             return
-        if condition is None:
-            split = (self._active_refs(prev), [])
-            paths = [self._abs(d) for d in prev.data_dirs]
-        else:
-            split = self._split(prev, self._hits(prev, condition))
-            paths = [self._abs(r) for r in split[0]]
-        rows = (None, 0)
-        if split[0]:
-            rows = self._write_rows(
-                set_rows(self._evolved(paths, prev), F.expr(condition or "TRUE")),
+        touched = (
+            prev.data_dirs
+            if condition is None
+            else self._touched(prev, self._hits(prev, condition))
+        )
+        rel = None
+        if touched:
+            rel, _ = self._write_rows(
+                set_rows(
+                    self._evolved([self._abs(r) for r in touched], prev),
+                    F.expr(condition or "TRUE"),
+                ),
                 self._new_data_dir(version),
             )
-        self._apply("UPDATE", prev, params, rows, split=split)
+        self._commit_change(
+            "UPDATE", prev, params, removed=touched, added=[rel], account="rewrite"
+        )
 
     def delete(self, condition: str, mode: str | None = None) -> None:
         """DELETE WHERE — SQL three-valued semantics: only rows where
@@ -778,21 +729,26 @@ class VersionedTable:
         ``mode=None`` resolves from the ``delta.enableDeletionVectors``
         table property, like real Delta."""
         mode = self._dml_mode(mode, "delete")
-        prev = self._latest()
+        prev = self._resolve_commit(None)
         params = {"condition": condition}
         hits = self._hits(prev, condition)
         if mode == "mor":
-            dv = self._write_dv(hits, prev.version + 1)
-            self._apply("DELETE", prev, params, (None, 0), dv=dv, mor="rows_deleted")
+            dv, n_dv = self._write_dv(hits, prev.version + 1)
+            self._commit_change(
+                "DELETE", prev, params, dv=dv, account="mor",
+                metrics={"rows_deleted": n_dv, "rows_appended": 0},
+            )
             return
-        split = self._split(prev, hits)
-        rows = (None, 0)
-        if split[0]:
-            kept = self._evolved([self._abs(r) for r in split[0]], prev).filter(
+        touched = self._touched(prev, hits)
+        rel = None
+        if touched:
+            kept = self._evolved([self._abs(r) for r in touched], prev).filter(
                 ~F.expr(condition).eqNullSafe(F.lit(True))
             )
-            rows = self._write_rows(kept, self._new_data_dir(prev.version + 1))
-        self._apply("DELETE", prev, params, rows, split=split)
+            rel, _ = self._write_rows(kept, self._new_data_dir(prev.version + 1))
+        self._commit_change(
+            "DELETE", prev, params, removed=touched, added=[rel], account="rewrite"
+        )
 
     # ------------------------------------------------------- properties
 
@@ -800,15 +756,9 @@ class VersionedTable:
         """ALTER TABLE … SET TBLPROPERTIES (Delta parity) — a
         metadata-only commit; the effective property map is the
         last-wins merge over the commit history."""
-        prev = self._latest()
-        if prev is None:
-            raise FileNotFoundError(f"no such versioned table: {self.path}")
-        self._commit(
-            "SET TBLPROPERTIES",
-            prev.data_dirs,
-            prev.schema_ddl,
+        self._commit_change(
+            "SET TBLPROPERTIES", self._resolve_commit(None),
             {"properties": dict(props)},
-            file_stats=prev.file_stats or {},
         )
 
     def properties(self) -> dict[str, str]:
@@ -950,8 +900,8 @@ class VersionedTable:
                     "no source row exists on the NOT MATCHED BY SOURCE "
                     f"branch (got: {expr!r})"
                 )
-        prev = self._latest()
-        cur = self.read()
+        prev = self._resolve_commit(None)
+        cur = self.read(prev.version)
         # WITH SCHEMA EVOLUTION: collect source-only columns to add
         new_fields = []
         if schema_evolution:
@@ -1000,7 +950,7 @@ class VersionedTable:
             key_range = (
                 self._merge_source_probe(source, cur, pairs) if pairs else None
             )
-            target, split = cur, None
+            target, touched = cur, None
             if mode == "mor":
                 target = self._evolved(
                     [self._abs(d) for d in prev.data_dirs], prev, lineage=True
@@ -1029,8 +979,8 @@ class VersionedTable:
                     .alias("t")
                     .join(source.alias("s"), F.expr(on), "left_semi")
                 )
-                split = self._split(prev, probe)
-                target = self._evolved([self._abs(r) for r in split[0]], prev)
+                touched = self._touched(prev, probe)
+                target = self._evolved([self._abs(r) for r in touched], prev)
             joined = (
                 target.withColumn("__t_present", F.lit(True))
                 .alias("t")
@@ -1089,19 +1039,27 @@ class VersionedTable:
                     gone = gone | by_source
                 if unmatched_by_source_action == "update":
                     appended = appended | by_source
-                dv = self._write_dv(joined.filter(gone), prev.version + 1)
-                rows = self._write_rows(joined.filter(appended).select(*out_cols), rel)
-                self._apply(
-                    "MERGE", prev, params, rows, dv=dv, mor="rows_dv_marked",
-                    schema_ddl=schema_ddl,
+                dv, n_dv = self._write_dv(joined.filter(gone), prev.version + 1)
+                rel, n_rows = self._write_rows(
+                    joined.filter(appended).select(*out_cols), rel
+                )
+                self._commit_change(
+                    "MERGE", prev, params, added=[rel], dv=dv,
+                    schema_ddl=schema_ddl, account="mor",
+                    metrics={"rows_dv_marked": n_dv, "rows_appended": n_rows},
                 )
             else:
                 keep = t_here | (s_here & F.lit(insert))
                 if unmatched_by_source_action == "delete":
                     keep = keep & ~by_source
-                rows = self._write_rows(joined.select(*out_cols).filter(keep), rel)
-                self._apply(
-                    "MERGE", prev, params, rows, split=split, schema_ddl=schema_ddl
+                rel, _ = self._write_rows(joined.select(*out_cols).filter(keep), rel)
+                # an unpruned merge rewrites the whole table and claims
+                # no rewrite-set accounting
+                self._commit_change(
+                    "MERGE", prev, params,
+                    removed=prev.data_dirs if touched is None else touched,
+                    added=[rel], schema_ddl=schema_ddl,
+                    account="added" if touched is None else "rewrite",
                 )
         finally:
             if materialize:
@@ -1156,7 +1114,8 @@ class VersionedTable:
         point lookups there skip nothing.  Columns the quantizer can't
         bucket (non-numeric/date/timestamp) fall back to the
         lexicographic sort."""
-        cur = self.read()
+        prev = self._resolve_commit(None)
+        cur = self.read(prev.version)
         if zorder_by and len(zorder_by) > 1 and (zkey := _morton_key(cur, zorder_by)) is not None:
             out = (
                 cur.withColumn("__dew_z", zkey)
@@ -1170,7 +1129,6 @@ class VersionedTable:
             )
         else:
             out = cur.coalesce(target_files)
-        prev = self._latest()
         rel = self._new_data_dir(prev.version + 1)
         out.write.mode("overwrite").parquet(f"{self.path}/{rel}")
         # per-file min/max for the sort columns, read from the parquet
@@ -1179,11 +1137,10 @@ class VersionedTable:
         stats = (
             _footer_stats(f"{self.path}/{rel}", rel, zorder_by) if zorder_by else {}
         )
-        self._commit(
-            "OPTIMIZE", [rel], prev.schema_ddl, {"zorder_by": zorder_by or []},
-            metrics=self._written_metrics(rel),
-            file_stats=stats,
-            dv_dirs=[],  # full rewrite compacts deletion vectors away
+        # a full rewrite: the deletion vectors are compacted away
+        self._commit_change(
+            "OPTIMIZE", prev, {"zorder_by": zorder_by or []},
+            removed=prev.data_dirs, added=[rel], stats=stats, account="added",
         )
 
     def reorg_purge(self, threshold: float = 0.0) -> None:
@@ -1202,32 +1159,17 @@ class VersionedTable:
         DV-heavy files without paying a full-table OPTIMIZE rewrite."""
         import pyarrow.parquet as pq
 
-        prev = self._latest()
-        if prev is None:
-            raise FileNotFoundError(f"no such versioned table: {self.path}")
+        prev = self._resolve_commit(None)
         active = self._active_refs(prev)
         dv_paths = [self._abs(d) for d in (prev.dv_dirs or [])]
-        base_metrics = {
-            "files_rewritten": 0,
-            "bytes_rewritten": 0,
-            "files_carried": len(active),
-            "rows_purged": 0,
-            "dv_files_removed": 0,
-        }
-        if not dv_paths:
-            # nothing to purge — metadata-only commit (the op is history)
-            self._commit(
-                "REORG", prev.data_dirs, prev.schema_ddl,
-                {"apply": "PURGE", "threshold": threshold},
-                metrics=base_metrics,
-                file_stats=prev.file_stats or {},
-            )
-            return
-        dv = self.spark.read.parquet(*dv_paths)
-        counts = {
-            r.file_ref: int(r.n)
-            for r in dv.groupBy("file_ref").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        params = {"apply": "PURGE", "threshold": threshold}
+        counts: dict = {}
+        if dv_paths:
+            dv = self.spark.read.parquet(*dv_paths)
+            counts = {
+                r.file_ref: int(r.n)
+                for r in dv.groupBy("file_ref").agg(F.count(F.lit(1)).alias("n")).collect()
+            }
         abs_of = {ref: self._abs(ref) for ref in active}
         heavy: list[str] = []
         carried: list[str] = []
@@ -1243,12 +1185,17 @@ class VersionedTable:
                     continue
             carried.append(ref)
         if not heavy:
-            # every DV fraction under threshold: metadata-only, DVs carry
-            self._commit(
-                "REORG", prev.data_dirs, prev.schema_ddl,
-                {"apply": "PURGE", "threshold": threshold},
-                metrics=base_metrics,
-                file_stats=prev.file_stats or {},
+            # nothing to purge (no vector, or every fraction at or under
+            # the threshold): metadata-only, the op is history
+            self._commit_change(
+                "REORG", prev, params,
+                metrics={
+                    "files_rewritten": 0,
+                    "bytes_rewritten": 0,
+                    "files_carried": len(active),
+                    "rows_purged": 0,
+                    "dv_files_removed": 0,
+                },
             )
             return
         # rewrite ONLY the heavy files, soft-deleted rows materialized out
@@ -1264,18 +1211,13 @@ class VersionedTable:
                 dv.filter(F.col("file_ref").isin([abs_of[r] for r in carried])).coalesce(1),
                 self._new_data_dir(prev.version + 1, dv=True),
             )
-        self._commit(
-            "REORG",
-            carried + [rel],
-            prev.schema_ddl,
-            {"apply": "PURGE", "threshold": threshold},
+        self._commit_change(
+            "REORG", prev, params, removed=heavy, added=[rel],
+            dv_dirs=[rel_dv] if rel_dv else [], account="rewrite",
             metrics={
-                **self._rewrite_metrics(rel, heavy, carried),
                 "rows_purged": purged_rows,
                 "dv_files_removed": len(dv_paths) - (1 if rel_dv else 0),
             },
-            file_stats=self._carried_stats(prev, carried),
-            dv_dirs=[rel_dv] if rel_dv else [],
         )
 
     def restore(self, version: int) -> None:
@@ -1284,12 +1226,11 @@ class VersionedTable:
         version's — the restore is itself a history entry, and nothing
         is rewritten (metadata-only, like Delta)."""
         target = self._resolve_commit(version)
-        self._commit(
-            "RESTORE",
-            target.data_dirs,
-            target.schema_ddl,
-            {"restored_version": version},
-            file_stats=target.file_stats or {},
+        prev = self._resolve_commit(None)
+        self._commit_change(
+            "RESTORE", prev, {"restored_version": version},
+            removed=prev.data_dirs, added=target.data_dirs,
+            stats=target.file_stats, schema_ddl=target.schema_ddl,
             # the restored snapshot's OWN deletion vectors, not the
             # latest commit's (whose entries may hit carried files)
             dv_dirs=list(target.dv_dirs or []),
@@ -1314,17 +1255,15 @@ class VersionedTable:
             f"{self._abs(rel.rsplit('/', 1)[0])}/{rel.rsplit('/', 1)[1]}": st
             for rel, st in (src.file_stats or {}).items()
         }
-        target._commit(
-            "CLONE",
-            abs_dirs,
-            src.schema_ddl,
+        target._commit_change(
+            "CLONE", None,
             {"source": self.path, "source_version": src.version,
              "clone_type": "SHALLOW"},
+            added=abs_dirs, stats=stats, schema_ddl=src.schema_ddl,
             # source deletion vectors carry by absolute ref — their
             # file_ref contents are absolute paths, so they keep
             # matching the source files the clone reads
             dv_dirs=[self._abs(d) for d in (src.dv_dirs or [])],
-            file_stats=stats,
         )
         return target
 
@@ -1360,27 +1299,25 @@ class VersionedTable:
             ):
                 shutil.rmtree(full, ignore_errors=True)
                 removed.append(entry)
-        latest = commits[-1]
-        self._commit(
-            "VACUUM",
-            latest.data_dirs,
-            latest.schema_ddl,
+        self._commit_change(
+            "VACUUM", commits[-1],
             {"retain_last": retain_last, "removed_dirs": len(removed)},
-            file_stats=latest.file_stats or {},
         )
         return removed
 
     def add_column(self, name: str, dtype: str) -> None:
         """ALTER TABLE ADD COLUMN (S10, N1:146-147) — metadata-only commit;
         existing files read back with nulls for the new column."""
-        prev = self._latest()
+        prev = self._resolve_commit(None)
         from pyspark.sql.types import StructType
 
         schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
         if name in [f.name for f in schema.fields]:
             raise ValueError(f"column {name} already exists")
-        new_ddl = prev.schema_ddl[:-1] + f",{name}:{dtype}>"
-        self._commit("ADD COLUMNS", prev.data_dirs, new_ddl, {"column": name, "type": dtype})
+        self._commit_change(
+            "ADD COLUMNS", prev, {"column": name, "type": dtype},
+            schema_ddl=prev.schema_ddl[:-1] + f",{name}:{dtype}>",
+        )
 
     def changes(self, key: str, from_version: int, to_version: int) -> DataFrame:
         """Change Data Feed between two versions (Delta `table_changes`

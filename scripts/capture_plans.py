@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Capture `.explain("formatted")` for every bench=True query into
-plans/<round>/<name>_<tag>.txt (tag = argv[1], default "before";
-dir overridable via DEW_PLAN_OUT, default plans/r14).
+<dir>/<name>_<tag>.txt (tag = argv[1], default "before"; dir
+overridable via DEW_PLAN_OUT, default plans/, which git ignores).
 
 Also prints a one-line plan-shape summary per query: #Exchange,
 join strategies, Python-eval nodes, scan PushedFilters presence —
@@ -19,7 +19,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
-OUT = Path(os.environ.get("DEW_PLAN_OUT", str(REPO / "plans" / "r14")))
+OUT = Path(os.environ.get("DEW_PLAN_OUT", str(REPO / "plans")))
 OUT.mkdir(parents=True, exist_ok=True)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

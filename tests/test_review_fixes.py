@@ -681,3 +681,13 @@ def test_smoke_documents_have_no_null_doc_id(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents")
     assert docs.where("doc_id IS NULL").count() == 0
+
+
+def test_load_table_self_join_resolves(spark):
+    """Two loads of one table (scan-cache hits) join on their own columns
+    without ambiguity: every hit carries fresh column attributes."""
+    from dataengineeringworkshop_spark.plans.tables import load_table
+
+    a = load_table(spark, SF_SMOKE, "nation")
+    b = load_table(spark, SF_SMOKE, "nation")
+    assert a.join(b, a["n_nationkey"] == b["n_regionkey"]).count() == 25

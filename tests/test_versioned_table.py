@@ -344,3 +344,80 @@ def test_commit_publish_is_put_if_absent(spark, tmp_path, monkeypatch):
     assert sorted(os.listdir(tmp_path / "t" / "_dew_log")) == [
         "00000000.json", "00000001.json"
     ]
+
+
+def test_dml_on_stale_snapshot_raises_conflict(spark, tmp_path, monkeypatch):
+    """A DELETE that read version 0 while another writer appended
+    version 1 publishes nothing: it would rebuild the table from
+    version 0's files and silently drop the appended rows."""
+    from dataengineeringworkshop_spark.tables.versioned import (
+        CommitConflictError,
+        VersionedTable,
+    )
+
+    path = str(tmp_path / "t")
+    a = VersionedTable(spark, path)
+    a.write(spark.range(90).withColumnRenamed("id", "k"))
+    b = VersionedTable(spark, path)
+    hits = b._hits
+
+    def append_meanwhile(*args):
+        out = hits(*args)
+        a.write(spark.range(90, 100).withColumnRenamed("id", "k"), mode="append")
+        return out
+
+    monkeypatch.setattr(b, "_hits", append_meanwhile)
+    with pytest.raises(CommitConflictError, match="version 1"):
+        b.delete("k = 5", mode="cow")
+    assert a.read().count() == 100
+    assert len(a._commits()) == 2
+
+
+def _zordered(spark, tmp_path):
+    """k = 0..399 OPTIMIZE'd ZORDER BY k into 4 range files."""
+    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.write(spark.range(400).selectExpr("id AS k", "id AS v"))
+    t.optimize(zorder_by=["k"], target_files=4)
+    assert len(t.scan_files()) == 4
+    assert len(t.scan_files(where="k = 5")) == 1
+    return t
+
+
+def test_append_keeps_stats_of_optimized_files(spark, tmp_path):
+    """After a small append a point lookup scans the one optimized file
+    whose range holds the key, plus the appended files (no stats)."""
+    t = _zordered(spark, tmp_path)
+    before = set(t.scan_files())
+    hit = t.scan_files(where="k = 5")
+    t.write(spark.range(1000, 1010).selectExpr("id AS k", "id AS v"), mode="append")
+    appended = set(t.scan_files()) - before
+    assert appended
+    assert sorted(t.scan_files(where="k = 5")) == sorted(hit + list(appended))
+    assert [r.v for r in t.read(where="k = 5").collect()] == [5]
+
+
+def test_add_column_keeps_stats(spark, tmp_path):
+    t = _zordered(spark, tmp_path)
+    hit = t.scan_files(where="k = 5")
+    t.add_column("note", "string")
+    assert t.scan_files(where="k = 5") == hit
+    assert [(r.k, r.note) for r in t.read(where="k = 5").collect()] == [(5, None)]
+
+
+def test_metadata_only_commits_keep_stats_and_deletion_vectors(spark, tmp_path):
+    """SET TBLPROPERTIES, a REORG under its threshold and VACUUM change
+    no file: each keeps the file stats and the deletion vectors."""
+    t = _zordered(spark, tmp_path)
+    t.delete("k = 5", mode="mor")
+    stats, dvs = t._latest().file_stats, t._latest().dv_dirs
+    assert stats and dvs
+    t.set_properties({"owner": "etl"})
+    t.reorg_purge(threshold=0.99)
+    t.vacuum(retain_last=1)
+    for c in t._commits()[-3:]:
+        assert (c.file_stats, c.dv_dirs) == (stats, dvs), c.operation
+    assert len(t.scan_files(where="k = 6")) == 1
+    assert t.read(where="k = 5").count() == 0
+    assert t.read().count() == 399
