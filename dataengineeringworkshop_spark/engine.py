@@ -55,11 +55,16 @@ class Lakehouse:
     # ---- ad-hoc query surface (workshop %sql / display cells) ----
     def sql(self, statement: str) -> DataFrame:
         """Run SQL verbatim, including the workshop's Databricks-only
-        surface: ``col:json.path`` extraction (N2:516, N3:147-151) is
-        translated to ``get_json_object``, and UPDATE / DELETE / MERGE
-        INTO / ALTER TABLE ADD COLUMN / DESCRIBE HISTORY / VERSION AS OF
-        statements (N1:146-212, N2:511-540) are dispatched to the
-        versioned-table API (see ``sqldml``)."""
+        surface (N1:146-212, N2:511-540; see ``sqldml``).
+        ``col:json.path`` extraction (N2:516, N3:147-151) is translated
+        to ``get_json_object``.  UPDATE, DELETE, MERGE INTO and queries
+        then take Spark's own grammar: the session's parser parses the
+        statement once; the DML plans run on the versioned-table API,
+        and a query runs with each ``<table> VERSION AS OF n`` read from
+        that snapshot.  Regexes serve only what Spark's parser rejects
+        or misreads: DESCRIBE HISTORY (it parses as DESCRIBE of a
+        column), OPTIMIZE, REORG, RESTORE, VACUUM and SHALLOW CLONE (they
+        do not parse), and SET / SHOW TBLPROPERTIES and ADD COLUMN."""
         from dataengineeringworkshop_spark.sqldml import execute
 
         return execute(self, statement)

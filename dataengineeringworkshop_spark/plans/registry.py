@@ -148,60 +148,14 @@ DRIVER_PREFIX = 50
 # that budget deliberately — and ROTATE it: the driver's green files
 # persist per round (CORRECTNESS_r1..rN all stay in the repo), so a row
 # that already earned rows+schema+hash evidence in a prior round can give
-# its slot to a query that never had a driver row.  Round-4 composition:
-# the flagship + one composite per §2 family + one live representative
-# per capability family, then 24 first-time-evidence rotations (every §2
-# singleton family that was green in r1–r3 keeps its cumulative evidence;
-# tests/test_registry_order.py enforces prefix ∪ past-green coverage).
-# All 50 rows are oracle-paired — no rows-only slots in the window.
-# Round-13 composition: identical to round-12 except SIX slots — the
-# round-12 backlog (vt_merge_mor, vt_delete_mor, vt_update_mor,
-# vt_dv_sql_script, vt_zorder_multi_skipping,
-# vt_history_rewrite_metrics — the only oracle-paired rows without a
-# driver row, each pre-proven in driver_sim EXTRA since r12 and
-# re-verified by the r12 judge at sf0.01) replaces six r8-pool rows
-# with FOUR consecutive green driver rows each (rb_setops_breadth,
-# a20_hll_distinct_bounds, a21_weighted_median, w13_value_range_window,
-# g3_stack_inline_breadth, o5_null_ordering_breadth — all to driver_sim
-# EXTRA).  Green window => cumulative driver evidence hits 257/257
-# oracle-paired queries, zero backlog.
-# Round-12 composition: identical to round-11 except THREE slots — the
-# round-11 backlog (vt_merge_full_sync, vt_merge_schema_evolution,
-# cp_hash_sample_deterministic — the only oracle-paired rows without a
-# driver row, each pre-proven in driver_sim EXTRA since r11 and
-# re-verified by the r11 judge) replaces rb_map_funcs_breadth,
-# mm_payload_dedup, mv_incremental_minmax (four consecutive green rows
-# each, r08-r11; they stay exercised in driver_sim EXTRA).  New r12
-# surface (vt_zorder_multi_skipping, vt_history_rewrite_metrics) is
-# added BEHIND the rotation in driver_sim EXTRA, same as every round.
-# Round-11 composition: flagship + 21 live family anchors (unchanged
-# from r8-r10) + 7 r7-pool + 7 r8-pool retained rows + the 4-query
-# round-9 pool (first-time green in CORRECTNESS_r10, kept for second
-# rows) + the ENTIRE 10-query round-10 pool — the whole never-evidenced
-# backlog earns its first driver row here: j10_left_join_lateral (the
-# decorrelated top-k-per-group shape, reference analogue `2 Medaillon
-# architecture.py:594-599`), st_stream_stream_outer_join (watermarked
-# left-outer interval join with µs-exact eviction oracle),
-# f19_variant_type_breadth, a22_listagg_distinct, f20_try_arith_breadth,
-# rb_group_by_all_breadth, ddl_sql_udf_variables, o6_limit_offset_page,
-# f21_xml_funcs_breadth (rotation row lands AFTER this round's
-# shared-sanitizer control-char extension — the impl-changed-this-round
-# discipline), f22_timezone_convert_breadth; each pre-proven in
-# driver_sim EXTRA since r10, re-verified by the r10 judge, and swept
-# at sf0.01/sf0.1/hostile/sf1 — green window ⇒ cumulative driver
-# evidence hits 248/248 oracle-paired queries, zero backlog again.
-# Rotated out to make the 10 slots (all multi-round green, to
-# driver_sim EXTRA): the 5 completed r10 re-proof slots
-# (sim_embed_quantize, e_mad_outliers, t_fuzzy_match_levenshtein,
-# ts_ewma_dyadic, j7_null_safe_join — each now has its
-# post-implementation-change green row) and 5 r7-pool rows with three
-# consecutive green rows each (w11_cumulative_distinct,
-# j9_bloom_prefilter_semi, ts_seasonal_naive_forecast,
-# e_two_proportion_ztest, g_triangle_count).  New round-11 surface
-# (MERGE full-sync WHEN NOT MATCHED BY SOURCE, MERGE WITH SCHEMA
-# EVOLUTION, deterministic hash-bucket sampling) is added BEHIND the
-# rotation and pre-proven in driver_sim EXTRA — the same discipline as
-# r7-r10.
+# its slot to a query that never had a driver row.  The window holds the
+# flagship, one composite per §2 family, one live representative per
+# capability family, then the rotation slots; every row is oracle-paired
+# (no rows-only slots).  tests/test_registry_order.py enforces prefix ∪
+# past-green coverage.  A row rotated out stays exercised in driver_sim's
+# EXTRA list, so a regression is caught before the driver's spot-check,
+# and new surface is added BEHIND the rotation: pre-proven in EXTRA
+# before it takes a slot.
 _PRIORITY: tuple[str, ...] = (
     "flagship_region_month_revenue",
     # §2 breadth composites (family anchors)
@@ -221,8 +175,8 @@ _PRIORITY: tuple[str, ...] = (
     "st_stateful_user_totals",
     "st_stream_static_join",
     # LLM-extension family anchors (one live representative per
-    # capability family; everything else in those families is r1–r7
-    # green and spot-checked in driver_sim's EXTRA list)
+    # capability family; everything else in those families is
+    # spot-checked in driver_sim's EXTRA list)
     "mh_minhash_lsh_dedup",
     "ann_ivf_fullprobe_exact",
     "mm_decode_roundtrip",
@@ -231,47 +185,32 @@ _PRIORITY: tuple[str, ...] = (
     "t_bpe_tokenize_pack",
     "e_funnel_conversion",
     "mv_incremental_join",
-    # ---- round-7-pool retained rows (4 remain; rb_map_funcs_breadth,
-    # mm_payload_dedup and mv_incremental_minmax rotated out for r12
-    # with FOUR consecutive green rows each — their slots carry the
-    # round-11 backlog below) ----
+    # ---- rotation slots ----
     "e_rolling_zscore_anomaly",
     "a19_exact_mode",
     "ts_m4_downsample",
     "ann_ivfpq_fullprobe_exact",
-    # ---- round-11 backlog: the only oracle-paired rows without driver
-    # evidence (pre-proven in driver_sim EXTRA since r11, judge
-    # re-verified at sf0.01).  Green window => 251/251 oracle-paired
-    # queries driver-evidenced, zero backlog.  MERGE full-sync /
-    # schema-evolution ref: `2 Medaillon architecture.py:534-540`. ----
+    # MERGE full-sync / schema evolution (`2 Medaillon
+    # architecture.py:534-540`) and deterministic sampling
     "vt_merge_full_sync",
     "vt_merge_schema_evolution",
     "cp_hash_sample_deterministic",
-    # ---- round-12 backlog: the 6 merge-on-read / metrics rows (the
-    # only oracle-paired rows without driver evidence; pre-proven in
-    # driver_sim EXTRA since r12 and judge re-verified at sf0.01).
-    # Green window => 257/257 oracle-paired queries driver-evidenced.
-    # Ref: MERGE `2 Medaillon architecture.py:534-540`, OPTIMIZE/ZORDER
-    # N2:455-458, DESCRIBE HISTORY `1 Data ingestion.py:196-198`. ----
+    # merge-on-read DML, ZORDER skipping and rewrite metrics (MERGE
+    # N2:534-540, OPTIMIZE/ZORDER N2:455-458, DESCRIBE HISTORY
+    # `1 Data ingestion.py:196-198`)
     "vt_merge_mor",
     "vt_delete_mor",
     "vt_update_mor",
     "vt_dv_sql_script",
     "vt_zorder_multi_skipping",
     "vt_history_rewrite_metrics",
-    # ---- round-8 pool survivor (the pipeline event-log family's only
-    # oracle row; its 6 siblings rotated out for r13 with FOUR
-    # consecutive green rows each — see the r13 note below) ----
+    # the pipeline event-log family's oracle row
     "pl_event_log_audit",
-    # ---- the 4-query round-9 pool (first green in r10; second rows) ----
+    # SQL-surface and LLM-extension breadth rows
     "g4_posexplode_outer_breadth",
     "g5_explode_outer_map",
     "b_unpivot_sql_clause",
     "sim_matryoshka_overlap",
-    # ---- the ENTIRE 10-query round-10 pool: every remaining
-    # never-evidenced oracle-paired query earns its first driver row
-    # here (⇒ 248/248 cumulative, zero backlog).  f21's row lands AFTER
-    # this round's shared-sanitizer control-char extension. ----
     "j10_left_join_lateral",
     "st_stream_stream_outer_join",
     "f19_variant_type_breadth",
@@ -283,40 +222,6 @@ _PRIORITY: tuple[str, ...] = (
     "f21_xml_funcs_breadth",
     "f22_timezone_convert_breadth",
 )
-# Rotated out for round 13 (all with FOUR consecutive green driver rows
-# r09-r12; they persist in CORRECTNESS_r09..r12 and stay exercised in
-# driver_sim's EXTRA spot-check list): rb_setops_breadth,
-# a20_hll_distinct_bounds, a21_weighted_median, w13_value_range_window,
-# g3_stack_inline_breadth, o5_null_ordering_breadth.
-# Rotated out for round 11 (all multi-round green; their driver rows
-# persist and they stay exercised in driver_sim's EXTRA spot-check
-# list): sim_embed_quantize, e_mad_outliers, t_fuzzy_match_levenshtein,
-# ts_ewma_dyadic, j7_null_safe_join (completed r10 re-proof slots),
-# w11_cumulative_distinct, j9_bloom_prefilter_semi,
-# ts_seasonal_naive_forecast, e_two_proportion_ztest, g_triangle_count
-# (r7-pool rows with three consecutive green rows each).
-# Rotated out for round 10 (all r9-green; their driver rows persist and
-# they stay exercised in driver_sim's EXTRA spot-check list):
-# prof_column_stats, t_rake_keywords, cp_mix_temperature, cp_source_mix.
-# Rotated out for round 9 (all r8-green; their driver rows persist and
-# they stay exercised in driver_sim's EXTRA spot-check list):
-# sd_semantic_dedup, w1_dedup_keep_latest, d_exact_dedup_keep_first,
-# tj_asof_click_view, j2_three_way_inner, vt_history_time_travel,
-# mm_audio_features, t_tfidf_topk, ws_medallion_gold,
-# a17_exact_median_twopass, a12_corr_covar, sh_simhash_dup_pairs,
-# sim_cosine_topk, vt_optimize_roundtrip, st_stream_dedup.
-# Rotated out for round 8 (the full 28-query r7 backlog, all first-time
-# green in CORRECTNESS_r07; their driver rows persist and they stay
-# exercised in driver_sim's EXTRA spot-check list):
-# mm_byte_features, ts_forward_fill, ts_spine_gapfill, ts_rollup_cascade,
-# ts_ohlc_bars, ts_ewma_dyadic, a14_bitwise_aggs, a15_value_histogram,
-# a16_freq_items_bound, e_mad_outliers, e_chi_square_independence,
-# cp_weighted_sample, cp_quality_percentile_gate, cp_dedup_stage_report,
-# cp_pack_fill_report, rb_array_hof_breadth, c5_recursive_cte_hierarchy,
-# j7_null_safe_join, j8_lateral_topk_per_region, w9_sliding_event_windows,
-# w10_ignore_nulls_window_breadth, t_url_parse, t_collocation_dice,
-# t_rake_keywords, sim_power_iteration_pc1, g_pagerank_dupgraph,
-# pp_partition_skew_report, mv_incremental_delete.
 
 
 def load_all() -> dict[str, QuerySpec]:

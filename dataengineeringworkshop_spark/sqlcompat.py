@@ -12,7 +12,7 @@ Scope (deliberately bounded to the workshop's idiom):
 - path steps are dot-separated identifiers after the colon; both
   ``a:b.c`` and the workshop's occasional ``a:b:c`` chaining are
   handled (the latter nests extractions);
-- colons inside single-quoted string literals are untouched;
+- colons inside string literals (``'…'`` or ``"…"``) are untouched;
 - array subscripts / ``::`` casts are NOT part of the reference surface
   and are left alone (``::`` never matches — the pattern requires an
   identifier immediately before and after a single colon).
@@ -33,35 +33,11 @@ _JSON_PATH_RE = re.compile(
 
 
 def _split_literals(sql: str) -> list[tuple[bool, str]]:
-    """Split into (is_string_literal, chunk) segments on single quotes
-    (with '' escaping inside literals, per SQL)."""
-    out: list[tuple[bool, str]] = []
-    buf, in_str = [], False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str and ch == "'" and i + 1 < len(sql) and sql[i + 1] == "'":
-            buf.append("''")
-            i += 2
-            continue
-        if ch == "'":
-            buf.append(ch)
-            if in_str:
-                out.append((True, "".join(buf)))
-                buf = []
-                in_str = False
-            else:
-                if len(buf) > 1:
-                    out.append((False, "".join(buf[:-1])))
-                buf = ["'"]
-                in_str = True
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    if buf:
-        out.append((in_str, "".join(buf)))
-    return out
+    """Split into (is_string_literal, chunk) segments that join back to
+    ``sql``.  ``'…'`` and ``"…"`` are both string literals, as Spark
+    reads them (quote rule: :func:`_literal_re`)."""
+    parts = re.split(f"({_literal_re(_STRING_QUOTES)})", sql)
+    return [(i % 2 == 1, p) for i, p in enumerate(parts) if p]
 
 
 def translate_sql(sql: str) -> str:
@@ -80,21 +56,27 @@ def translate_sql(sql: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# shared quote/paren-aware text scanning — THE one implementation behind
-# sqldml's statement splitting and dlt_sql's grammar walking (previously
-# three hand-rolled copies with subtly different quote rules)
+# shared quote/paren-aware text scanning — ONE quote rule behind
+# translate_sql's literal scoping, sqldml's statement splitting and
+# dlt_sql's grammar walking (previously four hand-rolled scanners with
+# subtly different quote rules)
 # ---------------------------------------------------------------------------
 
+_STRING_QUOTES = "'\""
 
-def _escape_len(text: str, i: int, quote: str) -> int:
-    """2 if ``text[i]`` starts a backslash escape inside a ``'``/``"``
-    literal (Spark's default string syntax — ``'don\\'t'``), else 0.
-    Backticks escape by doubling, which the plain close-reopen scan
-    already handles.  THE one escape rule, shared by all three scanners
-    below — change it here, not in a copy."""
-    if text[i] == "\\" and quote != "`" and i + 1 < len(text):
-        return 2
-    return 0
+
+def _literal_re(quotes: str) -> str:
+    """Regex of one quoted span: opened by any of ``quotes``, closed by
+    the same quote or the end of the text.  Inside ``'…'`` and ``"…"``
+    a backslash escapes the next character (Spark's default string
+    syntax — ``'don\\'t'``); backticks escape by doubling, which closing
+    and reopening already handles.  THE one quote rule — change it
+    here, not in a copy."""
+    return "|".join(
+        "`[^`]*(?:`|\\Z)" if q == "`"
+        else f"{q}(?:\\\\[\\s\\S]?|[^{q}\\\\])*(?:{q}|\\Z)"
+        for q in quotes
+    ) or "(?!)"
 
 
 def strip_line_comments(text: str, quotes: str = "'\"`") -> str:
@@ -103,110 +85,35 @@ def strip_line_comments(text: str, quotes: str = "'\"`") -> str:
     a comment.  Naive regex stripping would eat the rest of the line
     including the literal's closing quote, silently merging the mangled
     statement with the next one.  Newlines are preserved so statement
-    text keeps its shape.  Escape handling per :func:`_escape_len`."""
-    out: list[str] = []
-    quote = None
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if quote:
-            k = _escape_len(text, i, quote)
-            if k:
-                out.append(text[i : i + k])
-                i += k
-                continue
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in quotes:
-            quote = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "-" and i + 1 < n and text[i + 1] == "-":
-            while i < n and text[i] != "\n":
-                i += 1
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    text keeps its shape."""
+    return re.sub(f"({_literal_re(quotes)})|--[^\\n]*", lambda m: m[1] or "", text)
 
 
 def split_top_level(text: str, sep_re: str, quotes: str = "'") -> list[str]:
     """Split ``text`` on a regex separator matched only at paren depth 0
     and outside any of the ``quotes`` characters.  Separator matches are
-    consumed; quoting/nesting inside parts is preserved verbatim.
-    Escape handling per :func:`_escape_len`."""
-    pat = re.compile(sep_re, re.IGNORECASE)
-    parts, buf, depth, quote = [], [], 0, None
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if quote:
-            k = _escape_len(text, i, quote)
-            if k:
-                buf.append(text[i : i + k])
-                i += k
-                continue
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in quotes:
-            quote = ch
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            m = pat.match(text, i)
-            if m and m.end() > i:
-                parts.append("".join(buf))
-                buf = []
-                i = m.end()
-                continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
+    consumed; quoting/nesting inside parts is preserved verbatim."""
+    parts, depth, start = [], 0, 0
+    tokens = f"{_literal_re(quotes)}|([()])|({sep_re})"
+    for m in re.finditer(tokens, text, re.IGNORECASE):
+        if m[1]:
+            depth += 1 if m[1] == "(" else -1
+        elif m[2] is not None and depth == 0 and m.end() > m.start():
+            parts.append(text[start : m.start()])
+            start = m.end()
+    parts.append(text[start:])
     return parts
 
 
 def take_paren_group(text: str, quotes: str = "'\"`") -> tuple[str, str]:
     """``text`` starting at '(' → (content inside the matching paren,
-    remainder after it), quote-aware.  Escape handling per
-    :func:`_escape_len` — without it this scanner would close a literal
-    at a backslash-escaped quote and disagree with the other two about
-    string boundaries."""
+    remainder after it), quote-aware."""
     if not text or text[0] != "(":
         raise ValueError(f"expected '(' at start of: {text[:40]!r}")
-    depth, quote = 0, None
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if quote:
-            k = _escape_len(text, i, quote)
-            if k:
-                i += k
-                continue
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in quotes:
-            quote = ch
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
+    depth = 0
+    for m in re.finditer(f"{_literal_re(quotes)}|([()])", text):
+        if m[1]:
+            depth += 1 if m[1] == "(" else -1
             if depth == 0:
-                return text[1:i], text[i + 1 :]
-        i += 1
+                return text[1 : m.start()], text[m.end() :]
     raise ValueError(f"unbalanced parentheses in: {text[:80]!r}")

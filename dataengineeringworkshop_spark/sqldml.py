@@ -1,32 +1,35 @@
-"""SQL-string DML surface: run the reference's literal ``%sql`` DML
-cells verbatim against versioned tables.
+"""SQL-string surface of the versioned tables: the reference's literal
+``%sql`` cells run verbatim — ``ALTER TABLE ADD COLUMN`` (`1 Data
+ingestion.py:146-147`), ``UPDATE`` (N1:151-172, `2 Medaillon
+architecture.py:511-517`), ``MERGE INTO`` (N2:534-540), ``DESCRIBE
+HISTORY`` (N1:196-198) and ``VERSION AS OF`` (N1:210-212).  Stock Spark
+cannot run these against parquet tables; Databricks routes them to
+Delta, and :func:`execute` routes them to
+:class:`~dataengineeringworkshop_spark.tables.versioned.VersionedTable`.
 
-The workshop issues mutation DDL/DML as SQL text — ``ALTER TABLE ADD
-COLUMN`` (`1 Data ingestion.py:146-147`), ``UPDATE`` (N1:151-172,
-`2 Medaillon architecture.py:511-517`), ``MERGE INTO`` (N2:534-540),
-``DESCRIBE HISTORY`` (N1:196-198) and ``VERSION AS OF`` time travel
-(N1:210-212).  Stock Spark SQL rejects all of these against parquet
-tables; Databricks routes them to Delta.  This module is that router
-for :class:`~dataengineeringworkshop_spark.tables.versioned.VersionedTable`:
-:func:`execute` classifies a statement, parses the workshop-scoped
-grammar, and dispatches to the table API; everything else falls through
-to ``spark.sql`` (after the ``col:json.path`` translation in
-``sqlcompat``).
+One grammar, Spark's own: after the ``col:json.path`` translation
+(``sqlcompat``) the session's parser parses a statement once, and the
+plan's class decides.  ``UpdateTable``, ``DeleteFromTable`` and
+``MergeIntoTable`` go to the table API, with table names from the plan's
+relations and conditions and SET values from its expressions; MERGE
+aliases become the API's ``t.``/``s.`` on the expression tree, so no
+literal is rewritten.  Any other plan runs as a query, each ``<table>
+VERSION AS OF n`` in it (main plan, CTE body or subquery) read from a
+snapshot view.  MERGE takes what the table API has, in Spark ≥ 3.4's
+DSv2 row-level grammar: ``[WITH SCHEMA EVOLUTION]``, a table or subquery
+source, one ``WHEN MATCHED [AND c] THEN UPDATE SET *``, one ``WHEN NOT
+MATCHED [BY TARGET] THEN INSERT *``, one ``WHEN NOT MATCHED BY SOURCE
+[AND c] THEN DELETE | UPDATE SET …``.  Other clauses, an aliased UPDATE
+or DELETE target and multi-part table names raise
+``NotImplementedError``.
 
-Scope is deliberately the reference's surface: ``UPDATE t SET c = expr
-[, …] [WHERE cond]``, ``DELETE FROM t WHERE cond``, ``MERGE [WITH
-SCHEMA EVOLUTION] INTO t [AS]
-a USING src [AS] b ON cond WHEN MATCHED [AND cond] THEN UPDATE SET *
-[WHEN NOT MATCHED [BY TARGET] THEN INSERT *] [WHEN NOT MATCHED BY
-SOURCE [AND cond] THEN DELETE | UPDATE SET c = expr, …]`` (the modern
-full-sync MERGE form, Delta ≥2.3 / Spark 3.4 grammar),
-``ALTER TABLE t ADD COLUMN c type``,
-``DESCRIBE HISTORY t``, ``<table> VERSION AS OF n`` inside any query,
-plus the table-maintenance statements ``OPTIMIZE t [ZORDER BY (cols)]``
-(`2 Medaillon architecture.py:455-458` runs this as ``%sql``),
-``RESTORE TABLE t TO VERSION AS OF n``, and ``VACUUM t [RETAIN n
-VERSIONS]``.  Unsupported MERGE clause forms (column-level SET lists in
-the WHEN MATCHED branch) raise rather than mis-execute.
+Regexes remain only where Spark's parser rejects or misreads a
+statement: ``DESCRIBE HISTORY t`` parses as ``DescribeColumn`` (column
+``history`` of ``t``), so it is matched before the parse; ``OPTIMIZE``
+(N2:455-458), ``REORG``, ``RESTORE``, ``VACUUM`` and ``SHALLOW CLONE``
+do not parse; ``ALTER TABLE … SET TBLPROPERTIES``, ``SHOW
+TBLPROPERTIES`` and ``ADD COLUMN`` keep theirs, since Spark accepts a
+pair such as ``1bad = 'v'`` that :func:`_prop_pair` rejects.
 """
 
 from __future__ import annotations
@@ -34,31 +37,23 @@ from __future__ import annotations
 import re
 from typing import TYPE_CHECKING
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-from dataengineeringworkshop_spark.sqlcompat import translate_sql
+from dataengineeringworkshop_spark.sqlcompat import (
+    split_top_level,
+    strip_line_comments,
+    translate_sql,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from dataengineeringworkshop_spark.engine import Lakehouse
-
-
-def _strip(sql: str) -> str:
-    """Drop SQL line comments (quote-aware — a ``--`` inside a string
-    literal is data) and trailing semicolon/whitespace."""
-    from dataengineeringworkshop_spark.sqlcompat import strip_line_comments
-
-    return strip_line_comments(sql).strip().rstrip(";").strip()
 
 
 def split_statements(script: str) -> list[str]:
     """Split a multi-statement script on ``;`` outside quoted strings
     (single, double — Spark treats ``"…"`` as a string literal — and
     backticks); comments stripped quote-aware, empties dropped."""
-    from dataengineeringworkshop_spark.sqlcompat import (
-        split_top_level,
-        strip_line_comments,
-    )
-
     script = strip_line_comments(script)
     return [
         p.strip()
@@ -67,16 +62,6 @@ def split_statements(script: str) -> list[str]:
     ]
 
 
-def _split_top_level(text: str, sep_re: str) -> list[str]:
-    """Split on a regex separator only at paren depth 0 outside quotes
-    (shared scanner in sqlcompat)."""
-    from dataengineeringworkshop_spark.sqlcompat import split_top_level
-
-    return split_top_level(text, sep_re, quotes="'\"")
-
-
-_UPDATE_RE = re.compile(r"^update\s+(\w+)\s+set\s+(.*)$", re.IGNORECASE | re.DOTALL)
-_DELETE_RE = re.compile(r"^delete\s+from\s+(\w+)\s+where\s+(.*)$", re.IGNORECASE | re.DOTALL)
 _ALTER_RE = re.compile(
     r"^alter\s+table\s+(\w+)\s+add\s+columns?\s*\(?\s*(\w+)\s+([\w()<>, ]+?)\s*\)?$",
     re.IGNORECASE | re.DOTALL,
@@ -86,9 +71,7 @@ _SET_PROPS_RE = re.compile(
     r"^alter\s+table\s+(\w+)\s+set\s+tblproperties\s*\((.*)\)$",
     re.IGNORECASE | re.DOTALL,
 )
-_SHOW_PROPS_RE = re.compile(
-    r"^show\s+tblproperties\s+(\w+)$", re.IGNORECASE
-)
+_SHOW_PROPS_RE = re.compile(r"^show\s+tblproperties\s+(\w+)$", re.IGNORECASE)
 # a TBLPROPERTIES pair: key is quoted (with doubled-quote escapes) or
 # Spark's legal unquoted dotted-identifier form
 # (SET TBLPROPERTIES (delta.enableDeletionVectors = 'true')); value is
@@ -119,31 +102,8 @@ def _prop_pair(pair: str) -> tuple[str, str] | None:
     )
     value = v1.replace("''", "'") if v1 is not None else v2.replace('""', '"')
     return key, value
-_MERGE_RE = re.compile(
-    r"^merge\s+(with\s+schema\s+evolution\s+)?into\s+(\w+)(?:\s+as)?(?:\s+(\w+))?\s+"
-    r"using\s+(\w+)(?:\s+as)?(?:\s+(\w+))?\s+"
-    r"on\s+(.*?)\s*"
-    r"(when\s+.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MATCHED_RE = re.compile(
-    r"^when\s+matched\s*(?:and\s+(.*?))?\s*then\s+update\s+set\s+\*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_NOT_MATCHED_RE = re.compile(
-    r"^when\s+not\s+matched\s*(?:by\s+target\s*)?then\s+insert\s+\*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_NMBS_DELETE_RE = re.compile(
-    r"^when\s+not\s+matched\s+by\s+source\s*(?:and\s+(.*?))?\s*then\s+delete$",
-    re.IGNORECASE | re.DOTALL,
-)
-_NMBS_UPDATE_RE = re.compile(
-    r"^when\s+not\s+matched\s+by\s+source\s*(?:and\s+(.*?))?\s*"
-    r"then\s+update\s+set\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_VERSION_AS_OF_RE = re.compile(r"\b(\w+)\s+version\s+as\s+of\s+(\d+)\b", re.IGNORECASE)
+
+
 _OPTIMIZE_RE = re.compile(
     r"^optimize\s+(\w+)(?:\s+zorder\s+by\s*\(\s*([\w\s,]+?)\s*\))?$",
     re.IGNORECASE,
@@ -167,20 +127,22 @@ _CLONE_RE = re.compile(
     r"(?:\s+version\s+as\s+of\s+(\d+))?$",
     re.IGNORECASE,
 )
-
-
-def _alias_to_ts(cond: str, t_alias: str, s_alias: str) -> str:
-    """Rewrite the statement's target/source aliases to the ``t.``/``s.``
-    convention the VersionedTable.merge API uses."""
-    cond = re.sub(rf"\b{re.escape(t_alias)}\.", "t.", cond)
-    return re.sub(rf"\b{re.escape(s_alias)}\.", "s.", cond)
+# every time-travel clause ends in the keyword OF: a statement without
+# the word holds none, so only one with it pays the walk over its plan
+_MAY_TIME_TRAVEL = re.compile(r"\bof\b", re.IGNORECASE)
+_COMPARISONS = {
+    "EqualTo", "EqualNullSafe", "LessThan", "LessThanOrEqual",
+    "GreaterThan", "GreaterThanOrEqual",
+}
 
 
 def execute(lh: "Lakehouse", statement: str) -> DataFrame:
-    """Execute one SQL statement; DML/DDL/history/time-travel on
-    versioned tables is dispatched to the table API, anything else runs
-    through ``spark.sql`` with the JSON-path translation applied."""
-    sql = _strip(translate_sql(statement))
+    """Execute one SQL statement: DML, DDL, history and maintenance on
+    versioned tables go to the table API, anything else runs as a Spark
+    query."""
+    # quote-aware: a ``--`` inside a literal is data, not a comment
+    sql = strip_line_comments(translate_sql(statement))
+    sql = sql.strip().rstrip(";").strip()
 
     m = _HISTORY_RE.match(sql)
     if m:
@@ -190,7 +152,7 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
     if m:
         table, body = m.group(1), m.group(2)
         props: dict[str, str] = {}
-        for pair in _split_top_level(body, r","):
+        for pair in split_top_level(body, r",", quotes="'\""):
             kv = _prop_pair(pair)
             if kv is None:
                 raise ValueError(f"unparseable TBLPROPERTIES pair: {pair!r}")
@@ -207,151 +169,34 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
 
     m = _ALTER_RE.match(sql)
     if m:
-        table, col, dtype = m.group(1), m.group(2), m.group(3).strip()
-        lh.table(table).add_column(col, dtype)
-        lh.refresh_view(table)
-        return _status(lh, "ALTER TABLE ADD COLUMN", table)
-
-    m = _UPDATE_RE.match(sql)
-    if m:
-        table, rest = m.group(1), m.group(2)
-        body, *where = _split_top_level(rest, r"\bwhere\b")
-        set_exprs: dict[str, str] = {}
-        for assign in _split_top_level(body, r","):
-            am = re.match(r"^\s*(\w+)\s*=\s*(.*)$", assign, re.DOTALL)
-            if not am:
-                raise ValueError(f"unparseable SET assignment: {assign!r}")
-            set_exprs[am.group(1)] = am.group(2).strip()
-        lh.table(table).update(set_exprs, where[0].strip() if where else None)
-        lh.refresh_view(table)
-        return _status(lh, "UPDATE", table)
-
-    m = _DELETE_RE.match(sql)
-    if m:
-        table, cond = m.group(1), m.group(2).strip()
-        lh.table(table).delete(cond)
-        lh.refresh_view(table)
-        return _status(lh, "DELETE", table)
-
-    m = _MERGE_RE.match(sql)
-    if m:
-        schema_evolution = bool(m.group(1))
-        table, t_alias, source, s_alias, on, clauses_text = (
-            m.group(2),
-            m.group(3) or m.group(2),
-            m.group(4),
-            m.group(5) or m.group(4),
-            m.group(6),
-            m.group(7),
-        )
-        update_condition, insert, has_matched = None, False, False
-        nmbs_action: str | None = None
-        nmbs_condition: str | None = None
-        nmbs_set: dict[str, str] | None = None
-        clauses = [
-            "when " + c.strip()
-            for c in _split_top_level(clauses_text, r"\bwhen\b")
-            if c.strip()
-        ]
-        for clause in clauses:
-            mm = _MATCHED_RE.match(clause)
-            if mm:
-                has_matched = True
-                update_condition = (
-                    _alias_to_ts(mm.group(1).strip(), t_alias, s_alias)
-                    if mm.group(1)
-                    else None
-                )
-                continue
-            mm = _NMBS_DELETE_RE.match(clause)
-            if mm:
-                nmbs_action = "delete"
-                nmbs_condition = (
-                    _alias_to_ts(mm.group(1).strip(), t_alias, s_alias)
-                    if mm.group(1)
-                    else None
-                )
-                continue
-            mm = _NMBS_UPDATE_RE.match(clause)
-            if mm:
-                nmbs_action = "update"
-                nmbs_condition = (
-                    _alias_to_ts(mm.group(1).strip(), t_alias, s_alias)
-                    if mm.group(1)
-                    else None
-                )
-                nmbs_set = {}
-                for assign in _split_top_level(mm.group(2), r","):
-                    am = re.match(
-                        r"^\s*(?:(\w+)\.)?(\w+)\s*=\s*(.*)$", assign, re.DOTALL
-                    )
-                    if not am:
-                        raise ValueError(
-                            f"unparseable NOT MATCHED BY SOURCE SET: {assign!r}"
-                        )
-                    nmbs_set[am.group(2)] = _alias_to_ts(
-                        am.group(3).strip(), t_alias, s_alias
-                    )
-                continue
-            if _NOT_MATCHED_RE.match(clause):
-                insert = True
-                continue
-            raise NotImplementedError(
-                f"MERGE clause not in the workshop surface: {clause!r}"
-            )
-        lh.table(table).merge(
-            lh.spark.table(source),
-            on=_alias_to_ts(on.strip(), t_alias, s_alias),
-            update_condition=update_condition,
-            insert=insert,
-            update=has_matched,
-            unmatched_by_source_action=nmbs_action,
-            unmatched_by_source_condition=nmbs_condition,
-            unmatched_by_source_set=nmbs_set,
-            schema_evolution=schema_evolution,
-        )
-        lh.refresh_view(table)
-        return _status(lh, "MERGE", table)
+        lh.table(m[1]).add_column(m[2], m[3].strip())
+        return _done(lh, "ALTER TABLE ADD COLUMN", m[1])
 
     m = _OPTIMIZE_RE.match(sql)
     if m:
-        table = m.group(1)
-        zorder = (
-            [c.strip() for c in m.group(2).split(",")] if m.group(2) else None
-        )
-        lh.table(table).optimize(zorder_by=zorder)
-        lh.refresh_view(table)
-        return _status(lh, "OPTIMIZE", table)
+        zorder = [c.strip() for c in m[2].split(",")] if m[2] else None
+        lh.table(m[1]).optimize(zorder_by=zorder)
+        return _done(lh, "OPTIMIZE", m[1])
 
     m = _REORG_RE.match(sql)
     if m:
-        table = m.group(1)
-        lh.table(table).reorg_purge(
-            threshold=float(m.group(2)) if m.group(2) else 0.0
-        )
-        lh.refresh_view(table)
-        return _status(lh, "REORG", table)
+        lh.table(m[1]).reorg_purge(threshold=float(m[2]) if m[2] else 0.0)
+        return _done(lh, "REORG", m[1])
 
     m = _RESTORE_RE.match(sql)
     if m:
-        table, version = m.group(1), int(m.group(2))
-        lh.table(table).restore(version)
-        lh.refresh_view(table)
-        return _status(lh, "RESTORE", table)
+        lh.table(m[1]).restore(int(m[2]))
+        return _done(lh, "RESTORE", m[1])
 
     m = _CLONE_RE.match(sql)
     if m:
-        tgt, src, ver = m.group(1), m.group(2), m.group(3)
-        lh.table(src).shallow_clone(
-            lh._table_path(tgt), int(ver) if ver else None
-        )
-        lh.refresh_view(tgt)
-        return _status(lh, "SHALLOW CLONE", tgt)
+        version = int(m[3]) if m[3] else None
+        lh.table(m[2]).shallow_clone(lh._table_path(m[1]), version)
+        return _done(lh, "SHALLOW CLONE", m[1])
 
     m = _VACUUM_RE.match(sql)
     if m:
-        table = m.group(1)
-        if not m.group(2):
+        if not m[2]:
             # Delta's bare VACUUM keeps a 7-day window; this engine's
             # retention unit is VERSIONS, and defaulting to 1 would
             # silently destroy all time travel — require the clause
@@ -360,19 +205,216 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
                 "here (version-count retention; a bare VACUUM would drop "
                 "every historical version)"
             )
-        lh.table(table).vacuum(retain_last=int(m.group(2)))
-        lh.refresh_view(table)
-        return _status(lh, "VACUUM", table)
+        lh.table(m[1]).vacuum(retain_last=int(m[2]))
+        return _done(lh, "VACUUM", m[1])
 
-    # time travel inside an otherwise-ordinary query: register each
-    # "<table> VERSION AS OF n" as a snapshot temp view and substitute
-    def _tt(mm: re.Match) -> str:
-        table, version = mm.group(1), int(mm.group(2))
+    plan = _parse(lh, sql)
+    kind = plan.nodeName()
+    if kind == "UpdateTable":
+        table = _name(plan.table())
+        sets = {_column(a.key(), table): _sql(a.value()) for a in _seq(plan.assignments())}
+        lh.table(table).update(sets, _sql(_opt(plan.condition())))
+        return _done(lh, "UPDATE", table)
+    if kind == "DeleteFromTable":
+        table = _name(plan.table())
+        lh.table(table).delete(_sql(plan.condition()))
+        return _done(lh, "DELETE", table)
+    if kind == "MergeIntoTable":
+        return _done(lh, "MERGE", _merge(lh, sql, plan))
+    return _query(lh, sql, plan)
+
+
+def _merge(lh: "Lakehouse", sql: str, plan) -> str:
+    """Run the parsed MERGE ``plan`` of ``sql`` through
+    ``VersionedTable.merge``; returns the target table's name."""
+    target, t_qual = _side(plan.targetTable())
+    src, s_qual = _side(plan.sourceTable())
+    table = _name(target)
+    if src.nodeName() == "UnresolvedRelation":
+        source = lh.spark.table(_name(src))
+    else:  # a subquery: run its own span of the statement
+        o = src.origin()
+        source = _query(lh, sql[o.startIndex().get() : o.stopIndex().get() + 1])
+    quals = {
+        q.lower(): to for q, to in ((t_qual, "t"), (s_qual, "s")) if q and q.lower() != to
+    }
+
+    def cond(action) -> str | None:
+        return None if action is None else _sql(_opt(action.condition()), quals)
+
+    matched = _clause(plan.matchedActions(), "UpdateStarAction")
+    inserted = _clause(plan.notMatchedActions(), "InsertStarAction")
+    by_source = _clause(plan.notMatchedBySourceActions(), "DeleteAction", "UpdateAction")
+    if cond(inserted) is not None:
+        raise NotImplementedError("MERGE WHEN NOT MATCHED AND <condition> is not supported")
+    by_source_set = None
+    if by_source is not None and by_source.nodeName() == "UpdateAction":
+        by_source_set = {
+            _column(a.key(), t_qual): _sql(a.value(), quals)
+            for a in _seq(by_source.assignments())
+        }
+    lh.table(table).merge(
+        source,
+        on=_sql(plan.mergeCondition(), quals),
+        update_condition=cond(matched),
+        insert=inserted is not None,
+        update=matched is not None,
+        unmatched_by_source_action=(
+            None if by_source is None
+            else by_source.nodeName().removesuffix("Action").lower()
+        ),
+        unmatched_by_source_condition=cond(by_source),
+        unmatched_by_source_set=by_source_set,
+        schema_evolution=plan.withSchemaEvolution(),
+    )
+    return table
+
+
+def _query(lh: "Lakehouse", sql: str, plan=None) -> DataFrame:
+    """Run the query ``sql`` (parsed as ``plan`` when given), each
+    ``<table> VERSION AS OF n`` in it read from a snapshot view
+    ``<table>__v<n>``.  Without time travel the parsed plan runs, so the
+    text is parsed once."""
+    if plan is None:
+        plan = _parse(lh, sql)
+    spans = _time_travel(plan) if _MAY_TIME_TRAVEL.search(sql) else set()
+    if not spans:
+        jdf = _jvm_of(lh.spark)[1].ofRows(lh.spark._jsparkSession, plan)
+        return DataFrame(jdf, lh.spark)
+    for start, stop, table, version in sorted(spans, reverse=True):
         view = f"{table}__v{version}"
         lh.table(table).read(version=version).createOrReplaceTempView(view)
-        return view
+        sql = f"{sql[:start]}`{view.replace('`', '``')}`{sql[stop + 1:]}"
+    return lh.spark.sql(sql)
 
-    return lh.spark.sql(_VERSION_AS_OF_RE.sub(_tt, sql))
+
+def _time_travel(plan) -> set[tuple[int, int, str, int]]:
+    """``(start, stop, table, version)`` of each ``<table> VERSION AS OF
+    n`` in ``plan``, its CTE bodies and its subqueries (a node's
+    ``innerChildren``): the span of statement text from the relation's
+    first character to the clause's last."""
+    found, todo = set(), [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() != "RelationTimeTravel":
+            todo += _seq(node.children()) + _seq(node.innerChildren())
+            continue
+        version = _opt(node.version())
+        if version is None:
+            raise NotImplementedError("TIMESTAMP AS OF: snapshots are addressed by version")
+        rel = node.relation()
+        start, stop = rel.origin().startIndex().get(), node.origin().stopIndex().get()
+        found.add((start, stop, _name(rel), int(version)))
+    return found
+
+
+def _parse(lh: "Lakehouse", sql: str):
+    """The session parser's unresolved plan of ``sql`` (a JVM object)."""
+    return _jvm_of(lh.spark)[0].parsePlan(sql)
+
+
+def _jvm_of(spark):
+    """(SQL parser, ``Dataset`` class) of a session, looked up once per
+    session: each step of a py4j lookup is a round trip to the JVM."""
+    found = getattr(spark, "_dew_sql_jvm", None)
+    if found is None:
+        found = spark._dew_sql_jvm = (
+            spark._jsparkSession.sessionState().sqlParser(),
+            spark._jvm.org.apache.spark.sql.classic.Dataset,
+        )
+    return found
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _opt(o):
+    return o.get() if o.isDefined() else None
+
+
+def _side(node) -> tuple:
+    """``(plan, qualifier)`` of a MERGE side: the plan under its
+    ``SubqueryAlias`` and the alias, else the table name, that qualifies
+    its columns (``None`` for an unaliased subquery)."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.child(), node.alias()
+    return node, _name(node) if node.nodeName() == "UnresolvedRelation" else None
+
+
+def _clause(actions, *forms: str):
+    """The one MERGE action of a WHEN kind, ``None`` when there is none."""
+    acts = _seq(actions)
+    if len(acts) > 1 or any(a.nodeName() not in forms for a in acts):
+        raise NotImplementedError(
+            "MERGE clause not in the workshop surface: "
+            + "; ".join(a.toString() for a in acts)
+        )
+    return acts[0] if acts else None
+
+
+def _name(node) -> str:
+    """The table an ``UnresolvedRelation`` names.  Tables are
+    directories of the lake, so only a one-part name addresses one."""
+    if node.nodeName() != "UnresolvedRelation":
+        raise NotImplementedError(f"not a table name: {node.toString().strip()!r}")
+    parts = _seq(node.multipartIdentifier())
+    if len(parts) != 1:
+        raise NotImplementedError(f"multi-part table name {'.'.join(parts)!r}")
+    return parts[0]
+
+
+def _column(key, qualifier: str) -> str:
+    """The column a SET assignment writes: ``c`` or ``<qualifier>.c``."""
+    parts = _seq(key.nameParts())
+    if len(parts) == 2 and parts[0].lower() == qualifier.lower():
+        parts = parts[1:]
+    if len(parts) != 1:
+        raise NotImplementedError(f"SET target {'.'.join(parts)!r} is not a column")
+    return parts[0]
+
+
+def _sql(e, quals: dict[str, str] | None = None) -> str | None:
+    """Expression ``e`` as SQL text (``None`` for ``None``), after
+    :func:`_requalify` with ``quals``.  Spark renders it, except that a
+    conjunction renders as ``x AND y`` over bare comparisons: Spark's
+    ``((k >= 3) AND …)`` would defeat the stats pruning and the merge
+    key pairing, which read ``k >= 3 AND …``."""
+    if e is None:
+        return None
+    if quals:
+        e = _requalify(e, quals)
+    kind = e.nodeName()
+    if kind == "And":
+        return f"{_sql(e.left())} AND {_sql(e.right())}"
+    if kind in _COMPARISONS:
+        return f"{e.left().sql()} {e.symbol()} {e.right().sql()}"
+    return e.sql()
+
+
+def _requalify(e, quals: dict[str, str]):
+    """``e`` with each column reference ``q.c`` whose qualifier is a key
+    of ``quals`` (lower case) renamed ``quals[q].c`` — on the expression
+    tree, so a literal such as ``'q.c'`` stays as it is."""
+    jvm = SparkContext._jvm
+    if e.nodeName() == "UnresolvedAttribute":
+        parts = _seq(e.nameParts())
+        if len(parts) < 2 or parts[0].lower() not in quals:
+            return e
+        return jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
+            jvm.PythonUtils.toSeq([quals[parts[0].lower()], *parts[1:]])
+        )
+    kids = _seq(e.children())
+    new = [_requalify(k, quals) for k in kids]
+    if all(n is k for n, k in zip(new, kids)):
+        return e
+    return e.withNewChildren(jvm.PythonUtils.toSeq(new))
+
+
+def _done(lh: "Lakehouse", operation: str, table: str) -> DataFrame:
+    """Re-point ``table``'s view at its new version; the status row."""
+    lh.refresh_view(table)
+    return _status(lh, operation, table)
 
 
 def _status(lh: "Lakehouse", operation: str, table: str) -> DataFrame:

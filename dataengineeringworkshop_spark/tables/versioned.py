@@ -247,18 +247,44 @@ class VersionedTable:
             props = self._properties_scan()
         if op == "SET TBLPROPERTIES":
             props.update(params.get("properties") or {})
-        return self._commit(Commit(
-            version=0 if prev is None else prev.version + 1,
-            timestamp_ms=int(time.time() * 1000),
-            operation=op,
-            operation_params=params,
-            data_dirs=kept + added,
-            schema_ddl=schema_ddl or prev.schema_ddl,
-            metrics={**derived, **(metrics or {})},
-            file_stats=file_stats,
-            dv_dirs=dv_dirs,
-            properties=props,
-        ))
+        version = 0 if prev is None else prev.version + 1
+        try:
+            return self._commit(Commit(
+                version=version,
+                timestamp_ms=int(time.time() * 1000),
+                operation=op,
+                operation_params=params,
+                data_dirs=kept + added,
+                schema_ddl=schema_ddl or prev.schema_ddl,
+                metrics={**derived, **(metrics or {})},
+                file_stats=file_stats,
+                dv_dirs=dv_dirs,
+                properties=props,
+            ))
+        except CommitConflictError:
+            self._drop_unpublished(version, prev, added + [dv])
+            raise
+
+    def _drop_unpublished(self, version: int, prev: Commit | None, refs) -> None:
+        """Delete the directories a commit of ``version`` that lost its
+        race wrote, so they do not wait for ``vacuum``.  Only a ref that
+        is a directory directly under this table, named by
+        :meth:`_new_data_dir` for ``version`` and named by no ref of
+        ``prev`` goes: RESTORE re-adds older directories and CLONE adds
+        another table's, and neither may be touched."""
+        import shutil
+
+        live = set()
+        if prev is not None:
+            live = {r.split("/", 1)[0] for r in prev.data_dirs + (prev.dv_dirs or [])}
+        for ref in refs:
+            if (
+                ref
+                and "/" not in ref
+                and ref.startswith(f"v{version:08d}-")
+                and ref not in live
+            ):
+                shutil.rmtree(f"{self.path}/{ref}", ignore_errors=True)
 
     def _commit(self, c: Commit) -> Commit:
         """Publish ``c`` put-if-absent — the one publish point, reached
@@ -1509,8 +1535,10 @@ def _footer_stats(abs_dir: str, rel_dir: str, columns: list[str]) -> dict:
     return out
 
 
+# a number may carry the type suffix Spark's SQL rendering gives it
+# (``3000000000L``, ``1.5BD``): Lakehouse.sql passes rendered predicates
 _CMP_RE = re.compile(
-    r"^\s*(\w+)\s*(<=|>=|=|<|>)\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$"
+    r"^\s*(\w+)\s*(<=|>=|=|<|>)\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)(?:BD|[LSYD])?\s*$"
 )
 
 

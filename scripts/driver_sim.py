@@ -25,28 +25,19 @@ TABLES = (
 # resolved from registry.DRIVER_PREFIX inside main() (importable only
 # after __spark_entry__ has put the repo on sys.path)
 EXTRA = [
-    # round-13 addition not yet in the evidence prefix (r14 rotation
-    # pool) — exercised here so it arrives at its rotation already
-    # proven
+    # Post-prefix spot checks.  A row rotated out of the evidence prefix
+    # stays here, so a regression is caught before the driver's
+    # spot-check; new surface is proven here before it takes a slot.
     "vt_reorg_purge_threshold",
-    # four-round-green rows rotated OUT of the r13 prefix (their slots
-    # carry the six round-12 merge-on-read/metrics rows) — keep them
-    # exercised so a regression is caught before the judge's spot-check
     "rb_setops_breadth",
     "a20_hll_distinct_bounds",
     "a21_weighted_median",
     "w13_value_range_window",
     "g3_stack_inline_breadth",
     "o5_null_ordering_breadth",
-    # four-round-green rows rotated OUT of the r12 prefix (their slots
-    # carry the round-11 backlog's first driver rows) — keep them
-    # exercised so a regression is caught before the judge's spot-check
     "rb_map_funcs_breadth",
     "mm_payload_dedup",
     "mv_incremental_minmax",
-    # multi-round-green rows rotated OUT of the r11 prefix (their slots
-    # went to the round-10 pool's first-time rows) — keep them
-    # exercised so a regression is caught before the judge's spot-check
     "sim_embed_quantize",
     "e_mad_outliers",
     "t_fuzzy_match_levenshtein",
@@ -57,15 +48,10 @@ EXTRA = [
     "ts_seasonal_naive_forecast",
     "e_two_proportion_ztest",
     "g_triangle_count",
-    # r9-green rows rotated OUT of the r10 prefix (their slots went to
-    # the round-9 pool's first-time rows) — keep them exercised so a
-    # regression is caught before the judge's spot-check
     "prof_column_stats",
     "t_rake_keywords",
     "cp_mix_temperature",
     "cp_source_mix",
-    # r8-green rows rotated OUT of the r9 prefix — keep them exercised
-    # so a regression is caught before the judge's spot-check
     "sd_semantic_dedup",
     "w1_dedup_keep_latest",
     "d_exact_dedup_keep_first",
@@ -83,9 +69,6 @@ EXTRA = [
     "st_stream_dedup",
     "cp_bm25_search",
     "st_session_eviction",
-    # the full 28-query r7 backlog rotated OUT of the r8 prefix (all
-    # first-time green in CORRECTNESS_r07) — keep them exercised so a
-    # regression is caught before the judge's spot-check
     "mm_byte_features",
     "ts_forward_fill",
     "ts_spine_gapfill",
@@ -110,12 +93,7 @@ EXTRA = [
     "g_pagerank_dupgraph",
     "pp_partition_skew_report",
     "mv_incremental_delete",
-    # proven rows rotated OUT of the mid-round-6 prefix — keep them
-    # exercised in the sim so a regression is caught before the judge's
-    # spot-check
     "vt_maintenance_sql",
-    # r4-proven rows rotated OUT of the r5 prefix — keep them exercised
-    # in the sim so a regression is caught before the judge's spot-check
     "tj_sessionize_gap30",
     "tj_range_click_purchase",
     "cp_stratified_sample",
@@ -142,8 +120,6 @@ EXTRA = [
     "st_windowed_event_counts",
     "cp_cdc_passage_chunks",
     "cp_shared_passages",
-    # r5-proven rows rotated OUT of the r6 prefix — keep them exercised
-    # so a regression is caught before the judge's spot-check
     "d_dedup_survivors",
     "ann_pq_fullrerank_exact",
     "tj_sessionize_sql_script",
@@ -172,8 +148,7 @@ EXTRA = [
     "ann_ivfpq_topk",
     "rb_string_funcs_breadth",
     "rb_time_funcs_breadth",
-    # r6-proven rows rotated OUT of the r7 prefix — keep them
-    # exercised so a regression is caught before the judge's spot-check
+    # more rows rotated out of the prefix
     "vt_table_diff",
     "a18_count_min_sketch",
     "pp_zorder_layout",

@@ -59,3 +59,55 @@ def test_dml_job_budget(spark, tmp_path, jobs_started, op, mode):
         assert len(jobs) == BUDGET[op, mode]
     else:
         assert len(jobs) <= BUDGET[op, mode]
+
+
+def test_sql_rescue_update_job_budget(spark, tmp_path, jobs_started):
+    """The medallion rescue UPDATE (N2:511-517) through ``Lakehouse.sql``
+    starts no more jobs than the table API's UPDATE: the probe collect
+    and the rewrite, with no job for the parse or the view refresh."""
+    from dataengineeringworkshop_spark.engine import Lakehouse
+
+    lh = Lakehouse(str(tmp_path / "lake"), spark=spark)
+    t = VersionedTable(spark, lh._table_path("silver"))
+    for i in range(4):
+        df = spark.range(i * 100, i * 100 + 100).selectExpr(
+            "id AS k",
+            "IF(id % 50 = 0, NULL, id) AS ts",
+            "IF(id % 50 = 0, '{\"ts\": \"2024-01-01 10:00:00\"}', NULL) AS _rescued_data",
+        )
+        t.write(df.coalesce(1), mode="overwrite" if i == 0 else "append")
+    lh.refresh_view("silver")
+    with jobs_started() as jobs:
+        lh.sql(
+            "UPDATE silver SET ts = unix_timestamp(_rescued_data:ts) "
+            "WHERE _rescued_data IS NOT NULL AND ts IS NULL"
+        )
+    assert len(jobs) <= 3
+    assert lh.sql("SELECT count(*) AS n FROM silver WHERE ts = 1704103200").first().n == 8
+
+
+def test_sql_merge_starts_the_api_merge_jobs(spark, tmp_path, jobs_started):
+    """A SQL MERGE with its own aliases reaches ``merge`` as ``t.k =
+    s.k``, so it keeps the source probe and the key-range pruning and
+    starts exactly the jobs of the same merge through the table API."""
+    from dataengineeringworkshop_spark.engine import Lakehouse
+
+    lh = Lakehouse(str(tmp_path / "lake"), spark=spark)
+    for name in ("m", "api"):
+        _four_file_table(spark, lh._table_path(name))
+    lh.refresh_view("m")
+    spark.createDataFrame(
+        [(5, 50), (6, 60), (1000, 1)], "k long, v long"
+    ).createOrReplaceTempView("src")
+    with jobs_started() as sql_jobs:
+        lh.sql(
+            "MERGE INTO m a USING src b ON a.k = b.k "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+    with jobs_started() as api_jobs:
+        lh.table("api").merge(spark.table("src"), on="t.k = s.k")
+    assert len(sql_jobs) == len(api_jobs)
+    assert lh.table("m")._latest().operation_params["on"] == "t.k = s.k"
+    assert sorted(lh.table("m").read().collect()) == sorted(
+        lh.table("api").read().collect()
+    )

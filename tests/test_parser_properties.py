@@ -5,7 +5,7 @@ parse."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dataengineeringworkshop_spark.pipeline.dlt_sql import parse_statement
@@ -94,31 +94,45 @@ def test_dlt_parse_roundtrip(case):
     case=_kw_case,
     cond=st.sampled_from([None, "k = 'x'", "n > 3 AND m < 9"]),
 )
-def test_sqldml_update_parse_shapes(table, col, ws, case, cond):
-    """UPDATE statements in arbitrary case/whitespace classify and split
-    into the same (table, set, where) triple the dispatcher executes."""
-    import re
+@example(table="where", col="set", ws=" ", case=str.upper, cond="n > 3 AND m < 9")
+@example(table="select", col="null", ws="\n", case=str.lower, cond=None)
+def test_sqldml_update_parse_shapes(
+    spark_session_global, tmp_path_factory, table, col, ws, case, cond
+):
+    """UPDATE statements in arbitrary case/whitespace reach
+    ``VersionedTable.update`` as the same (table, set, where) triple,
+    compared after Spark's own rendering (``col + 1`` is ``(col +
+    1)``); identifiers that are keywords (``UPDATE where SET set = set
+    + 1``) parse too."""
+    import pytest
 
-    from dataengineeringworkshop_spark.sqldml import (
-        _split_top_level,
-        _strip,
-        _UPDATE_RE,
-    )
+    from dataengineeringworkshop_spark.engine import Lakehouse
+    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
+
+    spark = spark_session_global
+    parser = spark._jsparkSession.sessionState().sqlParser()
+
+    def rendered(expr: str | None) -> str | None:
+        return None if expr is None else parser.parseExpression(expr).sql()
 
     stmt = f"{case('update')}{ws}{table}{ws}{case('set')}{ws}{col} = {col} + 1"
     if cond:
         stmt += f"{ws}{case('where')}{ws}{cond}"
     stmt += " ;"
-    m = _UPDATE_RE.match(_strip(stmt))
-    assert m and m.group(1) == table
-    body, *where = _split_top_level(m.group(2), r"\bwhere\b")
-    am = re.match(r"^\s*(\w+)\s*=\s*(.*)$", body, re.DOTALL)
-    assert am and am.group(1) == col
-    assert am.group(2).strip() == f"{col} + 1"
-    if cond:
-        assert where and where[0].strip() == cond
-    else:
-        assert not where
+    got = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            VersionedTable, "update",
+            lambda t, set_exprs, condition=None: got.append((t.path, set_exprs, condition)),
+        )
+        mp.setattr(Lakehouse, "refresh_view", lambda lh, name: None)
+        lh = Lakehouse(str(tmp_path_factory.getbasetemp() / "upd"), spark=spark)
+        lh.sql(stmt)
+    [(path, set_exprs, where)] = got
+    assert path == lh.table(table).path
+    assert list(set_exprs) == [col]
+    assert rendered(set_exprs[col]) == rendered(f"{col} + 1")
+    assert rendered(where) == rendered(cond)
 
 
 # ---------------------------------------------------------------------------

@@ -34,6 +34,9 @@ from dataengineeringworkshop_spark.sqlcompat import translate_sql
         ("x::int + props:k", "x::int + get_json_object(props, '$.k')"),
         ("SELECT ':notapath' AS s", "SELECT ':notapath' AS s"),
         ("SELECT 'it''s: fine' AS s, props:k", "SELECT 'it''s: fine' AS s, get_json_object(props, '$.k')"),
+        # backslash escapes and double-quoted strings are literals too
+        (r"SELECT 'don\'t a:b'", r"SELECT 'don\'t a:b'"),
+        ('SELECT "x:y"', 'SELECT "x:y"'),
     ],
 )
 def test_translate_sql(src, want):

@@ -249,3 +249,105 @@ def test_sql_tblproperties_unquoted_key_and_escapes(spark, tmp_path):
     t = open_table(spark, lh._table_path("t"))
     assert t._latest().operation_params.get("mode") == "merge-on-read"
     assert lh.sql("SELECT count(*) AS n FROM t").first().n == 25
+
+
+# ---------------------------------------------------------------------------
+# One grammar: statements Spark's parser reads the way Spark reads them.
+# ---------------------------------------------------------------------------
+
+
+def _mk_m(lh):
+    """Target ``m`` and source view ``src``: k=1 matches, k=3 is new."""
+    lh.create_table(
+        "m", lh.spark.createDataFrame([(1, "old", "x"), (2, "keep", "y")], "k int, v string, r string")
+    )
+    lh.spark.createDataFrame(
+        [(1, "new", "b.k"), (3, "ins", "z")], "k int, v string, r string"
+    ).createOrReplaceTempView("src")
+
+
+def test_sql_merge_alias_text_inside_literal(lh):
+    """``'b.k'`` is data: renaming the aliases must not rewrite it, so
+    the matched row whose r is the string 'b.k' updates."""
+    _mk_m(lh)
+    lh.sql(
+        "MERGE INTO m a USING src b ON a.k = b.k "
+        "WHEN MATCHED AND b.r = 'b.k' THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = {r.k: r.v for r in lh.sql("SELECT k, v FROM m").collect()}
+    assert got == {1: "new", 2: "keep", 3: "ins"}
+
+
+def test_sql_merge_case_when_in_on(lh):
+    """A CASE WHEN inside ON is part of the condition, not a clause."""
+    _mk_m(lh)
+    lh.sql(
+        "MERGE INTO m t USING src s "
+        "ON t.k = CASE WHEN s.k > 2 THEN -1 ELSE s.k END "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = {r.k: r.v for r in lh.sql("SELECT k, v FROM m").collect()}
+    assert got == {1: "new", 2: "keep", 3: "ins"}
+
+
+def test_sql_version_as_of_in_literal_cte_and_subquery(lh):
+    """Time travel is read from the plan: text inside a literal is left
+    alone, and a snapshot in a CTE body or an IN subquery resolves."""
+    _mk_stores(lh)
+    lh.sql("DELETE FROM stores WHERE id LIKE 'MEL%'")  # v1: 2 rows left
+    assert lh.sql("SELECT 'stores version as of 0' AS s").first().s == (
+        "stores version as of 0"
+    )
+    cte = lh.sql(
+        "WITH old AS (SELECT * FROM stores VERSION AS OF 0) "
+        "SELECT count(*) AS n FROM old"
+    )
+    assert cte.first().n == 4
+    gone = lh.sql(
+        "SELECT count(*) AS n FROM stores VERSION AS OF 0 WHERE id NOT IN "
+        "(SELECT id FROM stores version as of 1)"
+    )
+    assert gone.first().n == 2
+
+
+def test_sql_script_semicolon_and_dashes_in_literals(lh):
+    """``;`` and ``--`` inside literals are data, through the script
+    splitter, the comment stripper and the parse."""
+    _mk_stores(lh)
+    out = lh.sql_script(
+        "UPDATE stores SET name = 'a;b -- c' WHERE id = 'SYD01'; -- tail\n"
+        "SELECT name, 'x;-- stores version as of 0' AS s FROM stores "
+        "WHERE id = 'SYD01'"
+    )
+    row = out[-1].first()
+    assert (row.name, row.s) == ("a;b -- c", "x;-- stores version as of 0")
+
+
+def test_sql_block_comment(lh):
+    _mk_stores(lh)
+    lh.sql("UPDATE /* the N1 table */ stores SET name = 'S' WHERE id = 'SYD01'")
+    assert lh.sql("SELECT name FROM stores WHERE id = 'SYD01'").first().name == "S"
+
+
+def test_sql_backticked_table_name(lh):
+    _mk_stores(lh)
+    lh.sql("DELETE FROM `stores` WHERE id = 'AKL01'")
+    assert lh.sql("SELECT count(*) AS n FROM stores").first().n == 3
+
+
+def test_sql_merge_subquery_source(lh):
+    """USING (subquery) alias: the source is the subquery's rows."""
+    _mk_m(lh)
+    lh.sql(
+        "MERGE INTO m t USING (SELECT k, upper(v) AS v, r FROM src WHERE k < 3) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = {r.k: r.v for r in lh.sql("SELECT k, v FROM m").collect()}
+    assert got == {1: "NEW", 2: "keep"}
+
+
+def test_sql_multi_part_table_name_raises(lh):
+    _mk_stores(lh)
+    with pytest.raises(NotImplementedError, match="multi-part"):
+        lh.sql("DELETE FROM db.stores WHERE id = 'AKL01'")

@@ -3,6 +3,8 @@ self-check tests since DuckDB can't express them)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -371,6 +373,40 @@ def test_dml_on_stale_snapshot_raises_conflict(spark, tmp_path, monkeypatch):
         b.delete("k = 5", mode="cow")
     assert a.read().count() == 100
     assert len(a._commits()) == 2
+    # the losing DELETE's rewrite is gone; the winning append's stays
+    assert len([d for d in os.listdir(path) if d.startswith("v00000001-")]) == 1
+
+
+def test_stale_restore_keeps_every_referenced_directory(spark, tmp_path, monkeypatch):
+    """A RESTORE that loses its commit race re-adds directories older
+    commits reference; cleaning up after the lost commit deletes none
+    of them."""
+    from dataengineeringworkshop_spark.tables.versioned import (
+        CommitConflictError,
+        VersionedTable,
+    )
+
+    path = str(tmp_path / "t")
+    a = VersionedTable(spark, path)
+    a.write(spark.range(10).withColumnRenamed("id", "k"))
+    a.write(spark.range(10, 20).withColumnRenamed("id", "k"), mode="append")
+    a.delete("k < 5", mode="cow")
+    b = VersionedTable(spark, path)
+    commit_change = b._commit_change
+
+    def append_first(*args, **kwargs):
+        a.write(spark.range(20, 30).withColumnRenamed("id", "k"), mode="append")
+        return commit_change(*args, **kwargs)
+
+    monkeypatch.setattr(b, "_commit_change", append_first)
+    with pytest.raises(CommitConflictError, match="version 3"):
+        b.restore(1)
+    referenced = {
+        r.split("/", 1)[0] for c in a._commits() for r in c.data_dirs + (c.dv_dirs or [])
+    }
+    assert referenced and all(os.path.isdir(f"{path}/{d}") for d in referenced)
+    assert a.read(version=1).count() == 20
+    assert a.read().count() == 25
 
 
 def _zordered(spark, tmp_path):
@@ -421,3 +457,14 @@ def test_metadata_only_commits_keep_stats_and_deletion_vectors(spark, tmp_path):
     assert len(t.scan_files(where="k = 6")) == 1
     assert t.read(where="k = 5").count() == 0
     assert t.read().count() == 399
+
+
+def test_stats_bounds_read_spark_rendered_literals():
+    """``Lakehouse.sql`` passes a DML predicate as Spark renders it, so a
+    numeric literal may carry its type suffix; it still bounds the
+    stats pruning."""
+    from dataengineeringworkshop_spark.tables.versioned import _parse_conjunctive_bounds
+
+    assert _parse_conjunctive_bounds("k >= 3000000000L AND v < 1.5BD") == [
+        ("k", ">=", 3000000000), ("v", "<", 1.5),
+    ]
