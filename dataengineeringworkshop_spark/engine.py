@@ -11,12 +11,17 @@ dance (N1:33-56) with a constructor.
     lh = Lakehouse(storage_dir="/data/lake")
     stores = lh.read_csv("/landing/stores.csv")
     lh.create_table("stores", stores)                    # CTAS
-    lh.sql("SELECT store_country, count(*) FROM stores GROUP BY 1")
     lh.table("stores").merge(updates, on="t.id = s.id")  # Delta-style DML
+    lh.sql("SELECT store_country, count(*) FROM stores GROUP BY 1")
     feed = lh.auto_ingest("/landing/sales", target="bronze_sales",
                           fmt="json", schema_hints="ts long")
     pipe = lh.pipeline("medallion")                      # DLT-style DAG
     ...
+
+Table names are directories: ``x`` is ``<storage_dir>/tables/x`` when
+that holds a commit log, else the AutoIngest target ``ingest/x``.
+:meth:`Lakehouse.sql` reads each name at its latest commit, looked up at
+every statement, so no writer refreshes anything.
 """
 
 from __future__ import annotations
@@ -60,8 +65,10 @@ class Lakehouse:
         to ``get_json_object``.  UPDATE, DELETE, MERGE INTO and queries
         then take Spark's own grammar: the session's parser parses the
         statement once; the DML plans run on the versioned-table API,
-        and a query runs with each ``<table> VERSION AS OF n`` read from
-        that snapshot.  Regexes serve only what Spark's parser rejects
+        and a query reads each table it names at the latest commit (see
+        the module docstring; other names, such as the caller's temp
+        views, are Spark's) and each ``<table> VERSION AS OF n`` at that
+        snapshot.  Regexes serve only what Spark's parser rejects
         or misreads: DESCRIBE HISTORY (it parses as DESCRIBE of a
         column), OPTIMIZE, REORG, RESTORE, VACUUM and SHALLOW CLONE (they
         do not parse), and SET / SHOW TBLPROPERTIES and ADD COLUMN."""
@@ -93,20 +100,26 @@ class Lakehouse:
         """Open the named versioned table (tables/backend.py)."""
         return open_table(self.spark, self._table_path(name))
 
-    def create_table(
-        self, name: str, df: DataFrame, register_view: bool = True
-    ) -> VersionedTable:
+    def _ingest_path(self, target: str) -> str:
+        return os.path.join(self.storage_dir, "ingest", target)
+
+    def create_table(self, name: str, df: DataFrame) -> VersionedTable:
         """CTAS (N1:125-130): materialize df as version 0 of a versioned
-        table; optionally expose it to ``sql()`` as a temp view."""
+        table; :meth:`sql` reads it by ``name`` from then on."""
         vt = self.table(name)
         vt.write(df)
-        if register_view:
-            vt.read().createOrReplaceTempView(name)
         return vt
 
     def refresh_view(self, name: str) -> None:
-        """Re-point the temp view at the table's latest version (after DML)."""
-        self.table(name).read().createOrReplaceTempView(name)
+        """Point the session temp view ``name`` at the table's latest
+        commit, for queries through the raw session (``lh.spark.sql``);
+        :meth:`sql` binds the names it reads by itself.  Does nothing
+        when the view already shows that commit; raises
+        ``FileNotFoundError`` when ``name`` is no table of this lake."""
+        from dataengineeringworkshop_spark.sqldml import bind
+
+        if bind(self, name) is None:
+            raise FileNotFoundError(f"no table {name!r} in {self.storage_dir}")
 
     # ---- incremental ingestion (Auto Loader parity, N2:262-274) ----
     def auto_ingest(
@@ -120,19 +133,16 @@ class Lakehouse:
         ing = AutoIngest(
             source_dir=source_dir,
             fmt=fmt,
-            target_dir=os.path.join(self.storage_dir, "ingest", target),
+            target_dir=self._ingest_path(target),
             checkpoint_dir=os.path.join(self.storage_dir, "checkpoints", target),
             schema_hints=schema_hints,
         )
         if run:
             ing.run_once(self.spark)
-            ing.read_target(self.spark).createOrReplaceTempView(target)
         return ing
 
     def read_ingested(self, target: str) -> DataFrame:
-        return open_table(
-            self.spark, os.path.join(self.storage_dir, "ingest", target)
-        ).read()
+        return open_table(self.spark, self._ingest_path(target)).read()
 
     # ---- declarative pipelines (DLT parity, N3/N4) ----
     def pipeline(self, name: str) -> Pipeline:

@@ -13,15 +13,17 @@ plan's class decides.  ``UpdateTable``, ``DeleteFromTable`` and
 ``MergeIntoTable`` go to the table API, with table names from the plan's
 relations and conditions and SET values from its expressions; MERGE
 aliases become the API's ``t.``/``s.`` on the expression tree, so no
-literal is rewritten.  Any other plan runs as a query, each ``<table>
-VERSION AS OF n`` in it (main plan, CTE body or subquery) read from a
-snapshot view.  MERGE takes what the table API has, in Spark ≥ 3.4's
-DSv2 row-level grammar: ``[WITH SCHEMA EVOLUTION]``, a table or subquery
-source, one ``WHEN MATCHED [AND c] THEN UPDATE SET *``, one ``WHEN NOT
-MATCHED [BY TARGET] THEN INSERT *``, one ``WHEN NOT MATCHED BY SOURCE
-[AND c] THEN DELETE | UPDATE SET …``.  Other clauses, an aliased UPDATE
-or DELETE target and multi-part table names raise
-``NotImplementedError``.
+literal is rewritten.  Any other plan runs as a query, each one-part
+table name in it (main plan, CTE body or subquery) bound by
+:func:`bind` to the latest commit of that lake table, and each ``<table>
+VERSION AS OF n`` to that snapshot; other names are Spark's.  The commit
+logs are the one catalog: writers never touch views.  MERGE takes what
+the table API has, in Spark ≥ 3.4's DSv2 row-level grammar: ``[WITH
+SCHEMA EVOLUTION]``, a table or subquery source, one ``WHEN MATCHED [AND
+c] THEN UPDATE SET *``, one ``WHEN NOT MATCHED [BY TARGET] THEN INSERT
+*``, one ``WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE | UPDATE SET
+…``.  Other clauses, an aliased UPDATE or DELETE target and multi-part
+table names raise ``NotImplementedError``.
 
 Regexes remain only where Spark's parser rejects or misreads a
 statement: ``DESCRIBE HISTORY t`` parses as ``DescribeColumn`` (column
@@ -34,6 +36,8 @@ pair such as ``1bad = 'v'`` that :func:`_prop_pair` rejects.
 
 from __future__ import annotations
 
+import itertools
+import os
 import re
 from typing import TYPE_CHECKING
 
@@ -45,6 +49,8 @@ from dataengineeringworkshop_spark.sqlcompat import (
     strip_line_comments,
     translate_sql,
 )
+from dataengineeringworkshop_spark.tables.backend import open_table
+from dataengineeringworkshop_spark.tables.versioned import _LOG_DIR, VersionedTable
 
 if TYPE_CHECKING:  # pragma: no cover
     from dataengineeringworkshop_spark.engine import Lakehouse
@@ -127,9 +133,6 @@ _CLONE_RE = re.compile(
     r"(?:\s+version\s+as\s+of\s+(\d+))?$",
     re.IGNORECASE,
 )
-# every time-travel clause ends in the keyword OF: a statement without
-# the word holds none, so only one with it pays the walk over its plan
-_MAY_TIME_TRAVEL = re.compile(r"\bof\b", re.IGNORECASE)
 _COMPARISONS = {
     "EqualTo", "EqualNullSafe", "LessThan", "LessThanOrEqual",
     "GreaterThan", "GreaterThanOrEqual",
@@ -170,29 +173,29 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
     m = _ALTER_RE.match(sql)
     if m:
         lh.table(m[1]).add_column(m[2], m[3].strip())
-        return _done(lh, "ALTER TABLE ADD COLUMN", m[1])
+        return _status(lh, "ALTER TABLE ADD COLUMN", m[1])
 
     m = _OPTIMIZE_RE.match(sql)
     if m:
         zorder = [c.strip() for c in m[2].split(",")] if m[2] else None
         lh.table(m[1]).optimize(zorder_by=zorder)
-        return _done(lh, "OPTIMIZE", m[1])
+        return _status(lh, "OPTIMIZE", m[1])
 
     m = _REORG_RE.match(sql)
     if m:
         lh.table(m[1]).reorg_purge(threshold=float(m[2]) if m[2] else 0.0)
-        return _done(lh, "REORG", m[1])
+        return _status(lh, "REORG", m[1])
 
     m = _RESTORE_RE.match(sql)
     if m:
         lh.table(m[1]).restore(int(m[2]))
-        return _done(lh, "RESTORE", m[1])
+        return _status(lh, "RESTORE", m[1])
 
     m = _CLONE_RE.match(sql)
     if m:
         version = int(m[3]) if m[3] else None
         lh.table(m[2]).shallow_clone(lh._table_path(m[1]), version)
-        return _done(lh, "SHALLOW CLONE", m[1])
+        return _status(lh, "SHALLOW CLONE", m[1])
 
     m = _VACUUM_RE.match(sql)
     if m:
@@ -206,7 +209,7 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
                 "every historical version)"
             )
         lh.table(m[1]).vacuum(retain_last=int(m[2]))
-        return _done(lh, "VACUUM", m[1])
+        return _status(lh, "VACUUM", m[1])
 
     plan = _parse(lh, sql)
     kind = plan.nodeName()
@@ -214,13 +217,13 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
         table = _name(plan.table())
         sets = {_column(a.key(), table): _sql(a.value()) for a in _seq(plan.assignments())}
         lh.table(table).update(sets, _sql(_opt(plan.condition())))
-        return _done(lh, "UPDATE", table)
+        return _status(lh, "UPDATE", table)
     if kind == "DeleteFromTable":
         table = _name(plan.table())
         lh.table(table).delete(_sql(plan.condition()))
-        return _done(lh, "DELETE", table)
+        return _status(lh, "DELETE", table)
     if kind == "MergeIntoTable":
-        return _done(lh, "MERGE", _merge(lh, sql, plan))
+        return _status(lh, "MERGE", _merge(lh, sql, plan))
     return _query(lh, sql, plan)
 
 
@@ -231,7 +234,8 @@ def _merge(lh: "Lakehouse", sql: str, plan) -> str:
     src, s_qual = _side(plan.sourceTable())
     table = _name(target)
     if src.nodeName() == "UnresolvedRelation":
-        source = lh.spark.table(_name(src))
+        vt = _lake_table(lh, _name(src))
+        source = vt.read() if vt else lh.spark.table(_name(src))
     else:  # a subquery: run its own span of the statement
         o = src.origin()
         source = _query(lh, sql[o.startIndex().get() : o.stopIndex().get() + 1])
@@ -271,41 +275,89 @@ def _merge(lh: "Lakehouse", sql: str, plan) -> str:
 
 
 def _query(lh: "Lakehouse", sql: str, plan=None) -> DataFrame:
-    """Run the query ``sql`` (parsed as ``plan`` when given), each
-    ``<table> VERSION AS OF n`` in it read from a snapshot view
-    ``<table>__v<n>``.  Without time travel the parsed plan runs, so the
-    text is parsed once."""
+    """Run the query ``sql`` (parsed as ``plan`` when given) with each
+    table of the lake it names bound to its latest commit and each
+    ``<table> VERSION AS OF n`` spliced to the view of that snapshot.
+    Without time travel the parsed plan runs, so the text is parsed
+    once."""
     if plan is None:
         plan = _parse(lh, sql)
-    spans = _time_travel(plan) if _MAY_TIME_TRAVEL.search(sql) else set()
+    spans, names = _relations(plan)
+    for name in names:
+        bind(lh, name)
     if not spans:
         jdf = _jvm_of(lh.spark)[1].ofRows(lh.spark._jsparkSession, plan)
         return DataFrame(jdf, lh.spark)
     for start, stop, table, version in sorted(spans, reverse=True):
-        view = f"{table}__v{version}"
-        lh.table(table).read(version=version).createOrReplaceTempView(view)
+        view = bind(lh, table, version)
+        if view is None:
+            raise FileNotFoundError(f"VERSION AS OF: no table {table!r} in {lh.storage_dir}")
         sql = f"{sql[:start]}`{view.replace('`', '``')}`{sql[stop + 1:]}"
     return lh.spark.sql(sql)
 
 
-def _time_travel(plan) -> set[tuple[int, int, str, int]]:
-    """``(start, stop, table, version)`` of each ``<table> VERSION AS OF
-    n`` in ``plan``, its CTE bodies and its subqueries (a node's
-    ``innerChildren``): the span of statement text from the relation's
-    first character to the clause's last."""
-    found, todo = set(), [plan]
+def _relations(plan) -> tuple[set[tuple[int, int, str, int]], set[str]]:
+    """The tables ``plan``, its CTE bodies and its subqueries (a node's
+    ``innerChildren``) read: the ``(start, stop, table, version)`` of
+    each ``<table> VERSION AS OF n`` — the span of statement text from
+    the relation's first character to the clause's last — and the
+    one-part names of the other relations."""
+    spans, names, todo = set(), set(), [plan]
     while todo:
         node = todo.pop()
-        if node.nodeName() != "RelationTimeTravel":
+        kind = node.nodeName()
+        if kind == "UnresolvedRelation":
+            parts = _seq(node.multipartIdentifier())
+            if len(parts) == 1:
+                names.add(parts[0])
+        elif kind == "RelationTimeTravel":
+            version = _opt(node.version())
+            if version is None:
+                raise NotImplementedError("TIMESTAMP AS OF: snapshots are addressed by version")
+            rel = node.relation()
+            start, stop = rel.origin().startIndex().get(), node.origin().stopIndex().get()
+            spans.add((start, stop, _name(rel), int(version)))
+        else:
             todo += _seq(node.children()) + _seq(node.innerChildren())
-            continue
-        version = _opt(node.version())
-        if version is None:
-            raise NotImplementedError("TIMESTAMP AS OF: snapshots are addressed by version")
-        rel = node.relation()
-        start, stop = rel.origin().startIndex().get(), node.origin().stopIndex().get()
-        found.add((start, stop, _name(rel), int(version)))
-    return found
+    return spans, names
+
+
+def bind(lh: "Lakehouse", name: str, version: int | None = None) -> str | None:
+    """Point a temp view at the latest commit (or ``version``) of the
+    lake table ``name`` names; return the view's name, the table's
+    directory name (``__v<version>`` appended for time travel), or
+    ``None`` when ``name`` names no lake table.  The session's memo
+    holds, per view, the (table path, version, commit time) it shows and
+    Spark's view object: the view is registered again only when either
+    changed, so two lakes on one session, or a view replaced through
+    the raw session, never serve a wrong snapshot."""
+    vt = _lake_table(lh, name)
+    if vt is None:
+        return None
+    c = vt._resolve_commit(version)
+    view = os.path.basename(vt.path) + ("" if version is None else f"__v{version}")
+    key = (vt.path, c.version, c.timestamp_ms)
+    _, _, catalog, memo = _jvm_of(lh.spark)
+    held = memo.get(view)
+    if held is None or held[0] != key or not catalog.getRawTempView(view).equals(held[1]):
+        vt.read(version=c.version).createOrReplaceTempView(view)
+        memo[view] = (key, catalog.getRawTempView(view))
+    return view
+
+
+def _lake_table(lh: "Lakehouse", name: str) -> VersionedTable | None:
+    """The table ``name`` names: ``tables/<name>`` when it holds a
+    commit log, else ``ingest/<name>``.  Spark's view lookup ignores
+    case, so a name no directory matches exactly names one that differs
+    only in case: its view is the view Spark reads."""
+    roots = (lh._table_path(""), lh._ingest_path(""))
+    exact = ((r, name) for r in roots)
+    other = ((r, n) for r in roots if os.path.isdir(r) for n in sorted(os.listdir(r))
+             if n.lower() == name.lower())
+    for root, found in itertools.chain(exact, other):
+        if os.path.isdir(os.path.join(root, found, _LOG_DIR)):
+            return open_table(lh.spark, os.path.join(root, found))
+    return None
 
 
 def _parse(lh: "Lakehouse", sql: str):
@@ -314,13 +366,17 @@ def _parse(lh: "Lakehouse", sql: str):
 
 
 def _jvm_of(spark):
-    """(SQL parser, ``Dataset`` class) of a session, looked up once per
-    session: each step of a py4j lookup is a round trip to the JVM."""
+    """(SQL parser, ``Dataset`` class, session catalog, :func:`bind`'s
+    view memo) of a session, looked up once per session: each step of a
+    py4j lookup is a round trip to the JVM."""
     found = getattr(spark, "_dew_sql_jvm", None)
     if found is None:
+        state = spark._jsparkSession.sessionState()
         found = spark._dew_sql_jvm = (
-            spark._jsparkSession.sessionState().sqlParser(),
+            state.sqlParser(),
             spark._jvm.org.apache.spark.sql.classic.Dataset,
+            state.catalog(),
+            {},
         )
     return found
 
@@ -411,13 +467,8 @@ def _requalify(e, quals: dict[str, str]):
     return e.withNewChildren(jvm.PythonUtils.toSeq(new))
 
 
-def _done(lh: "Lakehouse", operation: str, table: str) -> DataFrame:
-    """Re-point ``table``'s view at its new version; the status row."""
-    lh.refresh_view(table)
-    return _status(lh, operation, table)
-
-
 def _status(lh: "Lakehouse", operation: str, table: str) -> DataFrame:
-    return lh.spark.createDataFrame(
-        [(operation, table)], "operation string, table string"
-    )
+    """The ``(operation, table)`` row a statement without rows returns, as
+    a literal plan (a few ms; ``createDataFrame`` takes over 20)."""
+    quoted = table.replace("\\", "\\\\").replace("'", "\\'")
+    return lh.spark.sql(f"SELECT '{operation}' AS operation, '{quoted}' AS `table`")

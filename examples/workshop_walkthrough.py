@@ -76,7 +76,6 @@ def main(root: str | None = None) -> dict:
                           "WHEN id LIKE 'AKL%' OR id LIKE 'WLG%' THEN 'NZL' END"}
     )
     stores_t.update({"store_country": "'AUS'"}, condition="id = 'MEL02'")  # N1:166-172
-    lh.refresh_view("stores")
 
     # ---- 2. incremental fact ingestion, two batches + a rescue (N2) ----
     landing = os.path.join(root, "landing", "sales")

@@ -125,7 +125,6 @@ def test_sqldml_update_parse_shapes(
             VersionedTable, "update",
             lambda t, set_exprs, condition=None: got.append((t.path, set_exprs, condition)),
         )
-        mp.setattr(Lakehouse, "refresh_view", lambda lh, name: None)
         lh = Lakehouse(str(tmp_path_factory.getbasetemp() / "upd"), spark=spark)
         lh.sql(stmt)
     [(path, set_exprs, where)] = got
