@@ -23,7 +23,8 @@ OSS mapping implemented here:
   in the checkpoint directory (``_dew_schema.json``) so later runs reuse
   it without re-inference — Auto Loader's schemaLocation behavior.  The
   table's own schema lives in its commit log, widened by append schema
-  evolution when a run writes more columns.
+  evolution when a run writes more columns.  ``_dew_schema.json`` and
+  the commit log record the same encoding, Spark's JSON schema.
 - **Rescued data** (ST3): every ingested file line is ALSO parsed as loose
   strings; fields that fail the typed parse but exist in the raw record
   land in a ``_rescued_data`` JSON-string column (field-level rescue via
@@ -44,7 +45,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+from pyspark.sql.types import StringType, StructField, StructType, _parse_datatype_string
 
 from dataengineeringworkshop_spark.session import ensure_session_defaults
 from dataengineeringworkshop_spark.tables.versioned import VersionedTable
@@ -153,9 +154,10 @@ class AutoIngest:
             # exact same record text; for CSV the (exact-match) header line
             # is filtered before parsing
             raw = spark.read.schema("value string").text(paths)
+            loose = StructType([StructField(f.name, StringType()) for f in schema.fields])
             if self.fmt == "csv":
-                ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
-                loose_ddl = ", ".join(f"{f.name} string" for f in schema.fields)
+                # toDDL quotes the names a header may hold (`Store ID`)
+                ddl, loose_ddl = schema.toDDL(), loose.toDDL()
                 # header detection by PARSE, not exact string match: a line
                 # is a header iff every parsed field is null or equals its
                 # own column name (and at least one equals).  Robust to
@@ -185,15 +187,11 @@ class AutoIngest:
                 def parse_loose(c):
                     return F.from_csv(c, loose_ddl)
             else:
-                loose_schema = StructType(
-                    [StructField(f.name, _parse_datatype_string("string"), True) for f in schema.fields]
-                )
-
                 def parse_typed(c):
                     return F.from_json(c, schema)
 
                 def parse_loose(c):
-                    return F.from_json(c, loose_schema)
+                    return F.from_json(c, loose)
 
             typed = raw.withColumn("__parsed", parse_typed(F.col("value")))
             cols = [F.col(f"__parsed.{f.name}").alias(f.name) for f in schema.fields]

@@ -13,16 +13,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-from dataengineeringworkshop_spark.tables.versioned import _LOG_DIR, VersionedTable
-
-
-def _is_local_path(path: str) -> bool:
-    """True iff ``path`` is a plain local filesystem path (no scheme, or
-    the explicit ``file:`` scheme).  Format sniffing in :func:`open_table`
-    uses ``os.path`` and therefore only works for local paths; remote
-    URIs (s3://, hdfs://, abfss://…) are never sniffed."""
-    scheme = path.split("://", 1)[0] if "://" in path else ""
-    return scheme in ("", "file")
+from dataengineeringworkshop_spark.tables.versioned import (
+    _LOG_DIR,
+    VersionedTable,
+    _is_local_path,
+    _strip_file_scheme,
+)
 
 
 def open_table(spark: SparkSession, path: str) -> VersionedTable:
@@ -34,7 +30,7 @@ def open_table(spark: SparkSession, path: str) -> VersionedTable:
     timelines.  Sniffing is LOCAL-FILESYSTEM ONLY (``os.path``); remote
     URIs open without the check."""
     if _is_local_path(path):
-        p = path.rstrip("/").removeprefix("file://").removeprefix("file:")
+        p = _strip_file_scheme(path.rstrip("/"))
         if not os.path.isdir(f"{p}/{_LOG_DIR}") and os.path.isdir(f"{p}/_delta_log"):
             raise RuntimeError(
                 f"table at {path} has a _delta_log; refusing to open it as "

@@ -10,10 +10,13 @@ re-implemented here as a minimal copy-on-write table format:
 
 Each commit records the COMPLETE list of active data directories (snapshot
 isolation: readers of version N never see later writes) plus operation
-metadata (DESCRIBE HISTORY parity) and the schema DDL.  Reads use the
-committed schema as the scan schema, never re-inferring it from the
-files: planning a read starts no Spark job, and files written before an
-ADD COLUMN read NULL for the new column.
+metadata (DESCRIBE HISTORY parity) and the table schema as Spark's JSON
+schema (Delta's ``schemaString``), which ``StructType.fromJson`` parses
+in Python.  Reads use the committed schema as the scan schema, never
+re-inferring it from the files: planning a read starts no Spark job,
+and files written before an ADD COLUMN read NULL for the new column.
+Append, MERGE WITH SCHEMA EVOLUTION and ADD COLUMN widen the schema
+through one rule, :func:`_widen`.
 
 Scale posture: all data movement is Spark jobs.  Reads are parquet
 scans of the active units (partition pruning/pushdown intact).  UPDATE,
@@ -60,8 +63,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, IntegerType, LongType, MapType
+from pyspark.sql.types import StringType, StructField, StructType
 
 _LOG_DIR = "_dew_log"
+
+#: the deletion-vector sidecar as :meth:`VersionedTable._write_dv` writes it
+_DV_SCHEMA = StructType([StructField("file_ref", StringType()), StructField("pos", LongType())])
 
 
 class CommitConflictError(RuntimeError):
@@ -81,7 +89,9 @@ class Commit:
     operation: str
     operation_params: dict
     data_dirs: list[str]  # relative to table root; complete active set
-    schema_ddl: str  # struct DDL of the table at this version
+    # the table schema: Spark's JSON schema as a parquet read returns it
+    # (every field nullable, no field metadata)
+    schema: dict
     metrics: dict
     # per-file column stats for data skipping (Delta's stats field):
     # {rel_file: {col: [min, max]}} — recorded by OPTIMIZE for the
@@ -94,13 +104,25 @@ class Commit:
     # every snapshot read.  Relative to the table root (absolute for
     # shallow clones, like data_dirs); empty/missing on older logs.
     dv_dirs: list = None
-    # SNAPSHOT of the effective TBLPROPERTIES at this version (last-wins
-    # merge, folded forward commit by commit at commit time) — lets
-    # properties()/_dml_mode read ONLY the latest commit instead of
-    # re-parsing the whole log on every DML call (O(1) vs O(history),
-    # ADVICE r12).  None on pre-r13 logs → reader falls back to the
-    # full-history merge.
+    # the effective TBLPROPERTIES at this version, folded forward commit
+    # by commit, so properties() reads only the latest commit; None on
+    # older logs, which fall back to the full-history merge
     properties: dict = None
+
+    @property
+    def struct(self) -> StructType:
+        return StructType.fromJson(self.schema)
+
+
+def _load(path: str) -> Commit:
+    """The commit in log file ``path``.  A commit written before the log
+    recorded the JSON schema carries ``schema_ddl``, a ``struct<…>``
+    string, instead; it is converted here, so older tables still open."""
+    with open(path) as f:
+        d = json.load(f)
+    if "schema_ddl" in d:
+        d["schema"] = _as_read(StructType.fromDDL(d.pop("schema_ddl"))).jsonValue()
+    return Commit(**d)
 
 
 class VersionedTable:
@@ -126,14 +148,11 @@ class VersionedTable:
         log_dir = f"{self.path}/{_LOG_DIR}"
         if not os.path.isdir(log_dir):
             return []
-        commits = []
-        for fn in sorted(os.listdir(log_dir)):
-            if not fn.endswith(".json"):
-                continue
-            with open(f"{log_dir}/{fn}") as f:
-                d = json.load(f)
-            commits.append(Commit(**d))
-        return commits
+        return [
+            _load(f"{log_dir}/{fn}")
+            for fn in sorted(os.listdir(log_dir))
+            if fn.endswith(".json")
+        ]
 
     def _latest(self) -> Commit | None:
         """Read ONLY the highest-numbered commit file — every DML /
@@ -141,13 +160,9 @@ class VersionedTable:
         O(1) in table history (the zero-padded names make max() the
         latest version; O(#commits) listdir is metadata-scale)."""
         log_dir = f"{self.path}/{_LOG_DIR}"
-        if not os.path.isdir(log_dir):
-            return None
-        names = [fn for fn in os.listdir(log_dir) if fn.endswith(".json")]
-        if not names:
-            return None
-        with open(f"{log_dir}/{max(names)}") as f:
-            return Commit(**json.load(f))
+        names = os.listdir(log_dir) if os.path.isdir(log_dir) else []
+        names = [fn for fn in names if fn.endswith(".json")]
+        return _load(f"{log_dir}/{max(names)}") if names else None
 
     def exists(self) -> bool:
         """True once the table has at least one commit."""
@@ -164,7 +179,7 @@ class VersionedTable:
         stats: dict | None = None,
         dv: str | None = None,
         dv_dirs: list[str] | None = None,
-        schema_ddl: str | None = None,
+        schema: StructType | None = None,
         metrics: dict | None = None,
         account: str | None = None,
     ) -> Commit:
@@ -181,7 +196,8 @@ class VersionedTable:
         ``added`` on a removal.  Stats carry for every kept ref.
         Deletion vectors carry while some file of ``prev`` stays active,
         plus the commit's new vector ``dv``; ``dv_dirs`` replaces them
-        outright (REORG, RESTORE, CLONE).
+        outright (REORG, RESTORE, CLONE).  ``schema`` replaces ``prev``'s
+        schema.
 
         ``account`` names the file metrics recorded next to ``metrics``:
         ``None`` none, ``"added"`` the files and bytes added,
@@ -255,7 +271,7 @@ class VersionedTable:
                 operation=op,
                 operation_params=params,
                 data_dirs=kept + added,
-                schema_ddl=schema_ddl or prev.schema_ddl,
+                schema=prev.schema if schema is None else _as_read(schema).jsonValue(),
                 metrics={**derived, **(metrics or {})},
                 file_stats=file_stats,
                 dv_dirs=dv_dirs,
@@ -338,6 +354,13 @@ class VersionedTable:
         FAIL UPDATE out of a single scan: the check rides the write
         action, and the commit-log append is the only publish point."""
         prev = self._latest()
+        schema = df.schema
+        if mode == "append" and prev is not None:
+            schema = _widen(prev.struct, schema, "append schema")
+            op, removed = "WRITE APPEND", []
+        else:
+            op = "CREATE TABLE AS SELECT" if prev is None else "WRITE OVERWRITE"
+            removed = prev.data_dirs if prev is not None else []
         version = 0 if prev is None else prev.version + 1
         rel = self._new_data_dir(version)
         try:
@@ -352,35 +375,12 @@ class VersionedTable:
             # survive the abort (orphaned storage at scale).
             remove_staged_dir(f"{self.path}/{rel}")
             raise
-        schema_ddl = df.schema.simpleString()
-        if mode == "append" and prev is not None:
-            from pyspark.sql.types import StructType
-
-            old = StructType.fromDDL(_ddl_of(prev.schema_ddl))
-            merged = list(old.fields)
-            by_name = {f.name: f for f in old.fields}
-            for f in df.schema.fields:
-                if f.name in by_name:
-                    have = by_name[f.name].dataType.simpleString()
-                    got = f.dataType.simpleString()
-                    if have != got:
-                        raise ValueError(
-                            f"append schema conflict on {f.name!r}: table has "
-                            f"{have}, batch has {got}"
-                        )
-                else:
-                    merged.append(f)
-            schema_ddl = StructType(merged).simpleString()
-            op, removed = "WRITE APPEND", []
-        else:
-            op = "CREATE TABLE AS SELECT" if prev is None else "WRITE OVERWRITE"
-            removed = prev.data_dirs if prev is not None else []
         params = {"mode": mode}
         if txn is not None:
             params["txn"] = txn
         self._commit_change(
             op, prev, params, removed=removed, added=[rel],
-            schema_ddl=schema_ddl, account="added",
+            schema=schema, account="added",
         )
         return self
 
@@ -400,8 +400,7 @@ class VersionedTable:
             if self._latest() is None:
                 raise FileNotFoundError(f"no such versioned table: {self.path}")
             raise ValueError(f"version {version} not in table history")
-        with open(lp) as f:
-            return Commit(**json.load(f))
+        return _load(lp)
 
     def _abs(self, d: str) -> str:
         """Data dirs are table-root-relative, EXCEPT shallow-clone
@@ -436,18 +435,7 @@ class VersionedTable:
         reference's ZORDER point-lookup exercise (`2 Medaillon
         architecture.py:436-465`) on the parquet-backed format."""
         c = self._resolve_commit(version)
-        from pyspark.sql.types import StructType
-
-        committed = StructType.fromDDL(_ddl_of(c.schema_ddl))
-        if where:
-            paths = self.scan_files(version, where)
-            if not paths:
-                # stats pruned EVERY file (point lookup outside all
-                # min/max ranges) — an empty result, like Delta, not an
-                # UNABLE_TO_INFER_SCHEMA crash from a zero-path scan
-                return self.spark.createDataFrame([], committed)
-        else:
-            paths = [self._abs(d) for d in c.data_dirs]
+        paths = self.scan_files(version, where) if where else [self._abs(d) for d in c.data_dirs]
         out = self._evolved(paths, c)
         return out.filter(F.expr(where)) if where else out
 
@@ -510,28 +498,33 @@ class VersionedTable:
         shuffles.  Zero plan overhead when no DVs exist.
 
         ``lineage=True`` appends ``__dew_ref`` (absolute file path) and
-        ``__dew_pos`` (row position in that file) for DML probes."""
-        from pyspark.sql.types import StructType
+        ``__dew_pos`` (row position in that file) for DML probes.
 
-        committed = StructType.fromDDL(_ddl_of(c.schema_ddl))
+        No path gives an empty frame of the committed schema.  A local
+        path VACUUM removed raises :class:`FileNotFoundError` before Spark
+        plans the scan."""
+        committed = c.struct
+        dv_paths = [self._abs(d) for d in (c.dv_dirs or [])]
+        for p in paths + dv_paths:
+            if _is_local_path(p) and not os.path.exists(_strip_file_scheme(p)):
+                raise FileNotFoundError(
+                    f"{self.path}: version {c.version} reads {p}, which no "
+                    "longer exists (removed by VACUUM)"
+                )
         if not paths:
-            empty = self.spark.createDataFrame([], committed)
-            if lineage:
-                empty = empty.withColumn(
-                    "__dew_ref", F.lit(None).cast("string")
-                ).withColumn("__dew_pos", F.lit(None).cast("long"))
-            return empty
+            refs = [StructField("__dew_ref", StringType()), StructField("__dew_pos", LongType())]
+            fields = committed.fields + (refs if lineage else [])
+            return self.spark.createDataFrame([], StructType(fields))
         # the committed schema IS the scan schema: planning launches no
         # footer-merging job, and a file written before an ADD COLUMN or
         # an append-evolved schema reads NULL for the columns it lacks
         df = self.spark.read.schema(committed).parquet(*paths)
-        dv_paths = [self._abs(d) for d in (c.dv_dirs or [])]
         if dv_paths or lineage:
             df = df.withColumn("__dew_ref", self._scan_ref()).withColumn(
                 "__dew_pos", F.col("_metadata.row_index")
             )
         if dv_paths:
-            dv = self.spark.read.parquet(*dv_paths).select(
+            dv = self.spark.read.schema(_DV_SCHEMA).parquet(*dv_paths).select(
                 F.col("file_ref").alias("__dv_ref"), F.col("pos").alias("__dv_pos")
             )
             df = df.join(
@@ -540,7 +533,8 @@ class VersionedTable:
                 & (F.col("__dew_pos") == F.col("__dv_pos")),
                 "left_anti",
             )
-        cols = [f.name for f in committed.fields]
+        # quoted, since a column name may hold a dot
+        cols = [F.col("`" + n.replace("`", "``") + "`") for n in committed.names]
         if lineage:
             cols += ["__dew_ref", "__dew_pos"]
         return df.select(*cols)
@@ -790,10 +784,9 @@ class VersionedTable:
     def properties(self) -> dict[str, str]:
         """Effective TBLPROPERTIES (SHOW TBLPROPERTIES parity).
 
-        O(1) in table history: each commit carries a last-wins snapshot
-        of the effective map, so only the LATEST commit is read — a DML
-        call's mode resolution no longer re-parses the whole log
-        (ADVICE r12).  Pre-snapshot logs fall back to the full merge."""
+        O(1) in table history: each commit carries the effective map, so
+        only the latest commit is read.  Older logs fall back to the full
+        merge."""
         last = self._latest()
         if last is None:
             return {}
@@ -928,22 +921,14 @@ class VersionedTable:
                 )
         prev = self._resolve_commit(None)
         cur = self.read(prev.version)
-        # WITH SCHEMA EVOLUTION: collect source-only columns to add
-        new_fields = []
+        # WITH SCHEMA EVOLUTION: the source-only columns join the table
+        table = prev.struct
+        schema = table
         if schema_evolution:
-            have = {f.name: f.dataType.simpleString() for f in cur.schema.fields}
-            for f in source.schema.fields:
-                if f.name in have:
-                    got = f.dataType.simpleString()
-                    if have[f.name] != got:
-                        raise ValueError(
-                            f"MERGE schema evolution conflict on {f.name!r}: "
-                            f"table has {have[f.name]}, source has {got}"
-                        )
-                else:
-                    new_fields.append(f)
+            schema = _widen(table, source.schema, "MERGE schema evolution")
+        new_types = {f.name: f.dataType for f in schema.fields[len(table.fields):]}
         mode = self._dml_mode(mode, "merge")
-        all_cols = cur.columns + [f.name for f in new_fields]
+        all_cols = schema.names
         upd_set = {
             c: F.expr(e) for c, e in (unmatched_by_source_set or {}).items()
         }
@@ -1028,9 +1013,8 @@ class VersionedTable:
                 else F.lit(True)
             )
             by_source = tgt_only & nmbs_cond
-            new_types = {f.name: f.dataType for f in new_fields}
             # output columns take the committed types (reads scan with them)
-            types = {**{f.name: f.dataType for f in cur.schema.fields}, **new_types}
+            types = {f.name: f.dataType for f in schema.fields}
 
             def _out_col(c: str):
                 if c in new_types:
@@ -1047,11 +1031,6 @@ class VersionedTable:
                 return base.cast(types[c]).alias(c)
 
             out_cols = [_out_col(c) for c in all_cols]
-            schema_ddl = None
-            if new_fields:
-                from pyspark.sql.types import StructType
-
-                schema_ddl = StructType(cur.schema.fields + new_fields).simpleString()
             params = {
                 "on": on,
                 "update_condition": update_condition,
@@ -1071,7 +1050,7 @@ class VersionedTable:
                 )
                 self._commit_change(
                     "MERGE", prev, params, added=[rel], dv=dv,
-                    schema_ddl=schema_ddl, account="mor",
+                    schema=schema, account="mor",
                     metrics={"rows_dv_marked": n_dv, "rows_appended": n_rows},
                 )
             else:
@@ -1084,7 +1063,7 @@ class VersionedTable:
                 self._commit_change(
                     "MERGE", prev, params,
                     removed=prev.data_dirs if touched is None else touched,
-                    added=[rel], schema_ddl=schema_ddl,
+                    added=[rel], schema=schema,
                     account="added" if touched is None else "rewrite",
                 )
         finally:
@@ -1191,7 +1170,7 @@ class VersionedTable:
         params = {"apply": "PURGE", "threshold": threshold}
         counts: dict = {}
         if dv_paths:
-            dv = self.spark.read.parquet(*dv_paths)
+            dv = self.spark.read.schema(_DV_SCHEMA).parquet(*dv_paths)
             counts = {
                 r.file_ref: int(r.n)
                 for r in dv.groupBy("file_ref").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1256,7 +1235,7 @@ class VersionedTable:
         self._commit_change(
             "RESTORE", prev, {"restored_version": version},
             removed=prev.data_dirs, added=target.data_dirs,
-            stats=target.file_stats, schema_ddl=target.schema_ddl,
+            stats=target.file_stats, schema=target.struct,
             # the restored snapshot's OWN deletion vectors, not the
             # latest commit's (whose entries may hit carried files)
             dv_dirs=list(target.dv_dirs or []),
@@ -1285,7 +1264,7 @@ class VersionedTable:
             "CLONE", None,
             {"source": self.path, "source_version": src.version,
              "clone_type": "SHALLOW"},
-            added=abs_dirs, stats=stats, schema_ddl=src.schema_ddl,
+            added=abs_dirs, stats=stats, schema=src.struct,
             # source deletion vectors carry by absolute ref — their
             # file_ref contents are absolute paths, so they keep
             # matching the source files the clone reads
@@ -1333,16 +1312,17 @@ class VersionedTable:
 
     def add_column(self, name: str, dtype: str) -> None:
         """ALTER TABLE ADD COLUMN (S10, N1:146-147) — metadata-only commit;
-        existing files read back with nulls for the new column."""
+        existing files read back with nulls for the new column.  A type
+        that does not parse, or a name the table has in any case, raises
+        before anything is committed."""
         prev = self._resolve_commit(None)
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
-        if name in [f.name for f in schema.fields]:
+        table = prev.struct
+        if name.lower() in (n.lower() for n in table.names):
             raise ValueError(f"column {name} already exists")
+        column = StructType([StructField(name, DataType.fromDDL(dtype))])
         self._commit_change(
             "ADD COLUMNS", prev, {"column": name, "type": dtype},
-            schema_ddl=prev.schema_ddl[:-1] + f",{name}:{dtype}>",
+            schema=_widen(table, column, "ADD COLUMN"),
         )
 
     def changes(self, key: str, from_version: int, to_version: int) -> DataFrame:
@@ -1357,8 +1337,6 @@ class VersionedTable:
         both sides of the diff before the join; a physical CDF (change
         files written at commit time, as Delta does) is the write-side
         variant of the same contract."""
-        from pyspark.sql import functions as F
-
         f = self.read(from_version)
         t = self.read(to_version)
         common = [c for c in t.columns if c in set(f.columns)]
@@ -1408,31 +1386,26 @@ class VersionedTable:
         ``rows_updated`` or ``rows_dv_marked`` for DELETE, UPDATE and
         MERGE; ``rows_deleted`` is a column here) and the rows it appends
         (``rows_appended``), and ``bytes_added`` includes the vector."""
+        counters = (
+            "files_rewritten", "files_carried", "files_added", "bytes_rewritten",
+            "bytes_carried", "bytes_added", "rows_deleted", "dv_files_added",
+        )
         rows = [
             (
-                c.version,
-                c.timestamp_ms,
-                c.operation,
-                json.dumps(c.operation_params, sort_keys=True),
-                len(c.data_dirs),
-                c.metrics.get("files_rewritten"),
-                c.metrics.get("files_carried"),
-                c.metrics.get("files_added"),
-                c.metrics.get("bytes_rewritten"),
-                c.metrics.get("bytes_carried"),
-                c.metrics.get("bytes_added"),
-                c.metrics.get("rows_deleted"),
-                c.metrics.get("dv_files_added"),
+                c.version, c.timestamp_ms, c.operation,
+                json.dumps(c.operation_params, sort_keys=True), len(c.data_dirs),
+                *[c.metrics.get(k) for k in counters],
             )
             for c in self._commits()
         ]
-        return self.spark.createDataFrame(
-            rows,
-            "version long, timestamp_ms long, operation string, operation_params string, "
-            "n_data_dirs int, files_rewritten long, files_carried long, files_added long, "
-            "bytes_rewritten long, bytes_carried long, bytes_added long, "
-            "rows_deleted long, dv_files_added long",
+        long, text = LongType(), StringType()
+        schema = StructType(
+            [StructField("version", long), StructField("timestamp_ms", long),
+             StructField("operation", text), StructField("operation_params", text),
+             StructField("n_data_dirs", IntegerType())]
+            + [StructField(k, long) for k in counters]
         )
+        return self.spark.createDataFrame(rows, schema)
 
 
 #: bits per zorder column in the Morton key (256 rank buckets — same
@@ -1595,23 +1568,46 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass  # a Spark Connect DataFrame has no JVM plan to release
 
 
-def _ddl_of(simple_string: str) -> str:
-    """struct<a:bigint,b:string> → 'a bigint, b string' (fromDDL input)."""
-    inner = simple_string
-    if inner.startswith("struct<") and inner.endswith(">"):
-        inner = inner[len("struct<"):-1]
-    # split top-level commas (respecting nesting)
-    parts, depth, cur = [], 0, []
-    for ch in inner:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return ", ".join(p.replace(":", " ", 1) for p in parts)
+def _as_read(t: DataType) -> DataType:
+    """``t`` as a parquet scan with it as the read schema returns it:
+    nullable at every level, no field metadata.  The log records this
+    form, so an empty read has the schema of a non-empty one."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_read(f.dataType)) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_read(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_as_read(t.keyType), _as_read(t.valueType))
+    return t
+
+
+def _widen(old: StructType, new: StructType, label: str) -> StructType:
+    """``old`` with the top-level columns of ``new`` it lacks appended —
+    the one schema-evolution rule of append, MERGE WITH SCHEMA EVOLUTION
+    and ADD COLUMN.  Names match case-insensitively and keep the table's
+    spelling, as Spark resolves parquet columns; a shared column whose
+    type differs raises ``ValueError``.  Nested fields do not evolve."""
+    have = {f.name.lower(): f for f in old.fields}
+    added = []
+    for f in new.fields:
+        mine = have.get(f.name.lower())
+        if mine is None:
+            have[f.name.lower()] = f
+            added.append(f)
+        elif (a := mine.dataType.simpleString()) != (b := f.dataType.simpleString()):
+            raise ValueError(
+                f"{label} conflict on {f.name!r}: table has {a}, new data has {b}"
+            )
+    return StructType(old.fields + added)
+
+
+def _is_local_path(path: str) -> bool:
+    """True iff ``path`` is a plain local filesystem path (no scheme, or
+    the explicit ``file:`` scheme), which ``os.path`` can check; remote
+    URIs (s3://, hdfs://, abfss://…) are never checked."""
+    scheme = path.split("://", 1)[0] if "://" in path else ""
+    return scheme in ("", "file")
+
+
+def _strip_file_scheme(path: str) -> str:
+    return path.removeprefix("file://").removeprefix("file:")

@@ -193,3 +193,23 @@ def test_commit_failure_then_retry_loads_every_row_once(spark, ingest, monkeypat
     assert ids == [f"sale-{i:04d}" for i in range(6)]
     table.vacuum()
     assert orphans[0] not in os.listdir(ai.target_dir)
+
+
+def test_csv_header_with_a_space_in_a_column_name(spark, tmp_path):
+    """A CSV header such as ``Store ID`` becomes a column of that name:
+    the parse schemas come from ``StructType.toDDL``, which quotes it."""
+    from dataengineeringworkshop_spark.streaming.autoingest import AutoIngest
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    (src / "stores.csv").write_text("Store ID,city\n1,Sydney\n2,x\n")
+    ai = AutoIngest(
+        source_dir=str(src),
+        checkpoint_dir=str(tmp_path / "chk"),
+        target_dir=str(tmp_path / "bronze"),
+        fmt="csv",
+    )
+    ai.run_once(spark)
+    out = ai.read_target(spark)
+    assert out.columns[:2] == ["Store ID", "city"]
+    assert sorted(tuple(r)[:2] for r in out.collect()) == [(1, "Sydney"), (2, "x")]
