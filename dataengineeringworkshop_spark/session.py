@@ -7,8 +7,24 @@ AQE on (runtime re-planning, skew-join handling), UTC session timezone
 (so date/time functions are deterministic and oracle-comparable), Arrow
 enabled (fast pandas interchange for the Pandas-UDF slow path).
 
-On a real cluster the same builder is used with a cluster master URL; the
-only local-mode-specific knob is ``spark.driver.memory``.
+On a real cluster the same builder is used with a cluster master URL.
+``spark.driver.memory`` and the core-sized ``spark.sql.shuffle.partitions``
+are the local-mode knobs.
+
+The size of Spark's code-generation cache
+(``spark.sql.codegen.cache.maxEntries``) holds on a cluster too.  Spark
+compiles each whole-stage-codegen stage into a Java class and keeps 100
+of them JVM-wide by default, but the engine's warm paths rerun more
+plans than that: a perfbench ``query_mix`` run compiles about 310
+distinct classes, and ``medallion_incremental`` about 130 plus 2 per
+cycle.  At 100 entries each mix pass recompiled about 220 classes and
+each medallion cycle about 50, the same ones every time.  At
+``CODEGEN_CACHE_ENTRIES`` (over 3x that working set) a warm mix pass
+compiles none, and a cycle only the 2 classes that inline AutoIngest's
+new ``current_timestamp()`` literal.  The size is a static conf, read
+once per JVM, so it is set in :func:`get_spark` and not in
+``RUNTIME_DEFAULTS``: a session built elsewhere and handed to
+:func:`ensure_session_defaults` keeps its own value.
 """
 
 from __future__ import annotations
@@ -32,6 +48,10 @@ RUNTIME_DEFAULTS: dict[str, str] = {
     # parquet reader rejects; read it as a raw long instead (see plans/tables.py).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+# generated classes Spark keeps JVM-wide (see the module docstring)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -94,7 +114,11 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     ``spark.sql.adaptive.enabled=false`` after ``get_spark()`` and AQE
     stays off for the whole sweep.  A caller that wants the defaults
     re-asserted resets the gate with ``del spark._dew_defaults_ok``;
-    the next call sets them all again."""
+    the next call sets them all again.
+
+    Only runtime confs are set: static ones, such as the size of the
+    code-generation cache ``get_spark`` raises, keep the value the
+    session was built with."""
     if getattr(spark, "_dew_defaults_ok", False):
         _ship_package(spark)  # self-gated
         return spark
@@ -129,6 +153,7 @@ def get_spark(app_name: str = "dew-spark", master: str | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_DEFAULTS.items():
         builder = builder.config(k, v)

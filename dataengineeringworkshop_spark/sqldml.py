@@ -68,8 +68,10 @@ def split_statements(script: str) -> list[str]:
     ]
 
 
+# the type is the rest of the statement (inside the parentheses of the
+# ADD COLUMNS (…) form); ``add_column``'s ``DataType.fromDDL`` validates it
 _ALTER_RE = re.compile(
-    r"^alter\s+table\s+(\w+)\s+add\s+columns?\s*\(?\s*(\w+)\s+([\w()<>, ]+?)\s*\)?$",
+    r"^alter\s+table\s+(\w+)\s+add\s+columns?\b\s*(\()?\s*(\w+)\s+(.+?)\s*(?(2)\))$",
     re.IGNORECASE | re.DOTALL,
 )
 _HISTORY_RE = re.compile(r"^describe\s+history\s+(\w+)$", re.IGNORECASE)
@@ -144,9 +146,16 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
     versioned tables go to the table API, anything else runs as a Spark
     query."""
     # quote-aware: a ``--`` inside a literal is data, not a comment
-    sql = strip_line_comments(translate_sql(statement))
-    sql = sql.strip().rstrip(";").strip()
+    sql = strip_line_comments(statement).strip().rstrip(";").strip()
 
+    # before the JSON-path rewrite, which would take the colons of a
+    # column type (struct<a:int>) for a path
+    m = _ALTER_RE.match(sql)
+    if m:
+        lh.table(m[1]).add_column(m[3], m[4])
+        return _status(lh, "ALTER TABLE ADD COLUMN", m[1])
+
+    sql = translate_sql(sql)
     m = _HISTORY_RE.match(sql)
     if m:
         return lh.table(m.group(1)).history()
@@ -169,11 +178,6 @@ def execute(lh: "Lakehouse", statement: str) -> DataFrame:
         return lh.spark.createDataFrame(
             sorted(props.items()), "key string, value string"
         )
-
-    m = _ALTER_RE.match(sql)
-    if m:
-        lh.table(m[1]).add_column(m[2], m[3].strip())
-        return _status(lh, "ALTER TABLE ADD COLUMN", m[1])
 
     m = _OPTIMIZE_RE.match(sql)
     if m:

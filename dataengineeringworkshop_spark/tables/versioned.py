@@ -533,8 +533,7 @@ class VersionedTable:
                 & (F.col("__dew_pos") == F.col("__dv_pos")),
                 "left_anti",
             )
-        # quoted, since a column name may hold a dot
-        cols = [F.col("`" + n.replace("`", "``") + "`") for n in committed.names]
+        cols = [_col(n) for n in committed.names]
         if lineage:
             cols += ["__dew_ref", "__dew_pos"]
         return df.select(*cols)
@@ -683,10 +682,10 @@ class VersionedTable:
             # SET values are cast to the column's committed type: data
             # files always hold the types the log records
             return df.select(*[
-                F.when(cond, F.expr(e)).otherwise(F.col(c))
+                F.when(cond, F.expr(e)).otherwise(_col(c))
                 .cast(df.schema[c].dataType).alias(c)
                 if (e := set_exprs.get(c)) is not None
-                else F.col(c)
+                else _col(c)
                 for c in df.columns
             ])
 
@@ -1019,13 +1018,11 @@ class VersionedTable:
             def _out_col(c: str):
                 if c in new_types:
                     # evolution-added column: no target-side value exists
-                    base = F.when(take_source, F.col(f"s.{c}")).otherwise(
+                    base = F.when(take_source, _col(c, "s")).otherwise(
                         F.lit(None).cast(new_types[c])
                     )
                 else:
-                    base = F.when(take_source, F.col(f"s.{c}")).otherwise(
-                        F.col(f"t.{c}")
-                    )
+                    base = F.when(take_source, _col(c, "s")).otherwise(_col(c, "t"))
                 if unmatched_by_source_action == "update" and c in upd_set:
                     base = F.when(by_source, upd_set[c]).otherwise(base)
                 return base.cast(types[c]).alias(c)
@@ -1341,32 +1338,38 @@ class VersionedTable:
         t = self.read(to_version)
         common = [c for c in t.columns if c in set(f.columns)]
         non_key = [c for c in common if c != key]
-        fa = f.select([F.col(c).alias(f"__f_{c}") for c in common])
-        ta = t.select([F.col(c).alias(f"__t_{c}") for c in common])
-        j = fa.join(ta, fa[f"__f_{key}"] == ta[f"__t_{key}"], "full_outer")
+        def before(c):
+            return _col(f"__f_{c}")
+
+        def after(c):
+            return _col(f"__t_{c}")
+
+        fa = f.select([_col(c).alias(f"__f_{c}") for c in common])
+        ta = t.select([_col(c).alias(f"__t_{c}") for c in common])
+        j = fa.join(ta, before(key) == after(key), "full_outer")
         changed = None
         for c in non_key:
-            neq = ~F.col(f"__f_{c}").eqNullSafe(F.col(f"__t_{c}"))
+            neq = ~before(c).eqNullSafe(after(c))
             changed = neq if changed is None else (changed | neq)
-        inserts = j.filter(F.col(f"__f_{key}").isNull()).select(
-            *[F.col(f"__t_{c}").alias(c) for c in common],
+        inserts = j.filter(before(key).isNull()).select(
+            *[after(c).alias(c) for c in common],
             F.lit("insert").alias("_change_type"),
         )
-        deletes = j.filter(F.col(f"__t_{key}").isNull()).select(
-            *[F.col(f"__f_{c}").alias(c) for c in common],
+        deletes = j.filter(after(key).isNull()).select(
+            *[before(c).alias(c) for c in common],
             F.lit("delete").alias("_change_type"),
         )
         upd = j.filter(
-            F.col(f"__f_{key}").isNotNull()
-            & F.col(f"__t_{key}").isNotNull()
+            before(key).isNotNull()
+            & after(key).isNotNull()
             & (changed if changed is not None else F.lit(False))
         )
         pre = upd.select(
-            *[F.col(f"__f_{c}").alias(c) for c in common],
+            *[before(c).alias(c) for c in common],
             F.lit("update_preimage").alias("_change_type"),
         )
         post = upd.select(
-            *[F.col(f"__t_{c}").alias(c) for c in common],
+            *[after(c).alias(c) for c in common],
             F.lit("update_postimage").alias("_change_type"),
         )
         return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
@@ -1599,6 +1602,13 @@ def _widen(old: StructType, new: StructType, label: str) -> StructType:
                 f"{label} conflict on {f.name!r}: table has {a}, new data has {b}"
             )
     return StructType(old.fields + added)
+
+
+def _col(name: str, alias: str | None = None) -> F.Column:
+    """Column ``name`` (of the frame aliased ``alias``), quoted, since a
+    column name may hold a dot or a backquote."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return F.col(f"{alias}.{quoted}" if alias else quoted)
 
 
 def _is_local_path(path: str) -> bool:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import contextlib
 import sys
+import types
 import uuid
 from pathlib import Path
 
@@ -52,3 +53,22 @@ def jobs_started(spark):
             jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
     return started
+
+
+@_pytest.fixture
+def classes_compiled(spark):
+    """A context manager that counts the classes Spark's code generator
+    compiles inside its block (JVM-wide, from Spark's ``CodegenMetrics``):
+    ``with classes_compiled() as compiled: ...``, then ``compiled.n``."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    @contextlib.contextmanager
+    def counted():
+        compiled = types.SimpleNamespace(n=0)
+        before = metric.getCount()
+        try:
+            yield compiled
+        finally:
+            compiled.n = metric.getCount() - before
+
+    return counted

@@ -66,6 +66,26 @@ def test_sql_add_column_with_bad_type_commits_nothing(spark, tmp_path):
     assert lh.sql("select count(*) from t").collect()[0][0] == 3
 
 
+@pytest.mark.parametrize(
+    "clause,dtype",
+    [
+        ("ADD COLUMN z struct<a:int>", "struct<a:int>"),
+        ("ADD COLUMN z decimal(10,2)", "decimal(10,2)"),
+        ("ADD COLUMNS (z struct<a:int, b:decimal(10,2)>)", "struct<a:int, b:decimal(10,2)>"),
+    ],
+)
+def test_sql_add_column_takes_the_types_the_api_takes(spark, tmp_path, clause, dtype):
+    from dataengineeringworkshop_spark.engine import Lakehouse
+
+    lh = Lakehouse(str(tmp_path / "lake"), spark=spark)
+    lh.create_table("t", spark.range(3))
+    lh.create_table("api", spark.range(3))
+    lh.sql(f"ALTER TABLE t {clause}")
+    lh.table("api").add_column("z", dtype)
+    assert lh.table("t").read().schema == lh.table("api").read().schema
+    assert lh.sql("SELECT count(*) AS n FROM t WHERE z IS NULL").first().n == 3
+
+
 def test_add_column_existing_name_in_other_case_raises(spark, tmp_path):
     t = _vt(spark, tmp_path / "t")
     t.write(spark.range(3))
@@ -95,6 +115,35 @@ def test_merge_evolution_matches_names_case_insensitively(spark, tmp_path):
     out = t.read()
     assert out.columns == ["id", "v", "w"]
     assert _rows(out) == [(1, "a", None), (2, "B", 9), (3, "c", 8)]
+
+
+def _dotted(spark, path):
+    t = _vt(spark, path)
+    t.write(spark.createDataFrame([(1, 10, 100), (2, 20, 200)], "k long, `d.e` long, v long"))
+    return t
+
+
+def test_update_of_a_dotted_column_name(spark, tmp_path):
+    t = _dotted(spark, tmp_path / "t")
+    t.update({"v": "v + 1", "d.e": "`d.e` * 2"}, condition="k = 2")
+    assert t.read().columns == ["k", "d.e", "v"]
+    assert _rows(t.read()) == [(1, 10, 100), (2, 40, 201)]
+
+
+def test_merge_of_a_dotted_column_name(spark, tmp_path):
+    t = _dotted(spark, tmp_path / "t")
+    src = spark.createDataFrame([(2, 21, 201), (3, 30, 300)], "k long, `d.e` long, v long")
+    t.merge(src, on="t.k = s.k")
+    assert t.read().columns == ["k", "d.e", "v"]
+    assert _rows(t.read()) == [(1, 10, 100), (2, 21, 201), (3, 30, 300)]
+
+
+def test_change_feed_of_a_dotted_column_name(spark, tmp_path):
+    t = _dotted(spark, tmp_path / "t")
+    t.update({"d.e": "`d.e` + 1"}, condition="k = 2")
+    ch = t.changes("d.e", 0, 1)
+    assert ch.columns == ["k", "d.e", "v", "_change_type"]
+    assert _rows(ch) == [(2, 20, 200, "delete"), (2, 21, 200, "insert")]
 
 
 def test_widen_conflict_raises_before_the_data_write(spark, tmp_path):
